@@ -42,10 +42,15 @@ object CdcStream {
     *                           (raw append as spanning L0 files — no bucket
     *                           shuffle at all, bucket placement deferred to
     *                           compaction; the write-optimized headline path)
-    * @param autoCompactFilesPerBucket when > 0, after a batch commit any
-    *        bucket holding more than this many delta files triggers a partial
-    *        compaction (bounded read amplification for long MOR streams;
-    *        reference analogue: auto-rebuild interval, `defaults.hpp:227`)
+    * @param autoCompactFilesPerBucket when k > 0, after a batch commit any
+    *        bucket holding more than k files triggers a partial compaction
+    *        (bounded read amplification for long MOR streams; reference
+    *        analogue: auto-rebuild interval, `defaults.hpp:227`). It folds
+    *        only each such bucket's smallest files, back down to k, so the
+    *        write volume follows the deltas, not the compacted base; the
+    *        L0 group is flushed whole. The read-side trade: between full
+    *        compactions a bucket holds k files and the base keeps its DV
+    *        entries (see [[LakeTable.compact]])
     * @param expireKeepLast     when > 0, retain only this many snapshots after
     *        each compaction, deleting expired manifests and any data file no
     *        retained snapshot references (incl. crash orphans)
@@ -260,8 +265,10 @@ object CdcStream {
     * minted on first start, re-read on resume. Lives and dies with the
     * checkpoint — wiping the directory (fresh batch numbering) mints a new
     * identity, so a wiped run's abandoned stages can never alias the new
-    * run's batches. Concurrent first-starts race on `create(overwrite =
-    * false)`; the loser re-reads the winner's id.
+    * run's batches. Concurrent first-starts race on the rename; the loser
+    * re-reads the winner's id. A blank marker (what an older
+    * create-then-write claim left after a crash) is replaced by a fresh
+    * claim.
     */
   private def runIdentity(spark: SparkSession, checkpointDir: String): String = {
     val dir = new org.apache.hadoop.fs.Path(checkpointDir)
@@ -269,7 +276,8 @@ object CdcStream {
     val p = new org.apache.hadoop.fs.Path(dir, "graft-run-id")
     // a blank marker is ABSENT, not an identity: adopting "" permanently
     // would collapse every later resume onto one tag and defeat the
-    // stale-stage aliasing defense the marker exists for
+    // stale-stage aliasing defense the marker exists for — it is deleted
+    // and claimed afresh below
     def read(): Option[String] = {
       val in = fs.open(p)
       val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
@@ -282,6 +290,7 @@ object CdcStream {
       // (or nothing) — never a created-but-empty marker that every later
       // resume would adopt as runTag ""
       fs.mkdirs(dir)
+      if (fs.exists(p) && read().isEmpty) fs.delete(p, false)
       val id = java.util.UUID.randomUUID().toString.take(8)
       val tmp = new org.apache.hadoop.fs.Path(dir, s"graft-run-id.tmp-$id")
       val out = fs.create(tmp, true)

@@ -1004,17 +1004,27 @@ class LakeTable(val spark: SparkSession, val root: String,
 
   // --------------------------------------------------------------- compaction
 
-  /** Rewrite any bucket holding more than `maxFilesPerBucket` files into a
-    * single file (bin-packing compaction; reference analogue `rebuild.cpp`).
-    * If `gcTombstonesBelowLsn` is set, tombstones with `_lsn` below it are
-    * dropped — safe once the source's out-of-orderness bound guarantees no
-    * older update can still arrive.
+  /** Bring every bucket back to at most `maxFilesPerBucket` files
+    * (reference analogue `rebuild.cpp`). If `gcTombstonesBelowLsn` is set,
+    * tombstones with `_lsn` below it are dropped — safe once the source's
+    * out-of-orderness bound guarantees no older update can still arrive.
     *
-    * With `maxFilesPerBucket = 1` this is a FULL compaction: every bucket is
-    * folded through [[resolve]] down to one version per url, so the
-    * `needs_resolve` flag is cleared and subsequent reads are pure scans.
-    * Partial compaction (`maxFilesPerBucket > 1`) only bin-packs the worst
-    * buckets and keeps the flag.
+    * With `maxFilesPerBucket = 1` this is a FULL compaction (the OPTIMIZE
+    * analogue): every bucket is folded through [[resolve]] down to one
+    * version per url, the `needs_resolve` flag is cleared, deletion vectors
+    * are applied physically, and subsequent reads are pure scans.
+    *
+    * Partial compaction (`maxFilesPerBucket = k > 1`) rewrites, in each
+    * bucket holding n > k files, only its n−k+1 smallest files (by bytes,
+    * ties by path) into one file — the least rewrite that brings the bucket
+    * back to k files, so a small delta never drags the compacted base into
+    * the rewrite; repeated runs behave like a size-tiered LSM. The L0
+    * spanning group (bucket −1) is always flushed whole, and with tombstone
+    * GC requested victim buckets are taken whole (a tombstone may kill a
+    * version in a file outside a subset). The read-side trade: until the
+    * next full compaction a bucket keeps k files, the files left in place
+    * keep their DV entries, and `needs_resolve` stays set unless every file
+    * was rewritten.
     */
   def compact(maxFilesPerBucket: Int = 1, gcTombstonesBelowLsn: Option[Long] = None,
       maxRecordsPerFile: Long = 4L * 1024 * 1024, rebucket: Option[Int] = None): Snapshot = {
@@ -1028,27 +1038,10 @@ class LakeTable(val spark: SparkSession, val root: String,
       // publish a snapshot whose readers/pruners use the new count. Old
       // snapshots keep their own bucket count — time travel stays correct.
       require(nb > 0, "bucket count must be positive")
-      val schema = currentFileSchema(snap)
-      // resolve only when multi-version rows can exist — a COW/compacted
-      // table pays no no-op groupBy(url) shuffle of the full wide rows
-      val raw0 = readFiles(snap, snap.files, schema)
+      val raw0 = readFiles(snap, snap.files, currentFileSchema(snap))
       val nTasks = math.max(1, math.min(nb, spark.sparkContext.defaultParallelism * 2))
-      val newFiles =
-        if (needsResolve(snap) && LakeTable.sortedFold)
-          // fused fold: winner selection AND the gc filter live inside
-          // writeDataFilesSortedFold (gc applies to winners only)
-          writeDataFilesSortedFold(raw0, snap.currentSchemaId, nb, nTasks = nTasks,
-            gcTombstonesBelowLsn = gcTombstonesBelowLsn,
-            maxRecordsPerFile = maxRecordsPerFile, bloomUrl = true)
-        else {
-          val in = resolveIfNeeded(snap, raw0)
-          val kept = gcTombstonesBelowLsn match {
-            case Some(w) => in.filter(!col("_deleted") || col("_lsn") >= lit(w))
-            case None => in
-          }
-          writeDataFiles(kept, snap.currentSchemaId, nb,
-            nTasks = nTasks, maxRecordsPerFile = maxRecordsPerFile, bloomUrl = true)
-        }
+      val newFiles = foldAndWrite(snap, raw0, nb, nTasks, gcTombstonesBelowLsn,
+        maxRecordsPerFile)
       val rbProps = gcTombstonesBelowLsn.fold(
         snap.props - LakeTable.NeedsResolveProp)(w =>
         (snap.props - LakeTable.NeedsResolveProp) +
@@ -1066,48 +1059,36 @@ class LakeTable(val spark: SparkSession, val root: String,
     val victims = byBucket.filter(_._2.size > maxFilesPerBucket)
     if (victims.isEmpty && gcTombstonesBelowLsn.isEmpty && !full) return snap
     val target = if (victims.nonEmpty && !full) victims else byBucket
-    val schema = currentFileSchema(snap)
+    // a partial run without GC folds each victim bucket's n−k+1 smallest
+    // files; everything else (full, GC'd, the L0 group) takes whole groups
+    val subset = maxFilesPerBucket > 1 && gcTombstonesBelowLsn.isEmpty
+    val input = target.toSeq.flatMap { case (bucket, files) =>
+      if (!subset || bucket < 0) files
+      else files.sortBy(f => (f.bytes, f.path)).take(files.size - maxFilesPerBucket + 1)
+    }
+    val inputPaths = input.map(_.path).toSet
+    val untouched = snap.files.filterNot(f => inputPaths.contains(f.path))
     // resolve folds merge-on-read deltas down to one version per url.
     // Folding a file SUBSET is always safe (max_by is associative: the global
     // read-side resolve still picks the true winner across subsets) — but
     // DROPPING rows is not: a tombstone may kill a version living in a file
     // outside the subset. With L0 spanning files a url's versions can straddle
     // the -1 group and its bucket, so tombstone GC only runs when the input
-    // covers every group (full compaction) or no L0 files exist (then a
+    // covers every file (full compaction) or no L0 files exist (then a
     // bucket's files hold ALL versions of its urls, the pre-L0 invariant).
     val gcSafe = gcTombstonesBelowLsn.filter(_ =>
-      !byBucket.contains(-1) || target.size == byBucket.size)
-    val raw0 = readFiles(snap, target.values.flatten.toSeq, schema)
-    // default row target = the reference's own partition cap
-    // (defaults.hpp:220, 4 Mi events) — "one file per bucket" must not become
-    // a TB-scale file on a 10^10-event table.
+      !byBucket.contains(-1) || untouched.isEmpty)
+    val raw0 = readFiles(snap, input, currentFileSchema(snap))
     // An L0 flush (-1 in the target) spans all buckets → slot-scaled writers;
-    // plain bucket bin-packing keeps one task per victim bucket.
+    // plain bucket compaction keeps one task per victim bucket.
     val nTasks =
       if (target.contains(-1)) math.min(snap.buckets, spark.sparkContext.defaultParallelism * 2)
       else target.size
-    val newFiles =
-      if (needsResolve(snap) && LakeTable.sortedFold)
-        // fused fold: winner selection AND the gc filter live inside
-        // writeDataFilesSortedFold (gc applies to winners only)
-        writeDataFilesSortedFold(raw0, snap.currentSchemaId, snap.buckets,
-          nTasks = math.max(1, nTasks), gcTombstonesBelowLsn = gcSafe,
-          maxRecordsPerFile = maxRecordsPerFile, bloomUrl = true)
-      else {
-        // conditional resolve: single-version tables (COW mode under
-        // auto-compaction) skip the semantically-no-op LWW fold
-        val in = resolveIfNeeded(snap, raw0)
-        val kept = gcSafe match {
-          case Some(w) => in.filter(!col("_deleted") || col("_lsn") >= lit(w))
-          case None => in
-        }
-        writeDataFiles(kept, snap.currentSchemaId, snap.buckets,
-          nTasks = math.max(1, nTasks), maxRecordsPerFile = maxRecordsPerFile,
-          bloomUrl = true)
-      }
-    val untouched = snap.files.filterNot(f => target.contains(f.bucket))
+    val newFiles = foldAndWrite(snap, raw0, snap.buckets, nTasks, gcSafe, maxRecordsPerFile)
+    // only a rewrite of EVERY file leaves one version per url; after a
+    // subset rewrite the files left in place may still hold older versions
     val props0 =
-      if (target.size == byBucket.size) snap.props - LakeTable.NeedsResolveProp
+      if (untouched.isEmpty) snap.props - LakeTable.NeedsResolveProp
       else snap.props
     // record the tombstone-GC watermark: a staged (WAP) batch with updates
     // below it could resurrect GC'd deletes — publishStaged refuses those
@@ -1115,15 +1096,38 @@ class LakeTable(val spark: SparkSession, val root: String,
       (LakeTable.TombstoneGcLsnProp -> math.max(w,
         props0.get(LakeTable.TombstoneGcLsnProp).map(_.toLong).getOrElse(Long.MinValue)).toString))
     // the rewrite read masks, so rewritten rows have their deletes applied
-    // physically: full pass → no DV survives; partial → keep only entries
-    // pointing at files that still exist, rewritten as one fresh sidecar
+    // physically: every file rewritten → no DV survives; otherwise keep only
+    // entries pointing at files left in place (a base file outside the
+    // subset keeps its masked rows masked), rewritten as one fresh sidecar
     val dvLeft =
-      if (snap.dvFiles.isEmpty) Nil
-      else if (target.size == byBucket.size) Nil
+      if (snap.dvFiles.isEmpty || untouched.isEmpty) Nil
       else consolidateDvs(snap, untouched)
     commit(snap.copy(files = untouched ++ newFiles, lineage = snap.lineage,
       props = props, dvFiles = dvLeft))
   }
+
+  /** The compaction write: multi-version tables go through the fused
+    * sort-based fold ([[writeDataFilesSortedFold]]: winner selection AND the
+    * GC filter, applied to winners only); single-version tables (dv, or
+    * compacted) skip the semantically no-op LWW fold. Default row target =
+    * the reference's own partition cap (defaults.hpp:220, 4 Mi events) —
+    * "one file per bucket" must not become a TB-scale file on a
+    * 10^10-event table.
+    */
+  private def foldAndWrite(snap: Snapshot, raw: DataFrame, buckets: Int, nTasks: Int,
+      gcTombstonesBelowLsn: Option[Long], maxRecordsPerFile: Long): Seq[DataFile] =
+    if (needsResolve(snap))
+      writeDataFilesSortedFold(raw, snap.currentSchemaId, buckets, nTasks = nTasks,
+        gcTombstonesBelowLsn = gcTombstonesBelowLsn,
+        maxRecordsPerFile = maxRecordsPerFile, bloomUrl = true)
+    else {
+      val kept = gcTombstonesBelowLsn match {
+        case Some(w) => raw.filter(!col("_deleted") || col("_lsn") >= lit(w))
+        case None => raw
+      }
+      writeDataFiles(kept, snap.currentSchemaId, buckets, nTasks = nTasks,
+        maxRecordsPerFile = maxRecordsPerFile, bloomUrl = true)
+    }
 
   // ------------------------------------------- WAP: staged commits (audit)
 
@@ -1339,59 +1343,65 @@ class LakeTable(val spark: SparkSession, val root: String,
     */
   def expireSnapshots(keepLast: Int = 2): (Int, Int) = {
     require(keepLast >= 1, "must keep at least the current snapshot")
-    val versions =
-      if (!fs.exists(manifestDir)) Seq.empty[Long]
-      else fs.listStatus(manifestDir).map(_.getPath.getName)
-        .filter(n => n.startsWith("v") && n.endsWith(".json"))
-        .map(_.stripPrefix("v").stripSuffix(".json").toLong).toSeq.sorted
-    if (versions.isEmpty) return (0, 0)
-    // tagged versions are retention-exempt: keep the trailing `keepLast`
-    // plus anything a tag pins (Iceberg ref-retention semantics) plus the
-    // BASE of every staged WAP commit (publishStaged rebases against it)
-    val stagedSnaps = stagedIds.map(stagedSnapshot)
-    val pinnedVs = tags.values.toSet ++
-      stagedSnaps.map(_.version).filter(_ >= 0)
-    val (expired0, kept0) = versions.splitAt(math.max(0, versions.size - keepLast))
-    val expired = expired0.filterNot(pinnedVs.contains)
-    val kept = versions.filter(v => kept0.contains(v) || pinnedVs.contains(v))
-    val keptSnaps = kept.map(snapshotAt)
-    // staged (not yet committed) data files are live too — the sweep must
-    // not collect a batch that is pending audit
-    val referenced: Set[String] = (keptSnaps ++ stagedSnaps).flatMap(s =>
-      (s.files.map(_.path) ++ s.dvFiles.map(_.path))
-        .map(p => new Path(p).toUri.getPath)).toSet
-    // GC manifest delta/chunk files referenced by no retained snapshot
-    // (incl. files orphaned by a crash between write and version claim, and
-    // chains superseded by consolidation). Under the commit mutex: a
-    // consolidating commit may REUSE an on-disk chunk by content-addressed
-    // name before its version file exists — sweeping that name between the
-    // reuse decision and the claim would brick the new snapshot. The mutex
-    // serializes in-process maintenance against commits; cross-process
-    // maintenance stays excluded by the single-writer contract above. Only
-    // completed `.json` names are swept here — `.json.tmp-*` in-flight
-    // writes belong to the age-graced sweep below, not this one.
-    val keptManifests = keptSnaps.flatMap(_.manifests).toSet
-    LakeTable.commitMutex(root).synchronized {
+    // Kept set, version deletion and manifest sweep form ONE commit-mutex
+    // block: a commit that lands between computing the kept set and the
+    // sweep would otherwise lose its new delta/chunk manifest to the sweep
+    // (bricking the head it just claimed), and a consolidating commit may
+    // REUSE an on-disk chunk by content-addressed name before its version
+    // file exists. The mutex serializes in-process maintenance against
+    // commits; cross-process maintenance stays excluded by the single-writer
+    // contract above.
+    val (expired, referenced) = LakeTable.commitMutex(root).synchronized {
+      val versions =
+        if (!fs.exists(manifestDir)) Seq.empty[Long]
+        else fs.listStatus(manifestDir).map(_.getPath.getName)
+          .filter(n => n.startsWith("v") && n.endsWith(".json"))
+          .map(_.stripPrefix("v").stripSuffix(".json").toLong).toSeq.sorted
+      if (versions.isEmpty) return (0, 0)
+      // tagged versions are retention-exempt: keep the trailing `keepLast`
+      // plus anything a tag pins (Iceberg ref-retention semantics) plus the
+      // BASE of every staged WAP commit (publishStaged rebases against it)
+      val stagedSnaps = stagedIds.map(stagedSnapshot)
+      val pinnedVs = tags.values.toSet ++
+        stagedSnaps.map(_.version).filter(_ >= 0)
+      val (expired0, kept0) = versions.splitAt(math.max(0, versions.size - keepLast))
+      val expired = expired0.filterNot(pinnedVs.contains)
+      val kept = versions.filter(v => kept0.contains(v) || pinnedVs.contains(v))
+      val keptSnaps = kept.map(snapshotAt)
+      // staged (not yet committed) data files are live too — the sweep must
+      // not collect a batch that is pending audit
+      val referenced: Set[String] = (keptSnaps ++ stagedSnaps).flatMap(s =>
+        (s.files.map(_.path) ++ s.dvFiles.map(_.path))
+          .map(p => new Path(p).toUri.getPath)).toSet
+      val keptManifests = keptSnaps.flatMap(_.manifests).toSet
+      expireHook("kept")
+      // version files go FIRST: readers probe the version file before its
+      // manifests and data, so a follower that hits a swept file re-probes,
+      // finds its version gone and re-bootstraps instead of failing
+      expired.foreach(v => fs.delete(versionPath(v), false))
+      // GC manifest delta/chunk files referenced by no retained snapshot
+      // (incl. files orphaned by a crash between write and version claim, and
+      // chains superseded by consolidation). Only completed `.json` names —
+      // `.json.tmp-*` in-flight writes belong to the age-graced sweep below.
       fs.listStatus(manifestDir).map(_.getPath)
         .filter(p => p.getName.startsWith("m-") && p.getName.endsWith(".json"))
         .filterNot(p => keptManifests.contains(p.getName))
         .foreach(p => fs.delete(p, false))
-    }
-    // sweep tmps left by commits/stages that crashed mid-serialization
-    // (inert but accumulating) — under the commit mutex, so the sweep can
-    // never delete the tmp of an IN-FLIGHT in-process commit between its
-    // write and its rename (which would fail that commit with a spurious
-    // lost-race error). The mutex is JVM-local, so CROSS-process writers are
-    // only protected by the age grace: a live writer's write→rename window
-    // is milliseconds, so sweeping only tmps minutes old still collects
-    // crash debris without ever racing another process's in-flight commit.
-    LakeTable.commitMutex(root).synchronized {
+      // sweep tmps left by commits/stages that crashed mid-serialization
+      // (inert but accumulating) — under the commit mutex, so the sweep can
+      // never delete the tmp of an IN-FLIGHT in-process commit between its
+      // write and its rename (which would fail that commit with a spurious
+      // lost-race error). The mutex is JVM-local, so CROSS-process writers are
+      // only protected by the age grace: a live writer's write→rename window
+      // is milliseconds, so sweeping only tmps minutes old still collects
+      // crash debris without ever racing another process's in-flight commit.
       val cutoff = System.currentTimeMillis() - LakeTable.TmpSweepGraceMs
       (fs.listStatus(manifestDir) ++
         (if (fs.exists(stagedDir)) fs.listStatus(stagedDir) else Array.empty))
         .filter(st => st.getPath.getName.contains(".json.tmp-") &&
           st.getModificationTime < cutoff)
         .foreach(st => fs.delete(st.getPath, false))
+      (expired, referenced)
     }
     var deletedFiles = 0
     if (fs.exists(dataDir)) {
@@ -1433,9 +1443,15 @@ class LakeTable(val spark: SparkSession, val root: String,
         }
       }
     }
-    expired.foreach(v => fs.delete(versionPath(v), false))
+    expireHook("swept")
     (expired.size, deletedFiles)
   }
+
+  /** Test seam: called inside [[expireSnapshots]] with `"kept"` once the
+    * kept set is computed (before any deletion) and `"swept"` after the
+    * data sweep, so a spec can inject a commit or a follower poll at exactly
+    * those points instead of racing threads on timing. */
+  @volatile private[graft] var expireHook: String => Unit = _ => ()
 }
 
 object LakeTable {
@@ -1483,13 +1499,19 @@ object LakeTable {
 
   /** Content address of a chunk's (path-sorted) entries: MD5 over every
     * field of every entry — any add, remove, or stat change reroutes the
-    * chunk to a new name. One digest pass, no JSON serialization.
+    * chunk to a new name. One digest pass, no JSON serialization. Each path
+    * is length-prefixed: without it a path's bytes could absorb a
+    * neighbour's stat bytes, and two different entry lists would share a
+    * name (and a reused chunk would serve the wrong entries).
     */
-  private[lake] def chunkHash(files: Seq[DataFile]): String = {
+  private[graft] def chunkHash(files: Seq[DataFile]): String = {
     val d = java.security.MessageDigest.getInstance("MD5")
     val buf = java.nio.ByteBuffer.allocate(8 * 8)
     files.foreach { f =>
-      d.update(f.path.getBytes("UTF-8"))
+      val path = f.path.getBytes("UTF-8")
+      buf.clear()
+      d.update(buf.putInt(path.length).array(), 0, 4)
+      d.update(path)
       buf.clear()
       buf.putLong(f.bucket.toLong).putLong(f.schemaId.toLong).putLong(f.rows)
         .putLong(f.bytes).putLong(f.minLsn).putLong(f.maxLsn)
@@ -1515,15 +1537,6 @@ object LakeTable {
     * pending bytes differ from the stamp still publishes as a new batch. */
   val PublishedPropPrefix = "wap_published/"
   def publishedProp(wapId: String): String = PublishedPropPrefix + wapId
-
-  /** Compaction fold strategy: the sort-based single-exchange fold
-    * ([[LakeTable.writeDataFilesSortedFold]], default) vs the wide `max_by`
-    * hash aggregate + repartition (`-Dgraft.foldMode=maxby`) — kept
-    * switchable for A/B measurement (BenchProbe `SPARK_GRAFT_COMPACT`).
-    */
-  private[lake] def sortedFold: Boolean =
-    !sys.props.get("graft.foldMode")
-      .orElse(sys.env.get("SPARK_GRAFT_FOLD")).contains("maxby")
 
   /** Minimum age before [[LakeTable.expireSnapshots]] sweeps a crash-debris
     * `.json.tmp-*` file: the JVM commit mutex cannot see other processes, so

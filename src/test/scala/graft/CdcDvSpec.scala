@@ -29,6 +29,18 @@ class CdcDvSpec extends SparkSpec {
   private def segGroups(events: Seq[GenEvent], segsPerBatch: Int): Seq[Seq[GenEvent]] =
     events.groupBy(_.seg / segsPerBatch).toSeq.sortBy(_._1).map(_._2)
 
+  /** Every DV entry of `snap` as (scheme-less data-file path, row ordinal). */
+  private def dvEntries(snap: graft.lake.Snapshot): Set[(String, Long)] =
+    if (snap.dvFiles.isEmpty) Set.empty
+    else spark.read.schema(LakeTable.dvSchema).parquet(snap.dvFiles.map(_.path): _*)
+      .as[(String, Long)].collect()
+      .map { case (p, pos) => (p.replaceFirst("^[a-z][a-zA-Z0-9+.-]*:/+", "/"), pos) }.toSet
+
+  /** urls holding more than one unmasked row — the single-live-version
+    * invariant that lets dv reads skip the resolve. */
+  private def liveDupes(table: LakeTable, snap: graft.lake.Snapshot): Long =
+    table.scanRaw(snap).groupBy(col("url")).count().filter(col("count") > 1).count()
+
   test("dv replay converges to the independent final state; reads need no resolve") {
     val table = new LakeTable(spark, tmpDir())
     replayDv(table, segGroups(allEvents, 8), "q")
@@ -38,8 +50,7 @@ class CdcDvSpec extends SparkSpec {
     assert(pagesMap(table.pages(snap)) == golden)
     // the invariant that makes the no-resolve read correct: at most one
     // UNMASKED row per url across the whole table
-    val dupes = table.scanRaw(snap).groupBy(col("url"))
-      .count().filter(col("count") > 1).count()
+    val dupes = liveDupes(table, snap)
     assert(dupes == 0, s"$dupes urls hold more than one unmasked version")
   }
 
@@ -52,9 +63,7 @@ class CdcDvSpec extends SparkSpec {
     replayDv(table, groups, "q")
     val snap = table.currentSnapshot.get
     assert(pagesMap(table.pages(snap)) == golden)
-    val dupes = table.scanRaw(snap).groupBy(col("url"))
-      .count().filter(col("count") > 1).count()
-    assert(dupes == 0)
+    assert(liveDupes(table, snap) == 0)
   }
 
   test("stale update after a delete stays dead; equal-lsn redelivery keeps the committed row") {
@@ -107,21 +116,43 @@ class CdcDvSpec extends SparkSpec {
     assert(before.dvFiles.nonEmpty)
     val snap = table.compact(maxFilesPerBucket = 2)
     assert(pagesMap(table.pages(snap)) == golden)
-    if (snap.dvFiles.nonEmpty) {
-      // every surviving entry must point at a file that still exists
-      val live = snap.files.map(f => LakeTable.normalizePath(f.path)).toSet
-      val entries = spark.read.schema(LakeTable.dvSchema)
-        .parquet(snap.dvFiles.map(_.path): _*)
-        .select(col(LakeTable.DvPathCol)).distinct().as[String].collect()
-      entries.foreach { p =>
-        val norm = p.replaceFirst("^[a-z][a-zA-Z0-9+.-]*:/+", "/")
-        assert(live.contains(norm), s"dangling DV entry for $p")
-      }
-      // consolidated masks must still hide exactly the superseded rows
-      val dupes = table.scanRaw(snap).groupBy(col("url"))
-        .count().filter(col("count") > 1).count()
-      assert(dupes == 0)
+    // every surviving entry must point at a file that still exists
+    val live = snap.files.map(f => LakeTable.normalizePath(f.path)).toSet
+    dvEntries(snap).foreach { case (p, _) =>
+      assert(live.contains(p), s"dangling DV entry for $p")
     }
+    // consolidated masks must still hide exactly the superseded rows
+    assert(liveDupes(table, snap) == 0)
+  }
+
+  test("partial compaction folds only the small deltas; the base file and its DV entries stay") {
+    val table = new LakeTable(spark, tmpDir())
+    // three quarters of the stream build the base, two small batches follow
+    val ordered = allEvents.sortBy(e => (e.seg, e.lsn))
+    val (baseEvents, rest) = ordered.splitAt(ordered.size * 3 / 4)
+    val (delta1, delta2) = rest.splitAt(rest.size / 2)
+    replayDv(table, Seq(baseEvents), "q")
+    table.compact(maxFilesPerBucket = 1) // the compacted base: one file per bucket
+    Seq(delta1, delta2).zipWithIndex.foreach { case (d, i) =>
+      CdcApply.applyBatchDv(table, spark.createDataset(d).toDF(), "q", i + 1L,
+        createBuckets = 16)
+    }
+    val before = table.currentSnapshot.get
+    val byBucket = before.files.groupBy(_.bucket)
+    assert(byBucket.values.forall(_.size == 3), "want base + two deltas in every bucket")
+    val bases = byBucket.values.map(_.maxBy(_.bytes)).toSeq
+    assert(byBucket.values.forall(fs => fs.count(_.bytes == fs.map(_.bytes).max) == 1))
+    val basePaths = bases.map(f => LakeTable.normalizePath(f.path)).toSet
+    val baseEntries = dvEntries(before).filter(e => basePaths.contains(e._1))
+    assert(baseEntries.nonEmpty, "the deltas must mask rows of the base")
+    val snap = table.compact(maxFilesPerBucket = 2)
+    // only the two deltas were rewritten: every base file is still live
+    assert(bases.map(_.path).toSet.subsetOf(snap.files.map(_.path).toSet))
+    assert(snap.files.groupBy(_.bucket).values.forall(_.size == 2))
+    // the base's masks survive consolidation exactly; the deltas' are gone
+    assert(dvEntries(snap) == baseEntries)
+    assert(liveDupes(table, snap) == 0)
+    assert(pagesMap(table.pages(snap)) == golden)
   }
 
   test("changes() over dv versions classifies inserts/updates/deletes") {
@@ -226,9 +257,7 @@ class CdcDvSpec extends SparkSpec {
       val snap = table.currentSnapshot.get
       assert(snap.dvFiles.nonEmpty)
       assert(pagesMap(table.pages(snap)) == golden)
-      val dupes = table.scanRaw(snap).groupBy(col("url"))
-        .count().filter(col("count") > 1).count()
-      assert(dupes == 0)
+      assert(liveDupes(table, snap) == 0)
     } finally { sys.props.remove("graft.dvBroadcastLimit"); () }
   }
 
@@ -239,16 +268,27 @@ class CdcDvSpec extends SparkSpec {
       graft.gen.GenConfig(events = 8000, segmentSize = 512), wal)
     val table = new LakeTable(spark, s"$work/lake")
     var applied = 0
+    var firstFiles = Set.empty[String]
+    // k = 2: the merged delta soon outgrows the first batch's files,
+    // which then rank among the smallest and get folded too
     graft.cdc.CdcStream.start(spark, wal, table, s"$work/ckpt",
       maxFilesPerTrigger = 4, createBuckets = 16, mode = "dv",
-      autoCompactFilesPerBucket = 3,
-      onBatch = st => if (!st.skipped) applied += 1).awaitTermination()
-    assert(applied > 1)
+      autoCompactFilesPerBucket = 2,
+      onBatch = st => if (!st.skipped) {
+        if (applied == 0) firstFiles = table.lastKnownSnapshot.get.files.map(_.path).toSet
+        applied += 1
+      }).awaitTermination()
+    assert(applied > 3)
     val snap = table.currentSnapshot.get
     assert(pagesMap(table.pages(snap)) == golden)
-    // auto-compaction ran mid-stream: per-bucket file counts are bounded and
-    // the consolidated DV list reflects only still-live files
-    assert(snap.files.groupBy(_.bucket).values.forall(_.size <= 3 + 1))
+    assert(liveDupes(table, snap) == 0)
+    // auto-compaction ran mid-stream: per-bucket file counts are bounded,
+    // the first batch's files were folded, and the consolidated DV list
+    // reflects only still-live files
+    assert(snap.files.groupBy(_.bucket).values.forall(_.size <= 2))
+    assert(firstFiles.nonEmpty && firstFiles.intersect(snap.files.map(_.path).toSet).isEmpty)
+    val live = snap.files.map(f => LakeTable.normalizePath(f.path)).toSet
+    assert(dvEntries(snap).forall(e => live.contains(e._1)))
     // checkpoint resume: nothing new to apply, state unchanged
     var applied2 = 0
     graft.cdc.CdcStream.start(spark, wal, table, s"$work/ckpt",

@@ -731,6 +731,68 @@ class CdcMaintenanceSpec extends SparkSpec {
     assert(pagesMap(table.pages()) == expectedPages)
   }
 
+  test("expireSnapshots: a commit landing after the kept set is computed keeps its manifest") {
+    val table = new LakeTable(spark, tmpDir())
+    segGroups(allEvents, 8).take(3).zipWithIndex.foreach { case (g, i) =>
+      CdcApply.applyBatchAppendRaw(table, spark.createDataset(g).toDF(), "k", i.toLong,
+        createBuckets = 4)
+    }
+    // a second writer in this process commits (dropping one file: a
+    // manifest delta) between expiry's kept-set computation and its sweep.
+    // It either lands there or parks on the commit mutex — no timing.
+    val writer = new LakeTable(spark, table.root)
+    val base = writer.currentSnapshot.get
+    var racer: Thread = null
+    @volatile var racerError: Throwable = null
+    table.expireHook = {
+      case "kept" =>
+        racer = new Thread(() => {
+          try { writer.commit(base.copy(files = base.files.tail)); () }
+          catch { case e: Throwable => racerError = e }
+        })
+        racer.start()
+        while (racer.getState != Thread.State.TERMINATED &&
+            racer.getState != Thread.State.BLOCKED) Thread.onSpinWait()
+      case _ => ()
+    }
+    try table.expireSnapshots(keepLast = 1) finally table.expireHook = _ => ()
+    racer.join()
+    assert(racerError == null, s"racing commit failed: $racerError")
+    // a fresh handle (no cached snapshot) must load the racer's head
+    val head = new LakeTable(spark, table.root).currentSnapshot.get
+    assert(head.version == base.version + 1)
+    assert(head.files.map(_.path).toSet == base.files.tail.map(_.path).toSet)
+    assert(table.pages(head).count() > 0)
+  }
+
+  test("expireSnapshots deletes expired versions first: a follower polling mid-sweep re-bootstraps") {
+    val table = new LakeTable(spark, tmpDir())
+    val groups = segGroups(allEvents, 8).take(3)
+    groups.zipWithIndex.foreach { case (g, i) =>
+      CdcApply.applyBatchAppendRaw(table, spark.createDataset(g).toDF(), "f", i.toLong,
+        createBuckets = 4)
+    }
+    val cursor = table.currentSnapshot.get.version - 1
+    table.compact(maxFilesPerBucket = 1) // the cursor's data files become unreferenced
+    // an unpinned follower polls after the sweep removed the cursor's data
+    // files: it must find the cursor's version gone and re-bootstrap
+    var from = Long.MaxValue
+    var delivered = Map.empty[String, String]
+    table.expireHook = {
+      case "swept" =>
+        CdcStream.followChanges(table, cursor) { (df, f, _) =>
+          from = f
+          delivered = df.collect().map(r =>
+            r.getAs[String]("url") -> r.getAs[String]("text")).toMap
+        }
+        ()
+      case _ => ()
+    }
+    try table.expireSnapshots(keepLast = 1) finally table.expireHook = _ => ()
+    assert(from == -1L, "the follower must re-bootstrap")
+    assert(delivered == expectedMap(groups.flatten).map { case (u, (t, _, _, _)) => u -> t })
+  }
+
   test("optimistic concurrency: a stale-base commit is refused, a re-read retry lands") {
     val root = tmpDir()
     val a = new LakeTable(spark, root)

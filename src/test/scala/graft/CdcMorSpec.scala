@@ -97,6 +97,52 @@ class CdcMorSpec extends SparkSpec {
     assert(pagesMap(table.pages(table.snapshotAt(before.version))) == golden)
   }
 
+  test("partial compaction of raw deltas folds a subset per bucket and keeps needs_resolve") {
+    val table = new LakeTable(spark, tmpDir())
+    segGroups(allEvents, 8).zipWithIndex.foreach { case (g, i) =>
+      CdcApply.applyBatchAppendRaw(table, spark.createDataset(g).toDF(), "r", i.toLong,
+        createBuckets = 16)
+    }
+    val before = table.currentSnapshot.get
+    assert(before.files.groupBy(_.bucket).values.forall(_.size > 2), "every bucket over k")
+    val snap = table.compact(maxFilesPerBucket = 2)
+    assert(snap.files.groupBy(_.bucket).values.forall(_.size == 2))
+    // every bucket was compacted but not every file: the files left in place
+    // can still hold older versions of a url, so reads must keep resolving
+    assert(before.files.exists(f => snap.files.exists(_.path == f.path)))
+    assert(table.needsResolve(snap))
+    assert(pagesMap(table.pages(snap)) == golden)
+  }
+
+  test("tombstone GC takes the whole bucket: a victim in the largest file stays deleted") {
+    val table = new LakeTable(spark, tmpDir())
+    val ts = new Timestamp(1704067200000L)
+    def ev(op: String, lsn: Long, url: String, text: String): GenEvent =
+      GenEvent(op, lsn, 0, url, ts,
+        if (op == "D") null else text.getBytes("UTF-8"),
+        if (op == "D") null else text, if (op == "D") null else "en", 0L)
+    val filler = (1 to 50).map(i => ev("I", i + 1L, s"https://a/f$i", s"filler text $i"))
+    // one bucket: the victim x lives in the largest file, its tombstone and
+    // an unrelated update in two small ones
+    Seq(
+      ev("I", 1, "https://a/x", "v1") +: filler,
+      Seq(ev("D", 100, "https://a/x", null)),
+      Seq(ev("U", 101, "https://a/f1", "w2"))).zipWithIndex.foreach { case (b, i) =>
+      CdcApply.applyBatchAppendRaw(table, spark.createDataset(b).toDF(), "g", i.toLong,
+        createBuckets = 1)
+    }
+    val before = table.currentSnapshot.get
+    assert(before.files.size == 3)
+    assert(before.files.maxBy(_.bytes).rows == 51, "the victim's file must be the largest")
+    val snap = table.compact(maxFilesPerBucket = 2, gcTombstonesBelowLsn = Some(1000L))
+    assert(table.scanRaw(snap).filter(org.apache.spark.sql.functions.col("_deleted")).count() == 0,
+      "the tombstone was GC'd")
+    val rows = table.pages(snap).collect()
+      .map(r => r.getAs[String]("url") -> r.getAs[String]("text")).toMap
+    assert(!rows.contains("https://a/x"), "x must stay deleted")
+    assert(rows.size == 50 && rows("https://a/f1") == "w2")
+  }
+
   test("L0 spanning append converges, serves lookups pre-flush, and flushes to buckets") {
     val table = new LakeTable(spark, tmpDir())
     segGroups(allEvents, 8).zipWithIndex.foreach { case (g, i) =>

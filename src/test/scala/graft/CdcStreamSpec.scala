@@ -49,6 +49,35 @@ class CdcStreamSpec extends SparkSpec {
     assert(marker() != id1)
   }
 
+  test("a blank run-id marker is replaced by a fresh claim; the audited stream resumes") {
+    val staging = tmpDir("wal"); val wal = tmpDir("wal"); val ckpt = tmpDir("ckpt")
+    val quar = tmpDir("quar")
+    val small = GenConfig(events = 2000, segmentSize = 250)
+    ChangeGen.writeWal(spark, small, staging)
+    val parts = new java.io.File(staging).listFiles().filter(_.getName.endsWith(".parquet"))
+      .sortBy(_.getName)
+    def deliver(files: Seq[java.io.File]): Unit = files.foreach(f =>
+      java.nio.file.Files.copy(f.toPath, java.nio.file.Paths.get(wal, f.getName)))
+    val table = new LakeTable(spark, tmpDir("lake"))
+    def run(): Unit =
+      CdcStream.start(spark, wal, table, ckpt, queryId = "blank", mode = "l0",
+        maxFilesPerTrigger = 2, createBuckets = 4,
+        audit = Some((_, _) => true), quarantineDir = Some(quar))
+        .awaitTermination()
+    val marker = java.nio.file.Paths.get(ckpt, "graft-run-id")
+    deliver(parts.take(parts.length / 2))
+    run()
+    // the artifact an older create-then-write claim left after a crash
+    java.nio.file.Files.write(marker, Array.emptyByteArray)
+    deliver(parts.drop(parts.length / 2))
+    run() // resumes over the checkpoint: must heal, not throw
+    val id = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim
+    assert(id.matches("[0-9a-f-]{8}"))
+    assert(table.stagedIds.isEmpty)
+    assert(pagesMap(table.pages()) ==
+      expectedMap(ChangeGen.events(spark, small).collect().toSeq))
+  }
+
   test("audited ingest: rejected batch is quarantined, the rest publish and converge") {
     import org.apache.spark.sql.functions.col
     val wal = tmpDir("wal"); val ckpt = tmpDir("ckpt"); val quar = tmpDir("quar")

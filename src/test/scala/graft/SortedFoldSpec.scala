@@ -9,9 +9,10 @@ import graft.cdc.CdcApply
 import graft.gen.{ChangeGen, GenConfig, GenEvent}
 import graft.lake.{KeyChange, LakeTable}
 
-/** The sort-based single-exchange compaction fold: equivalence with the wide
-  * `max_by` fold, one-shuffle plan shape, GC-after-winner ordering, and the
-  * KeyChange expression's per-partition streaming semantics.
+/** The sort-based single-exchange compaction fold: equivalence with an
+  * independent wide `max_by` fold, one-shuffle plan shape, GC-after-winner
+  * ordering, and the KeyChange expression's per-partition streaming
+  * semantics.
   */
 class SortedFoldSpec extends SparkSpec {
   import spark.implicits._
@@ -29,60 +30,56 @@ class SortedFoldSpec extends SparkSpec {
         createBuckets = 16, spanning = true)
     }
 
-  private def withFoldMode[A](mode: String)(f: => A): A = {
-    val old = sys.props.get("graft.foldMode")
-    sys.props("graft.foldMode") = mode
-    try f finally old match {
-      case Some(v) => sys.props("graft.foldMode") = v
-      case None => sys.props.remove("graft.foldMode")
-    }
+  /** The wide `max_by` LWW fold over `raw`: one winner row per url
+    * (tombstone winners included) — the independent twin of the sorted fold. */
+  private def maxByWinners(raw: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    raw.groupBy(col("url"))
+      .agg(org.apache.spark.sql.functions.max_by(
+        struct(raw.columns.map(col).toIndexedSeq: _*),
+        struct(col("_lsn"), col("_wal_part"))).as("w"))
+      .select(col("w.*"))
+
+  test("sorted fold equals an independent max_by fold of the same input") {
+    val table = new LakeTable(spark, tmpDir())
+    l0Replay(table)
+    val before = table.currentSnapshot.get
+    val winners = maxByWinners(
+      table.readFiles(before, before.files, table.currentFileSchema(before)))
+    val snap = table.compact(maxFilesPerBucket = 1)
+    assert(snap.files.forall(_.bucket >= 0))
+    assert(pagesMap(table.pages(snap)) == golden)
+    assert(pagesMap(winners.filter(!col("_deleted"))) == golden)
+    // one row per url (tombstone winners kept: no GC watermark), each in its
+    // hash bucket
+    val maxByBuckets = winners.select(col("_urlhash")).as[Long].collect()
+      .groupBy(h => LakeTable.bucketOf(h, snap.buckets)).view.mapValues(_.length.toLong).toMap
+    assert(snap.files.groupBy(_.bucket).view.mapValues(_.map(_.rows).sum).toMap ==
+      maxByBuckets)
+    assert(table.scanRaw(snap).count() == winners.count())
   }
 
-  test("sorted fold and max_by fold produce identical table state") {
-    def foldedState(mode: String): (Map[String, (String, String, Long, Int)],
-        Map[Int, Long], Long) = withFoldMode(mode) {
-      val table = new LakeTable(spark, tmpDir())
-      l0Replay(table)
-      val snap = table.compact(maxFilesPerBucket = 1)
-      assert(snap.files.forall(_.bucket >= 0))
-      (pagesMap(table.pages(snap)),
-        snap.files.groupBy(_.bucket).view.mapValues(_.map(_.rows).sum).toMap,
-        table.scanRaw(snap).count())
-    }
-    val (sortedPages, sortedBuckets, sortedRaw) = foldedState("sorted")
-    val (maxbyPages, maxbyBuckets, maxbyRaw) = foldedState("maxby")
-    assert(sortedPages == golden)
-    assert(sortedPages == maxbyPages)
-    assert(sortedBuckets == maxbyBuckets)
-    assert(sortedRaw == maxbyRaw)
-  }
-
-  test("sorted fold runs exactly one shuffle; max_by fold runs two") {
-    def shuffleStages(mode: String): Int = withFoldMode(mode) {
-      val table = new LakeTable(spark, tmpDir())
-      l0Replay(table)
-      val counter = new java.util.concurrent.atomic.AtomicInteger
-      val stages = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new SparkListener {
-        override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-          if (s.stageInfo.taskMetrics != null &&
-              s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten > 0)
-            counter.incrementAndGet()
-          stages.incrementAndGet(); ()
-        }
+  test("sorted fold runs exactly one shuffle") {
+    val table = new LakeTable(spark, tmpDir())
+    l0Replay(table)
+    val counter = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+        if (s.stageInfo.taskMetrics != null &&
+            s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten > 0)
+          counter.incrementAndGet()
+        stages.incrementAndGet(); ()
       }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        table.compact(maxFilesPerBucket = 1)
-        // listener delivery is async; wait for the stage events to drain
-        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        while (stages.get() == 0 && System.nanoTime() < deadline) Thread.sleep(50)
-        Thread.sleep(300) // let straggler stage events land
-      } finally spark.sparkContext.removeSparkListener(listener)
-      counter.get()
     }
-    assert(shuffleStages("sorted") == 1)
-    assert(shuffleStages("maxby") == 2)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      table.compact(maxFilesPerBucket = 1)
+      // listener delivery is async; wait for the stage events to drain
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (stages.get() == 0 && System.nanoTime() < deadline) Thread.sleep(50)
+      Thread.sleep(300) // let straggler stage events land
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(counter.get() == 1)
   }
 
   test("GC runs after the winner filter: a GC'd tombstone never resurrects its victim") {
@@ -155,11 +152,7 @@ class SortedFoldSpec extends SparkSpec {
     assert(folded.filter(col("_deleted")).count() ==
       (0 until nUrls).count(_ % 11 == 0).toLong)
     // independent cross-check: the wide max_by plan over the SAME raw agrees
-    val maxby = raw.groupBy(col("url"))
-      .agg(org.apache.spark.sql.functions.max_by(
-        struct(raw.columns.map(col).toIndexedSeq: _*),
-        struct(col("_lsn"), col("_wal_part"))).as("w"))
-      .select(col("w.*")).filter(!col("_deleted"))
+    val maxby = maxByWinners(raw).filter(!col("_deleted"))
       .select("url", "text").as[(String, String)].collect().toMap
     assert(live == maxby)
   }

@@ -46,9 +46,10 @@ object CdcStream {
     *        bucket holding more than k files triggers a partial compaction
     *        (bounded read amplification for long MOR streams; reference
     *        analogue: auto-rebuild interval, `defaults.hpp:227`). It folds
-    *        only each such bucket's smallest files, back down to k, so the
-    *        write volume follows the deltas, not the compacted base; the
-    *        L0 group is flushed whole. The read-side trade: between full
+    *        only each such bucket's smallest files, back down to k, and the
+    *        whole bucket once those reach half its largest file; the L0
+    *        group is flushed whole. Each run then writes less, but runs come
+    *        more often (at k = 2 after every batch), and between full
     *        compactions a bucket holds k files and the base keeps its DV
     *        entries (see [[LakeTable.compact]])
     * @param expireKeepLast     when > 0, retain only this many snapshots after

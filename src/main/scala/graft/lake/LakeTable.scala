@@ -1017,14 +1017,19 @@ class LakeTable(val spark: SparkSession, val root: String,
     * Partial compaction (`maxFilesPerBucket = k > 1`) rewrites, in each
     * bucket holding n > k files, only its n−k+1 smallest files (by bytes,
     * ties by path) into one file — the least rewrite that brings the bucket
-    * back to k files, so a small delta never drags the compacted base into
-    * the rewrite; repeated runs behave like a size-tiered LSM. The L0
-    * spanning group (bucket −1) is always flushed whole, and with tombstone
-    * GC requested victim buckets are taken whole (a tombstone may kill a
-    * version in a file outside a subset). The read-side trade: until the
-    * next full compaction a bucket keeps k files, the files left in place
-    * keep their DV entries, and `needs_resolve` stays set unless every file
-    * was rewritten.
+    * back to k files, so a small delta does not drag the compacted base into
+    * the rewrite. Once those files together reach half the bucket's largest
+    * file, the whole bucket is folded instead: without that, a stream that
+    * never runs a full compaction would re-rewrite an ever larger merged
+    * delta on every run. The L0 spanning group (bucket −1) is always flushed
+    * whole, and with tombstone GC requested victim buckets are taken whole
+    * (a tombstone may kill a version in a file outside a subset).
+    *
+    * The trade, per run: fewer bytes written, but a bucket is left at k
+    * files rather than one, so the next run comes sooner (at k = 2, after
+    * every batch instead of every other one). Until the next full or
+    * whole-bucket fold the files left in place keep their DV entries, and
+    * `needs_resolve` stays set unless every file was rewritten.
     */
   def compact(maxFilesPerBucket: Int = 1, gcTombstonesBelowLsn: Option[Long] = None,
       maxRecordsPerFile: Long = 4L * 1024 * 1024, rebucket: Option[Int] = None): Snapshot = {
@@ -1060,11 +1065,15 @@ class LakeTable(val spark: SparkSession, val root: String,
     if (victims.isEmpty && gcTombstonesBelowLsn.isEmpty && !full) return snap
     val target = if (victims.nonEmpty && !full) victims else byBucket
     // a partial run without GC folds each victim bucket's n−k+1 smallest
-    // files; everything else (full, GC'd, the L0 group) takes whole groups
+    // files; everything else (full, GC'd, the L0 group) takes whole groups.
+    // Once those small files reach half the bucket's largest file the whole
+    // bucket is folded: past that point every run would re-rewrite a merged
+    // delta nearly the base's size, more than folding the base in once
     val subset = maxFilesPerBucket > 1 && gcTombstonesBelowLsn.isEmpty
     val input = target.toSeq.flatMap { case (bucket, files) =>
-      if (!subset || bucket < 0) files
-      else files.sortBy(f => (f.bytes, f.path)).take(files.size - maxFilesPerBucket + 1)
+      val small = files.sortBy(f => (f.bytes, f.path)).take(files.size - maxFilesPerBucket + 1)
+      if (!subset || bucket < 0 || 2 * small.map(_.bytes).sum >= files.map(_.bytes).max) files
+      else small
     }
     val inputPaths = input.map(_.path).toSet
     val untouched = snap.files.filterNot(f => inputPaths.contains(f.path))
@@ -1098,9 +1107,13 @@ class LakeTable(val spark: SparkSession, val root: String,
     // the rewrite read masks, so rewritten rows have their deletes applied
     // physically: every file rewritten → no DV survives; otherwise keep only
     // entries pointing at files left in place (a base file outside the
-    // subset keeps its masked rows masked), rewritten as one fresh sidecar
+    // subset keeps its masked rows masked), rewritten as one fresh sidecar.
+    // The fold drops rows only through the mask, the resolve or the GC, so
+    // when it wrote every input row no entry pointed at a rewritten file and
+    // the sidecar list stands as it is, with no consolidation job
     val dvLeft =
       if (snap.dvFiles.isEmpty || untouched.isEmpty) Nil
+      else if (newFiles.map(_.rows).sum == input.map(_.rows).sum) snap.dvFiles
       else consolidateDvs(snap, untouched)
     commit(snap.copy(files = untouched ++ newFiles, lineage = snap.lineage,
       props = props, dvFiles = dvLeft))

@@ -127,9 +127,9 @@ class CdcDvSpec extends SparkSpec {
 
   test("partial compaction folds only the small deltas; the base file and its DV entries stay") {
     val table = new LakeTable(spark, tmpDir())
-    // three quarters of the stream build the base, two small batches follow
+    // seven eighths of the stream build the base, two small batches follow
     val ordered = allEvents.sortBy(e => (e.seg, e.lsn))
-    val (baseEvents, rest) = ordered.splitAt(ordered.size * 3 / 4)
+    val (baseEvents, rest) = ordered.splitAt(ordered.size * 7 / 8)
     val (delta1, delta2) = rest.splitAt(rest.size / 2)
     replayDv(table, Seq(baseEvents), "q")
     table.compact(maxFilesPerBucket = 1) // the compacted base: one file per bucket
@@ -140,6 +140,11 @@ class CdcDvSpec extends SparkSpec {
     val before = table.currentSnapshot.get
     val byBucket = before.files.groupBy(_.bucket)
     assert(byBucket.values.forall(_.size == 3), "want base + two deltas in every bucket")
+    // and deltas small enough that the base is not folded in with them
+    assert(byBucket.values.forall { fs =>
+      val sizes = fs.map(_.bytes).sorted
+      2 * (sizes(0) + sizes(1)) < sizes(2)
+    }, "want the two deltas under half the base in every bucket")
     val bases = byBucket.values.map(_.maxBy(_.bytes)).toSeq
     assert(byBucket.values.forall(fs => fs.count(_.bytes == fs.map(_.bytes).max) == 1))
     val basePaths = bases.map(f => LakeTable.normalizePath(f.path)).toSet
@@ -153,6 +158,67 @@ class CdcDvSpec extends SparkSpec {
     assert(dvEntries(snap) == baseEntries)
     assert(liveDupes(table, snap) == 0)
     assert(pagesMap(table.pages(snap)) == golden)
+  }
+
+  /** A one-bucket dv table built from hand-made batches, one per element. */
+  private def oneBucketDv(batches: Seq[Seq[(String, Long, String)]]): LakeTable = {
+    val table = new LakeTable(spark, tmpDir())
+    val ts = new Timestamp(1704067200000L)
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val evs = b.map { case (op, lsn, url) =>
+        // varied payload, so file sizes follow row counts
+        val text = (1 to 30).map(j => (lsn * 31 + j * 17) % 1000).mkString(s"$url ", " ", "")
+        GenEvent(op, lsn, 0, url, ts, text.getBytes("UTF-8"), text, "en", 0L)
+      }
+      CdcApply.applyBatchDv(table, spark.createDataset(evs).toDF(), "h", i.toLong,
+        createBuckets = 1)
+    }
+    table
+  }
+
+  private def textsOf(table: LakeTable, snap: graft.lake.Snapshot): Map[String, String] =
+    table.pages(snap).collect().map(r => r.getAs[String]("url") -> r.getAs[String]("text")).toMap
+
+  test("partial compaction folds the whole bucket once its small files reach half the largest") {
+    val urls = (1 to 40).map(i => s"https://a/p$i")
+    // a base of 40 urls, then two batches updating half of them each: the
+    // two deltas together are about the base's size
+    val table = oneBucketDv(Seq(
+      urls.zipWithIndex.map { case (u, i) => ("I", i + 1L, u) },
+      urls.take(20).zipWithIndex.map { case (u, i) => ("U", 100L + i, u) },
+      urls.drop(20).zipWithIndex.map { case (u, i) => ("U", 200L + i, u) }))
+    val before = table.currentSnapshot.get
+    val sizes = before.files.map(_.bytes).sorted
+    assert(sizes.size == 3 && 2 * (sizes(0) + sizes(1)) >= sizes(2))
+    val expected = textsOf(table, before)
+    val snap = table.compact(maxFilesPerBucket = 2)
+    // the base was folded in too: one fresh file, every mask applied
+    assert(snap.files.size == 1 && !before.files.exists(_.path == snap.files.head.path))
+    assert(snap.dvFiles.isEmpty)
+    assert(textsOf(table, snap) == expected && expected.size == 40)
+  }
+
+  test("partial compaction keeps the sidecar list when no rewritten file carries a DV entry") {
+    val urls = (1 to 200).map(i => s"https://a/p$i")
+    // the first delta masks base rows; the second only inserts new urls,
+    // so no DV entry points at either delta
+    val table = oneBucketDv(Seq(
+      urls.zipWithIndex.map { case (u, i) => ("I", i + 1L, u) },
+      urls.take(3).zipWithIndex.map { case (u, i) => ("U", 1000L + i, u) },
+      (1 to 3).map(i => ("I", 2000L + i, s"https://a/q$i"))))
+    val before = table.currentSnapshot.get
+    val base = before.files.maxBy(_.bytes)
+    val sizes = before.files.map(_.bytes).sorted
+    assert(sizes.size == 3 && 2 * (sizes(0) + sizes(1)) < sizes(2))
+    assert(before.dvFiles.nonEmpty)
+    val expected = textsOf(table, before)
+    val snap = table.compact(maxFilesPerBucket = 2)
+    assert(snap.files.size == 2 && snap.files.exists(_.path == base.path))
+    // no consolidation: the very same sidecars, all pointing at the base
+    assert(snap.dvFiles == before.dvFiles)
+    assert(dvEntries(snap).map(_._1) == Set(LakeTable.normalizePath(base.path)))
+    assert(liveDupes(table, snap) == 0)
+    assert(textsOf(table, snap) == expected && expected.size == 203)
   }
 
   test("changes() over dv versions classifies inserts/updates/deletes") {

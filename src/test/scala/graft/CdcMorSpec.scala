@@ -99,7 +99,12 @@ class CdcMorSpec extends SparkSpec {
 
   test("partial compaction of raw deltas folds a subset per bucket and keeps needs_resolve") {
     val table = new LakeTable(spark, tmpDir())
-    segGroups(allEvents, 8).zipWithIndex.foreach { case (g, i) =>
+    // a large first append, then two small ones: the small pair stays under
+    // half the large file, so each bucket folds only its two smallest files
+    val ordered = allEvents.sortBy(e => (e.seg, e.lsn))
+    val (first, rest) = ordered.splitAt(ordered.size * 3 / 4)
+    val (second, third) = rest.splitAt(rest.size / 2)
+    Seq(first, second, third).zipWithIndex.foreach { case (g, i) =>
       CdcApply.applyBatchAppendRaw(table, spark.createDataset(g).toDF(), "r", i.toLong,
         createBuckets = 16)
     }

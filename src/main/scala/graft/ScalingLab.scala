@@ -45,11 +45,6 @@ object ScalingLab {
     // batch-size sweep for L0: serial per-batch cost is a bigger fraction now
     Cfg("l0-ft96", "l0", tasksPerSlot = 1, openCost = "134217728", filesPerTrigger = 96),
     Cfg("l0-ft24", "l0", tasksPerSlot = 1, openCost = "134217728", filesPerTrigger = 24),
-    // lake parquet codec: CPU/byte trade under single-box membw contention
-    Cfg("l0-zstd", "l0", tasksPerSlot = 1, openCost = "134217728",
-      extraConf = Map("spark.sql.parquet.compression.codec" -> "zstd")),
-    Cfg("l0-uncomp", "l0", tasksPerSlot = 1, openCost = "134217728",
-      extraConf = Map("spark.sql.parquet.compression.codec" -> "uncompressed")),
     Cfg("mor-t1-oc", "mor", tasksPerSlot = 1, openCost = "134217728"),
     Cfg("mor-mp32", "mor", maxPart = "32m"),
     Cfg("morraw-b256", "morraw", buckets = 256),

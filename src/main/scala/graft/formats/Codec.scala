@@ -20,8 +20,9 @@ import org.apache.spark.sql.types.BinaryType
   * absent (the one reference codec without a JVM-native implementation).
   *
   * These compose with connectors for wire-compressed payloads; at-rest
-  * compression stays the Parquet codec's job (zstd per column chunk), which
-  * is why the lake never calls these.
+  * compression stays the Parquet codec's job, per column chunk (snappy for
+  * lake appends, zstd for compaction output: `LakeTable.tiered`), which is
+  * why the lake never calls these.
   */
 object Codec {
 

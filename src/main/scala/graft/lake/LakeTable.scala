@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 
@@ -605,7 +605,9 @@ class LakeTable(val spark: SparkSession, val root: String,
     val placed = deletes
       .repartition(math.max(1, nTasks), col(LakeTable.DvPathCol))
       .sortWithinPartitions(col(LakeTable.DvPathCol), col(LakeTable.DvPosCol))
-    graft.cdc.CdcApply.phase("dv-write") { placed.write.parquet(dir.toString) }
+    graft.cdc.CdcApply.phase("dv-write") {
+      tiered(placed.write, compacted = false).parquet(dir.toString)
+    }
     val entries = fs.listStatus(dir)
       .filter(_.getPath.getName.endsWith(".parquet")).toSeq
       .map(f => DvFile(f.getPath.toString,
@@ -871,7 +873,7 @@ class LakeTable(val spark: SparkSession, val root: String,
     * replay comparison and clusters urls for scan locality.
     */
   def writeDataFiles(rows: DataFrame, schemaId: Int, buckets: Int, nTasks: Int,
-      maxRecordsPerFile: Long = 0L, bloomUrl: Boolean = false): Seq[DataFile] = {
+      maxRecordsPerFile: Long = 0L, compacted: Boolean = false): Seq[DataFile] = {
     // Exact bucket→task placement (round-robin via ExactPartition): plain
     // repartition(col("_bucket")) re-hashes 64 bucket ids into nTasks
     // partitions and the balls-in-bins collisions gave the write stage a
@@ -881,7 +883,7 @@ class LakeTable(val spark: SparkSession, val root: String,
     val bucketed = rows.withColumn("_bucket", LakeTable.bucketCol(col("_urlhash"), buckets))
     val placed = ExactPartition.bySlot(bucketed, n, pmod(col("_bucket"), lit(n)))
       .sortWithinPartitions(col("_bucket"), col("_urlhash"), col("url"))
-    writeBucketFiles(placed, schemaId, maxRecordsPerFile, bloomUrl)
+    writeBucketFiles(placed, schemaId, maxRecordsPerFile, compacted)
   }
 
   /** Sort-based LWW fold + bucketed write, fused into ONE exchange: route
@@ -904,7 +906,7 @@ class LakeTable(val spark: SparkSession, val root: String,
     */
   def writeDataFilesSortedFold(raw: DataFrame, schemaId: Int, buckets: Int, nTasks: Int,
       gcTombstonesBelowLsn: Option[Long] = None, maxRecordsPerFile: Long = 0L,
-      bloomUrl: Boolean = false): Seq[DataFile] = {
+      compacted: Boolean = false): Seq[DataFile] = {
     val n = math.max(1, nTasks)
     val bucketed = raw.withColumn("_bucket", LakeTable.bucketCol(col("_urlhash"), buckets))
     val winners = ExactPartition.bySlot(bucketed, n, pmod(col("_bucket"), lit(n)))
@@ -915,7 +917,7 @@ class LakeTable(val spark: SparkSession, val root: String,
       case Some(w) => winners.filter(!col("_deleted") || col("_lsn") >= lit(w))
       case None => winners
     }
-    writeBucketFiles(kept, schemaId, maxRecordsPerFile, bloomUrl)
+    writeBucketFiles(kept, schemaId, maxRecordsPerFile, compacted)
   }
 
   /** Shared bucketed-write tail: `placed` must already be partitioned and
@@ -924,24 +926,11 @@ class LakeTable(val spark: SparkSession, val root: String,
     * comparison).
     */
   private def writeBucketFiles(placed: DataFrame, schemaId: Int,
-      maxRecordsPerFile: Long, bloomUrl: Boolean): Seq[DataFile] = {
+      maxRecordsPerFile: Long, compacted: Boolean): Seq[DataFile] = {
     val commitId = java.util.UUID.randomUUID().toString
     val dir = new Path(dataDir, commitId).toString
     graft.cdc.CdcApply.phase("spark-write") {
-      val writer0 = placed.write.partitionBy("_bucket")
-      // Parquet-native bloom filter on `url` (compaction writes only — off
-      // the apply hot path): files are sorted by _urlhash, so url's per-row-
-      // group min/max string stats are useless for point lookups; the bloom
-      // lets parquet-mr skip row groups on the pushed `url = x` equality —
-      // the row-group-level complement of the manifest's file-level pruning
-      // (reference analogue: per-partition bloom synopses, synopsis.cpp).
-      // Adaptive sizing (parquet 1.16): the filter shrinks to the row group's
-      // actual NDV instead of a guessed constant.
-      val writer =
-        if (bloomUrl)
-          writer0.option("parquet.bloom.filter.enabled#url", "true")
-            .option("parquet.bloom.filter.adaptive.enabled", "true")
-        else writer0
+      val writer = tiered(placed.write.partitionBy("_bucket"), compacted)
       // target file sizing: a 10^10-event table folded to one file per bucket
       // would produce ~TB parquet files — split on a row target instead
       // (readers/pruning already handle many files per bucket)
@@ -950,6 +939,36 @@ class LakeTable(val spark: SparkSession, val root: String,
     }
     graft.cdc.CdcApply.phase("footer-stats") { collectDataFiles(dir, schemaId) }
   }
+
+  /** The parquet settings of a lake file, decided by its tier; reads need
+    * none, since parquet records the codec per column chunk.
+    *
+    * - '''Compaction output''' (`compacted`) is long-lived and carries most
+    *   of the bytes a stream writes: zstd level 1, about 0.65× snappy's
+    *   column bytes on the lake's rows (level 3 compresses no better at
+    *   twice the CPU; BASELINE.md, "Tiered lake codec").
+    *   It also carries a parquet bloom filter on `url`. Files are sorted by
+    *   `_urlhash`, so url's row-group min/max stats cannot prune a point
+    *   lookup; the bloom lets parquet-mr skip row groups on the pushed
+    *   `url = x` equality, the row-group complement of the manifest's
+    *   file-level pruning (reference analogue: per-partition bloom
+    *   synopses, synopsis.cpp). The adaptive filter keeps the smallest of
+    *   its candidates, halving from 1 MiB, that still holds the row group's
+    *   distinct urls at fpp 1%; ten candidates reach down to 2 KiB, where
+    *   parquet's default five stop at 64 KiB, many times what a compacted
+    *   file of a few thousand rows needs.
+    * - '''Appends''' (spanning L0 files, bucketed deltas, DV sidecars) are
+    *   on the apply hot path: snappy and no bloom filter. zstd there cost
+    *   the l0 path a third of its throughput (BASELINE.md, codec sweep).
+    */
+  private def tiered[T](w: DataFrameWriter[T], compacted: Boolean): DataFrameWriter[T] =
+    if (compacted)
+      w.option("compression", "zstd")
+        .option("parquet.compression.codec.zstd.level", "1")
+        .option("parquet.bloom.filter.enabled#url", "true")
+        .option("parquet.bloom.filter.adaptive.enabled", "true")
+        .option("parquet.bloom.filter.candidates.number#url", "10")
+    else w.option("compression", "snappy")
 
   /** Write `rows` as L0 ''spanning'' files: NO repartition, NO sort, NO
     * bucket dirs — each upstream task streams its partition straight into one
@@ -963,7 +982,9 @@ class LakeTable(val spark: SparkSession, val root: String,
   def writeDataFilesSpanning(rows: DataFrame, schemaId: Int): Seq[DataFile] = {
     val commitId = java.util.UUID.randomUUID().toString
     val dir = new Path(dataDir, commitId).toString
-    graft.cdc.CdcApply.phase("spark-write") { rows.write.parquet(dir) }
+    graft.cdc.CdcApply.phase("spark-write") {
+      tiered(rows.write, compacted = false).parquet(dir)
+    }
     graft.cdc.CdcApply.phase("footer-stats") { collectDataFiles(dir, schemaId) }
   }
 
@@ -1015,15 +1036,19 @@ class LakeTable(val spark: SparkSession, val root: String,
     * are applied physically, and subsequent reads are pure scans.
     *
     * Partial compaction (`maxFilesPerBucket = k > 1`) rewrites, in each
-    * bucket holding n > k files, only its n−k+1 smallest files (by bytes,
+    * bucket holding n > k files, only its n−k+1 smallest files (by rows,
     * ties by path) into one file — the least rewrite that brings the bucket
     * back to k files, so a small delta does not drag the compacted base into
-    * the rewrite. Once those files together reach half the bucket's largest
-    * file, the whole bucket is folded instead: without that, a stream that
-    * never runs a full compaction would re-rewrite an ever larger merged
-    * delta on every run. The L0 spanning group (bucket −1) is always flushed
-    * whole, and with tombstone GC requested victim buckets are taken whole
-    * (a tombstone may kill a version in a file outside a subset).
+    * the rewrite. Once those files together reach half the rows of the
+    * bucket's largest file, the whole bucket is folded instead: without
+    * that, a stream that never runs a full compaction would re-rewrite an
+    * ever larger merged delta on every run. Rows, not bytes: compaction
+    * output is zstd and appends are snappy (see [[tiered]]), so a delta
+    * holds about 1.5× the bytes per row of a compacted base, and a bytes
+    * rule would fold the base in at about a third of its rows. The L0
+    * spanning group (bucket −1) is always flushed whole, and with tombstone
+    * GC requested victim buckets are taken whole (a tombstone may kill a
+    * version in a file outside a subset).
     *
     * The trade, per run: fewer bytes written, but a bucket is left at k
     * files rather than one, so the next run comes sooner (at k = 2, after
@@ -1066,13 +1091,14 @@ class LakeTable(val spark: SparkSession, val root: String,
     val target = if (victims.nonEmpty && !full) victims else byBucket
     // a partial run without GC folds each victim bucket's n−k+1 smallest
     // files; everything else (full, GC'd, the L0 group) takes whole groups.
-    // Once those small files reach half the bucket's largest file the whole
-    // bucket is folded: past that point every run would re-rewrite a merged
-    // delta nearly the base's size, more than folding the base in once
+    // Once those small files reach half the rows of the bucket's largest
+    // file the whole bucket is folded: past that point every run would
+    // re-rewrite a merged delta nearly the base's size, more than folding
+    // the base in once
     val subset = maxFilesPerBucket > 1 && gcTombstonesBelowLsn.isEmpty
     val input = target.toSeq.flatMap { case (bucket, files) =>
-      val small = files.sortBy(f => (f.bytes, f.path)).take(files.size - maxFilesPerBucket + 1)
-      if (!subset || bucket < 0 || 2 * small.map(_.bytes).sum >= files.map(_.bytes).max) files
+      val small = files.sortBy(f => (f.rows, f.path)).take(files.size - maxFilesPerBucket + 1)
+      if (!subset || bucket < 0 || 2 * small.map(_.rows).sum >= files.map(_.rows).max) files
       else small
     }
     val inputPaths = input.map(_.path).toSet
@@ -1132,14 +1158,14 @@ class LakeTable(val spark: SparkSession, val root: String,
     if (needsResolve(snap))
       writeDataFilesSortedFold(raw, snap.currentSchemaId, buckets, nTasks = nTasks,
         gcTombstonesBelowLsn = gcTombstonesBelowLsn,
-        maxRecordsPerFile = maxRecordsPerFile, bloomUrl = true)
+        maxRecordsPerFile = maxRecordsPerFile, compacted = true)
     else {
       val kept = gcTombstonesBelowLsn match {
         case Some(w) => raw.filter(!col("_deleted") || col("_lsn") >= lit(w))
         case None => raw
       }
       writeDataFiles(kept, snap.currentSchemaId, buckets, nTasks = nTasks,
-        maxRecordsPerFile = maxRecordsPerFile, bloomUrl = true)
+        maxRecordsPerFile = maxRecordsPerFile, compacted = true)
     }
 
   // ------------------------------------------- WAP: staged commits (audit)

@@ -142,11 +142,11 @@ class CdcDvSpec extends SparkSpec {
     assert(byBucket.values.forall(_.size == 3), "want base + two deltas in every bucket")
     // and deltas small enough that the base is not folded in with them
     assert(byBucket.values.forall { fs =>
-      val sizes = fs.map(_.bytes).sorted
-      2 * (sizes(0) + sizes(1)) < sizes(2)
-    }, "want the two deltas under half the base in every bucket")
-    val bases = byBucket.values.map(_.maxBy(_.bytes)).toSeq
-    assert(byBucket.values.forall(fs => fs.count(_.bytes == fs.map(_.bytes).max) == 1))
+      val rows = fs.map(_.rows).sorted
+      2 * (rows(0) + rows(1)) < rows(2)
+    }, "want the two deltas under half the base's rows in every bucket")
+    val bases = byBucket.values.map(_.maxBy(_.rows)).toSeq
+    assert(byBucket.values.forall(fs => fs.count(_.rows == fs.map(_.rows).max) == 1))
     val basePaths = bases.map(f => LakeTable.normalizePath(f.path)).toSet
     val baseEntries = dvEntries(before).filter(e => basePaths.contains(e._1))
     assert(baseEntries.nonEmpty, "the deltas must mask rows of the base")
@@ -160,19 +160,22 @@ class CdcDvSpec extends SparkSpec {
     assert(pagesMap(table.pages(snap)) == golden)
   }
 
+  /** Apply one hand-made `(op, lsn, url)` batch to a one-bucket dv table. */
+  private def applyHand(table: LakeTable, batchId: Long, b: Seq[(String, Long, String)]): Unit = {
+    val ts = new Timestamp(1704067200000L)
+    val evs = b.map { case (op, lsn, url) =>
+      // varied payload, so file sizes follow row counts
+      val text = (1 to 30).map(j => (lsn * 31 + j * 17) % 1000).mkString(s"$url ", " ", "")
+      GenEvent(op, lsn, 0, url, ts, text.getBytes("UTF-8"), text, "en", 0L)
+    }
+    CdcApply.applyBatchDv(table, spark.createDataset(evs).toDF(), "h", batchId,
+      createBuckets = 1)
+  }
+
   /** A one-bucket dv table built from hand-made batches, one per element. */
   private def oneBucketDv(batches: Seq[Seq[(String, Long, String)]]): LakeTable = {
     val table = new LakeTable(spark, tmpDir())
-    val ts = new Timestamp(1704067200000L)
-    batches.zipWithIndex.foreach { case (b, i) =>
-      val evs = b.map { case (op, lsn, url) =>
-        // varied payload, so file sizes follow row counts
-        val text = (1 to 30).map(j => (lsn * 31 + j * 17) % 1000).mkString(s"$url ", " ", "")
-        GenEvent(op, lsn, 0, url, ts, text.getBytes("UTF-8"), text, "en", 0L)
-      }
-      CdcApply.applyBatchDv(table, spark.createDataset(evs).toDF(), "h", i.toLong,
-        createBuckets = 1)
-    }
+    batches.zipWithIndex.foreach { case (b, i) => applyHand(table, i.toLong, b) }
     table
   }
 
@@ -188,14 +191,38 @@ class CdcDvSpec extends SparkSpec {
       urls.take(20).zipWithIndex.map { case (u, i) => ("U", 100L + i, u) },
       urls.drop(20).zipWithIndex.map { case (u, i) => ("U", 200L + i, u) }))
     val before = table.currentSnapshot.get
-    val sizes = before.files.map(_.bytes).sorted
-    assert(sizes.size == 3 && 2 * (sizes(0) + sizes(1)) >= sizes(2))
+    val rows = before.files.map(_.rows).sorted
+    assert(rows.size == 3 && 2 * (rows(0) + rows(1)) >= rows(2))
     val expected = textsOf(table, before)
     val snap = table.compact(maxFilesPerBucket = 2)
     // the base was folded in too: one fresh file, every mask applied
     assert(snap.files.size == 1 && !before.files.exists(_.path == snap.files.head.path))
     assert(snap.dvFiles.isEmpty)
     assert(textsOf(table, snap) == expected && expected.size == 40)
+  }
+
+  test("partial compaction compares rows: snappy deltas under half a zstd base's rows fold alone") {
+    val urls = (1 to 400).map(i => s"https://a/p$i")
+    // a compacted (zstd) base of 400 urls, then two snappy deltas of 90
+    // updates each: under half the base in rows, over half of it in bytes
+    val table = oneBucketDv(Seq(
+      urls.zipWithIndex.map { case (u, i) => ("I", i + 1L, u) },
+      urls.take(10).zipWithIndex.map { case (u, i) => ("U", 500L + i, u) }))
+    val base = table.compact(maxFilesPerBucket = 1).files.head
+    applyHand(table, 2L, urls.slice(100, 190).zipWithIndex.map { case (u, i) => ("U", 1000L + i, u) })
+    applyHand(table, 3L, urls.slice(200, 290).zipWithIndex.map { case (u, i) => ("U", 2000L + i, u) })
+    val before = table.currentSnapshot.get
+    val deltas = before.files.filterNot(_.path == base.path)
+    assert(before.files.size == 3 && deltas.map(_.rows) == Seq(90L, 90L) && base.rows == 400)
+    assert(2 * deltas.map(_.bytes).sum >= base.bytes,
+      s"want deltas over half the base in bytes: ${deltas.map(_.bytes)} vs ${base.bytes}")
+    val expected = textsOf(table, before)
+    val snap = table.compact(maxFilesPerBucket = 2)
+    // only the deltas were folded: the base stays, with its masks
+    assert(snap.files.size == 2 && snap.files.exists(_.path == base.path))
+    assert(dvEntries(snap).map(_._1) == Set(LakeTable.normalizePath(base.path)))
+    assert(liveDupes(table, snap) == 0)
+    assert(textsOf(table, snap) == expected && expected.size == 400)
   }
 
   test("partial compaction keeps the sidecar list when no rewritten file carries a DV entry") {
@@ -207,9 +234,9 @@ class CdcDvSpec extends SparkSpec {
       urls.take(3).zipWithIndex.map { case (u, i) => ("U", 1000L + i, u) },
       (1 to 3).map(i => ("I", 2000L + i, s"https://a/q$i"))))
     val before = table.currentSnapshot.get
-    val base = before.files.maxBy(_.bytes)
-    val sizes = before.files.map(_.bytes).sorted
-    assert(sizes.size == 3 && 2 * (sizes(0) + sizes(1)) < sizes(2))
+    val base = before.files.maxBy(_.rows)
+    val rows = before.files.map(_.rows).sorted
+    assert(rows.size == 3 && 2 * (rows(0) + rows(1)) < rows(2))
     assert(before.dvFiles.nonEmpty)
     val expected = textsOf(table, before)
     val snap = table.compact(maxFilesPerBucket = 2)

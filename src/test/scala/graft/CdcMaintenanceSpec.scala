@@ -46,30 +46,73 @@ class CdcMaintenanceSpec extends SparkSpec {
 
   test("compaction output carries a parquet bloom filter on url (row-group point pruning)") {
     import org.apache.hadoop.fs.Path
+    import org.apache.parquet.column.values.bloomfilter.BloomFilter
     import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.io.api.Binary
     import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    def withReader[A](path: String)(f: ParquetFileReader => A): A = {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
+      try f(reader) finally reader.close()
+    }
+    /** (codec, carries a bloom filter) of every column chunk of a file. */
+    def chunks(path: String): Seq[(CompressionCodecName, Boolean)] = withReader(path) { r =>
+      r.getRowGroups.asScala.toSeq.flatMap(_.getColumns.asScala.map(c =>
+        (c.getCodec, c.getBloomFilterOffset >= 0)))
+    }
+    /** The append tier: snappy, no bloom filter, in every column chunk. */
+    def assertAppendTier(paths: Seq[String], what: String): Unit = {
+      assert(paths.nonEmpty, s"no $what files")
+      paths.foreach(p => assert(chunks(p).toSet == Set((CompressionCodecName.SNAPPY, false)),
+        s"$what file $p"))
+    }
     val table = new LakeTable(spark, tmpDir())
     segGroups(allEvents, 6).zipWithIndex.foreach { case (g, i) =>
       CdcApply.applyBatchAppendRaw(table, spark.createDataset(g).toDF(), "b", i.toLong,
         createBuckets = 4)
     }
+    assertAppendTier(table.currentSnapshot.get.files.map(_.path), "bucketed delta")
     table.compact(maxFilesPerBucket = 1)
     val snap = table.currentSnapshot.get
+    // every column chunk of the compaction output is zstd
+    snap.files.foreach(f => assert(chunks(f.path).forall(_._1 == CompressionCodecName.ZSTD),
+      s"compacted file ${f.path}"))
     val f = snap.files.head
-    // a url that lives in this file (files are bucket-partitioned on urlhash)
+    assert(f.rows > 500, s"want a file of several hundred rows, got ${f.rows}")
     val present = table.readFiles(snap, Seq(f), table.currentFileSchema(snap))
-      .select("url").head().getString(0)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.path), conf))
-    try {
+      .select("url").as[String].collect().toSeq
+    val bloom: BloomFilter = withReader(f.path) { reader =>
+      assert(reader.getRowGroups.size == 1)
       val block = reader.getRowGroups.get(0)
       val colMeta = block.getColumns.asScala.find(_.getPath.toDotString == "url").get
-      val bloom = reader.getBloomFilterDataReader(block).readBloomFilter(colMeta)
-      assert(bloom != null, "compacted file must carry a url bloom filter")
-      assert(bloom.findHash(bloom.hash(Binary.fromString(present))))
-    } finally reader.close()
+      reader.getBloomFilterDataReader(block).readBloomFilter(colMeta)
+    }
+    assert(bloom != null, "compacted file must carry a url bloom filter")
+    // sized to the file's rows, not parquet's 64 KiB adaptive floor
+    assert(bloom.getBitsetSize <= 8 * 1024, s"url bloom of ${bloom.getBitsetSize} B")
+    def mayContain(u: String): Boolean = bloom.findHash(bloom.hash(Binary.fromString(u)))
+    // no false negatives; at fpp 1% nearly every absent url is rejected
+    assert(present.forall(mayContain))
+    val rejected = (1 to 1000).count(i => !mayContain(s"https://absent.example/$i"))
+    assert(rejected >= 970, s"bloom rejected only $rejected of 1000 absent urls")
+
+    // the append tier: L0 spanning files, dv appends and their DV sidecars
+    val l0 = new LakeTable(spark, tmpDir())
+    segGroups(allEvents, 6).take(2).zipWithIndex.foreach { case (g, i) =>
+      CdcApply.applyBatchAppendRaw(l0, spark.createDataset(g).toDF(), "s", i.toLong,
+        createBuckets = 4, spanning = true)
+    }
+    assertAppendTier(l0.currentSnapshot.get.files.map(_.path), "L0 spanning")
+    val dv = new LakeTable(spark, tmpDir())
+    segGroups(allEvents, 6).zipWithIndex.foreach { case (g, i) =>
+      CdcApply.applyBatchDv(dv, spark.createDataset(g).toDF(), "d", i.toLong,
+        createBuckets = 4)
+    }
+    val dvSnap = dv.currentSnapshot.get
+    assertAppendTier(dvSnap.files.map(_.path), "dv append")
+    assertAppendTier(dvSnap.dvFiles.map(_.path), "DV sidecar")
   }
 
   test("changes(): insert/update/delete classification between two versions") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.cdc.CdcStream
 import graft.gen.{ChangeGen, GenConfig}
@@ -17,8 +17,8 @@ import graft.lake.LakeTable
   *     see BASELINE.md "environment calibration"). Headline mode is the
   *     write-optimized L0 spanning append (`mode = "l0"` — zero exchanges);
   *     a second (2, 8) pairing keeps the bus unsaturated at both points, and
-  *     the read-optimized merges — deletion vectors (`applyBatchDv`) and the
-  *     retired copy-on-write MERGE — are reported alongside.
+  *     the read-optimized deletion-vector merge (`mode = "dv"`) is reported
+  *     alongside.
   *     After an untimed warmup pair (JIT + codegen), the timed (N, 4N)
   *     replays run INTERLEAVED several times and the fastest of each side
   *     is kept: the VM's noisy-neighbor slowdowns are time-varying, so
@@ -28,7 +28,8 @@ import graft.lake.LakeTable
   *     credits, not the engine — a real cluster's lake (S3/HDFS) scales
   *     bandwidth with node count.
   *  2. '''Operator catalog timings''' — every SparkEntry query at the
-  *     driver-provided SF dir, seconds each (count() as the action).
+  *     driver-provided SF dir, seconds each (count() as the action); a query
+  *     that throws is listed under `failed_queries`, not timed.
   *
   * Env knobs: SPARK_GRAFT_SF_DIR (query input), SPARK_GRAFT_CDC_EVENTS
   * (WAL size; default 8M = one 8M micro-batch at ft=192),
@@ -188,6 +189,21 @@ object Bench {
     ModeRuns(runs.map(_._1), runs.map(_._2))
   }
 
+  /** Seconds of each catalog query that succeeded (count() as the action),
+    * and the names of those that threw: a failure's elapsed time is no timing.
+    */
+  private[graft] def timeQueries(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)])
+      : (Seq[(String, Double)], Seq[String]) = {
+    val (failed, times) = queries.partitionMap { case (name, fn) =>
+      val t0 = System.nanoTime()
+      try { fn(spark, sfDir).count(); Right(name -> (System.nanoTime() - t0) / 1e9) }
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); Left(name) }
+    }
+    (times, failed)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // 8M default, replayed as ONE 8M-event micro-batch (ft=192 over 192
@@ -236,14 +252,14 @@ object Bench {
       val gen = session(16)
       val mainWal = s"$scratch/wal-main-$nEvents"
       val warmWal = s"$scratch/wal-warm-500000"
-      val cowWal = s"$scratch/wal-cow-${nEvents / 4}" // quarter-size: COW is secondary
+      val dvWal = s"$scratch/wal-dv-${nEvents / 4}" // quarter-size: dv is secondary
       try {
         if (!new java.io.File(mainWal).exists())
           ChangeGen.writeWal(gen, GenConfig(events = nEvents, segmentSize = nEvents / 192), mainWal)
         if (!new java.io.File(warmWal).exists())
           ChangeGen.writeWal(gen, GenConfig(events = 500000, segmentSize = 125000), warmWal)
-        if (!new java.io.File(cowWal).exists())
-          ChangeGen.writeWal(gen, GenConfig(events = nEvents / 4, segmentSize = nEvents / 192), cowWal)
+        if (!new java.io.File(dvWal).exists())
+          ChangeGen.writeWal(gen, GenConfig(events = nEvents / 4, segmentSize = nEvents / 192), dvWal)
       } finally gen.stop()
 
       try {
@@ -254,8 +270,7 @@ object Bench {
         // bucket placement and LWW folding are deferred to the compaction
         // flush, the RocksDB/LSM L0 design. Measured ~1.9x the bucketed raw
         // append (`morraw`) at both core counts — see BASELINE.md. The
-        // bucketed appends (`morraw`/`mor`) and copy-on-write MERGE (`cow`)
-        // remain as read-optimized paths; COW is reported alongside.
+        // read-optimized deletion-vector merge (`dv`) is reported below.
         val mor = cdcPairs(mainWal, warmWal, "l0", pairs = 7, filesPerTrigger = 192)
         headline = mor.bestSteadyTp16
         parts += s""""cdc_mor":{"apply_mode":"l0","wal_events":$nEvents,${modeJson(mor)}}"""
@@ -273,39 +288,31 @@ object Bench {
           lo = 2, hi = 8, extraOnVariance = 4,
           buyMoreWhile = r => r.highVariance || r.inconclusiveAt(0.8))
         parts += s""""cdc_mor_unsaturated":{"apply_mode":"l0","cores":"2v8",${modeJson(lo, 2, 8)}}"""
-        // The read-optimized merge paths alongside, on the smaller WAL with
+        // The read-optimized dv merge alongside, on the smaller WAL with
         // smaller triggers so later batches actually merge against a
-        // populated table (one giant batch would just measure a bulk load):
-        // dv (deletion vectors — the CURRENT read-optimized path) and cow
-        // (retired round 5; kept one more round as the retirement evidence —
-        // BASELINE.md's round-5 write-amp/read-latency table)
-        val dv = cdcPairs(cowWal, warmWal, "dv", pairs = 2, filesPerTrigger = 12)
+        // populated table (one giant batch would just measure a bulk load)
+        val dv = cdcPairs(dvWal, warmWal, "dv", pairs = 2, filesPerTrigger = 12)
         parts += s""""cdc_dv":{${modeJson(dv)}}"""
-        val dvLo = cdcPairs(cowWal, warmWal, "dv", pairs = 2, filesPerTrigger = 12,
+        val dvLo = cdcPairs(dvWal, warmWal, "dv", pairs = 2, filesPerTrigger = 12,
           lo = 2, hi = 8)
         parts += s""""cdc_dv_unsaturated":{"cores":"2v8",${modeJson(dvLo, 2, 8)}}"""
-        val cow = cdcPairs(cowWal, warmWal, "cow", pairs = 2, filesPerTrigger = 12)
-        parts += s""""cdc_cow":{${modeJson(cow)}}"""
       } finally {
-        rmrf(mainWal); rmrf(warmWal); rmrf(cowWal); rmrf(s"$scratch/spark-local")
+        rmrf(mainWal); rmrf(warmWal); rmrf(dvWal); rmrf(s"$scratch/spark-local")
       }
       val ceiling = cpuCeiling()
       parts += f""""vm_cpu_scaling_ceiling_4_to_16":$ceiling%.3f"""
 
       // ---- operator catalog timings ----
-      val queryTimes: Seq[(String, Double)] =
-        if (sys.env.contains("SPARK_GRAFT_SKIP_QUERIES")) Seq.empty
+      val (queryTimes, failedQueries) =
+        if (sys.env.contains("SPARK_GRAFT_SKIP_QUERIES")) (Seq.empty, Seq.empty)
         else {
           val spark = session(16)
-          try SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-            val t0 = System.nanoTime()
-            try fn(spark, sfDir).count()
-            catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
-            name -> (System.nanoTime() - t0) / 1e9
-          } finally spark.stop()
+          try timeQueries(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1))
+          finally spark.stop()
         }
       val qs = queryTimes.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
-      parts += f""""queries":$qs,"total_query_sec":${queryTimes.map(_._2).sum}%.1f"""
+      val fs = failedQueries.map("\"" + _ + "\"").mkString("[", ",", "]")
+      parts += f""""queries":$qs,"failed_queries":$fs,"total_query_sec":${queryTimes.map(_._2).sum}%.1f"""
     } catch {
       case e: Throwable =>
         e.printStackTrace()

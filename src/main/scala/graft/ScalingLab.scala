@@ -22,7 +22,6 @@ object ScalingLab {
       audited: Boolean = false)
 
   val configs: Map[String, Cfg] = Seq(
-    Cfg("mor", "mor"),
     Cfg("morraw", "morraw"),
     Cfg("morraw-mp32", "morraw", maxPart = "32m"),
     Cfg("morraw-t1", "morraw", tasksPerSlot = 1),
@@ -45,11 +44,8 @@ object ScalingLab {
     // batch-size sweep for L0: serial per-batch cost is a bigger fraction now
     Cfg("l0-ft96", "l0", tasksPerSlot = 1, openCost = "134217728", filesPerTrigger = 96),
     Cfg("l0-ft24", "l0", tasksPerSlot = 1, openCost = "134217728", filesPerTrigger = 24),
-    Cfg("mor-t1-oc", "mor", tasksPerSlot = 1, openCost = "134217728"),
-    Cfg("mor-mp32", "mor", maxPart = "32m"),
     Cfg("morraw-b256", "morraw", buckets = 256),
-    Cfg("cow", "cow", filesPerTrigger = 12),
-    // deletion-vector merge: the read-optimized path that replaced COW
+    // deletion-vector merge: the read-optimized path
     Cfg("dv", "dv", tasksPerSlot = 1, openCost = "134217728"),
     Cfg("dv-ft12", "dv", filesPerTrigger = 12),
     Cfg("dv-ft96", "dv", tasksPerSlot = 1, openCost = "134217728", filesPerTrigger = 96),
@@ -118,7 +114,7 @@ object ScalingLab {
     val wal = s"$scratch/lab-wal-$nEvents"
     val warm = s"$scratch/lab-wal-warm"
     locally {
-      val gen = session(16, Cfg("gen", "mor"))
+      val gen = session(16, Cfg("gen", "l0"))
       try {
         if (!new java.io.File(wal).exists())
           ChangeGen.writeWal(gen, GenConfig(events = nEvents, segmentSize = nEvents / 96), wal)

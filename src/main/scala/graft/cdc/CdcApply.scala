@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -23,21 +23,30 @@ case class ApplyStats(
     version: Long,
     quarantined: Boolean = false)
 
-/** The MERGE INTO engine: applies one micro-batch of change events to a
-  * [[LakeTable]] with last-writer-wins semantics, copy-on-write per bucket,
-  * exactly-once via a per-query batch-id high-watermark in the committed
-  * snapshot, and Catalyst-driven schema evolution.
+/** The CDC apply engine: applies one micro-batch of change events to a
+  * [[LakeTable]] with last-writer-wins semantics, exactly-once via a
+  * per-query batch-id high-watermark in the committed snapshot, and
+  * Catalyst-driven schema evolution. Two apply paths:
+  *
+  *  - [[applyBatchAppendRaw]], write-optimized: every event is appended as
+  *    its own row version (bucketed `morraw`, or un-bucketed L0 spanning
+  *    files `l0`); readers and compaction resolve LWW.
+  *  - [[applyBatchDv]], read-optimized: superseded committed rows are masked
+  *    by deletion vectors and only the batch's winners are appended, so the
+  *    table keeps one live version per url and reads need no resolve.
   *
   * Scale design (the parts that must survive 100 TB / 1000 executors):
   *
-  *  - '''No full-table shuffle, ever.''' The batch's distinct urls are hashed
-  *    to buckets; only files in affected buckets are read (manifest pruning),
-  *    and the untouched-vs-touched split uses a '''broadcast''' semi/anti join
-  *    on the batch keys — the big existing side is never shuffled.
+  *  - '''No full-table shuffle, ever.''' The append path reads no table
+  *    data. The dv path hashes the batch's distinct urls to buckets, reads
+  *    only the key columns of files in affected buckets (manifest pruning)
+  *    and joins them with a '''broadcast''' of the batch keys — the big
+  *    existing side is never shuffled.
   *  - '''Hot-key skew''' (Zipf domains, hot urls) is absorbed by partial
-  *    aggregation: the LWW reduction is `max_by(struct(...), struct(lsn,...))`
-  *    — a declarative aggregate with map-side combine, so a million updates to
-  *    one url reduce locally before the exchange; AQE handles residual skew.
+  *    aggregation: the dv path's LWW reduction is
+  *    `max_by(struct(...), struct(lsn, wal_part))` — a declarative aggregate
+  *    with map-side combine, so a million updates to one url reduce locally
+  *    before the exchange; AQE handles residual skew.
   *  - '''Idempotent replay''': batches commit in order per streaming query, so
   *    a high-watermark batchId in the snapshot suffices; a replayed batch
   *    (crash between sink commit and checkpoint write) is skipped → table
@@ -73,14 +82,12 @@ object CdcApply {
       r
     }
 
-  /** Above this many distinct keys per batch, the merge join is left to the
-    * shuffle planner instead of a forced broadcast (~1M urls ≈ 60+ MB
+  /** Above this many distinct keys per batch, the dv competitor join is left
+    * to the shuffle planner instead of a forced broadcast (~1M urls ≈ 60+ MB
     * broadcast — past the point where driver collect + ship beats a shuffle
-    * of the bucket-pruned existing side). Overridable for experiments via
-    * `-Dgraft.broadcastKeyLimit=N`.
+    * of the bucket-pruned existing side).
     */
-  def BroadcastKeyLimit: Long =
-    sys.props.get("graft.broadcastKeyLimit").map(_.toLong).getOrElse(1L * 1000 * 1000)
+  val BroadcastKeyLimit: Long = 1000L * 1000
 
   /** Write-stage tasks per executor slot (default 1: one whole wave of
     * uniform write tasks measured ~15% faster than two at 16 cores —
@@ -97,14 +104,8 @@ object CdcApply {
     math.max(1, math.min(buckets, slots * tasksPerSlot))
   }
 
-  /** LWW ordering: LSN, then table-residency (a committed row beats a
-    * redelivered duplicate of itself), then WAL partition for determinism.
-    */
-  private def ordKey(isTable: Column): Column =
-    struct(col("lsn"), isTable, col("wal_part"))
-
-  /** Schema-evolution preamble shared by EVERY apply mode (a drift here
-    * would silently diverge table state between modes): merge the event user
+  /** Schema-evolution preamble shared by both apply paths (a drift here
+    * would silently diverge table state between them): merge the event user
     * schema into the table's, allocating the next schema id on evolution.
     * @return (mergedUser, evolved, schemaId, mergedFileSchema)
     */
@@ -119,7 +120,7 @@ object CdcApply {
     (mergedUser, evolved, schemaId, LakeTable.fileSchema(mergedUser))
   }
 
-  /** Envelope rows → file-schema rows, shared by every mode: delete ops
+  /** Envelope rows → file-schema rows, shared by both apply paths: delete ops
     * null the payload (tombstone keeps key + LSN — deterministic content),
     * system columns appended.
     */
@@ -136,13 +137,13 @@ object CdcApply {
           col("wal_part").cast("int").as("_wal_part"))).toIndexedSeq: _*)
   }
 
-  /** WAP ordering guard for COMMIT paths (every mode): committing batch N of
-    * a query at or past a staged-unpublished batch of the SAME query would
-    * advance the exactly-once watermark over data that is not durable yet —
-    * crash replay would then skip the staged batch forever — or double-apply
-    * a staged batch its publish later rebase-appends. Refuse until
-    * published/dropped. Cost: one list of an almost-always-absent dir per
-    * batch; WHILE a stage pends (transient by design) each pending staged
+  /** WAP ordering guard for COMMIT paths (both apply paths): committing
+    * batch N of a query at or past a staged-unpublished batch of the SAME
+    * query would advance the exactly-once watermark over data that is not
+    * durable yet — crash replay would then skip the staged batch forever —
+    * or double-apply a staged batch its publish later rebase-appends. Refuse
+    * until published/dropped. Cost: one list of an almost-always-absent dir
+    * per batch; WHILE a stage pends (transient by design) each pending staged
     * snapshot's inline JSON is parsed per batch to read its lineage tail —
     * accepted, since pending stages are audit-scoped and short-lived.
     */
@@ -157,146 +158,15 @@ object CdcApply {
           s" at or before batch $batchId — publish or drop them before committing")
   }
 
-  def applyBatch(
-      table: LakeTable,
-      batch: DataFrame,
-      queryId: String,
-      batchId: Long,
-      createBuckets: Int = 64): ApplyStats = {
-
-    val spark = table.spark
-
-    // ------------------------------------------------------------- idempotence
-    val snap0: Snapshot = table.currentSnapshot.getOrElse {
-      table.create(userSchemaOf(batch.schema), createBuckets)
-    }
-    if (snap0.watermarks.get(queryId).exists(_ >= batchId))
-      return ApplyStats(queryId, batchId, skipped = true, 0, 0, 0, -1, -1, snap0.version)
-    requireNoStagedGap(table, queryId, batchId)
-    // Un-flushed L0 spanning files (bucket = -1) break COW's touched-bucket
-    // arithmetic: planFiles treats them as members of EVERY bucket, so the
-    // rewrite would copy their untouched rows into bucket files while `keep`
-    // retains the spanning file — duplicating rows every batch. Flush first.
-    require(!snap0.files.exists(_.bucket < 0),
-      "table has un-flushed L0 spanning files — run compact() before copy-on-write applies")
-
-    val ev = batch.drop("seg")
-
-    // ------------------------------------------------------- schema evolution
-    val (mergedUser, evolved, schemaId, mergedFile) = evolveSchema(table, snap0, ev)
-
-    // ------------------------------------------------- LWW dedup within batch
-    // max_by over struct: partial-aggregable → map-side combine kills hot-key
-    // skew before the shuffle. Batch bookkeeping (event count, LSN range) rides
-    // in the same aggregation — per-url partials re-aggregate per bucket below,
-    // so the whole batch needs exactly TWO Spark jobs (stats, merge+write):
-    // short driver-serial jobs, not data volume, are what capped scaling.
-    val evCols = ev.columns
-    val winners = ev
-      .groupBy(col("url"))
-      .agg(
-        max_by(struct(evCols.map(col).toIndexedSeq: _*), ordKey(lit(0))).as("w"),
-        count(lit(1)).as("_n"),
-        min(col("lsn")).as("_minLsn"),
-        max(col("lsn")).as("_maxLsn"))
-      .select(col("w.*"), col("_n"), col("_minLsn"), col("_maxLsn"))
-      .withColumn("_urlhash", xxhash64(col("url")))
-      .withColumn("_bucket", LakeTable.bucketCol(col("_urlhash"), snap0.buckets))
-      .persist()
-
-    try {
-      // one job: per-bucket stats (≤ #buckets rows to the driver)
-      val perBucket = winners.groupBy(col("_bucket")).agg(
-        sum(col("_n")), min(col("_minLsn")), max(col("_maxLsn")),
-        sum(when(col("op") === "D", 1L).otherwise(0L)),
-        sum(when(col("op") =!= "D", 1L).otherwise(0L))).collect()
-
-      val events = perBucket.map(_.getLong(1)).sum
-      if (events == 0L) { // empty batch: advance the watermark only
-        val s = table.commit(snap0.copy(
-          watermarks = snap0.watermarks + (queryId -> batchId),
-          lineage = snap0.lineage :+ LineageEntry(queryId, batchId, 0, 0, 0, -1, -1, -1)),
-          appendedOnly = Some(Nil))
-        return ApplyStats(queryId, batchId, skipped = false, 0, 0, 0, -1, -1, s.version)
-      }
-      val minLsn = perBucket.map(_.getLong(2)).min
-      val maxLsn = perBucket.map(_.getLong(3)).max
-      val deletes = perBucket.map(_.getLong(4)).sum
-      val upserts = perBucket.map(_.getLong(5)).sum
-      val affected: Set[Int] = perBucket.map(_.getInt(0)).toSet
-
-      val candidateFiles = table.planFiles(snap0, buckets = Some(affected))
-      val existing = table.readFiles(snap0, candidateFiles, mergedFile)
-
-      // ------------------------------------------- copy-on-write merge plan
-      // Small batches (the common steady-state case): force-broadcast the key
-      // set so the pruned-but-still-large existing side never shuffles. Huge
-      // catch-up batches (keys beyond what an executor should hold) fall back
-      // to a shuffled join and let AQE plan it — forcing a broadcast there
-      // would OOM at 10^10-event scale.
-      val keyCount = deletes + upserts
-      val keysRaw = winners.select(col("url"))
-      val keys = if (keyCount <= BroadcastKeyLimit) broadcast(keysRaw) else keysRaw
-      // NOTE: `existing` is scanned twice in the merge job (anti + semi) —
-      // per-batch read I/O of the touched buckets doubles. Accepted as part
-      // of COW's formal demotion to the read-optimization path (BASELINE.md:
-      // write amplification, not this, caps it); a single tagged-join scan
-      // would halve the read if COW were ever promoted back.
-      val untouched = existing.join(keys, Seq("url"), "left_anti")
-
-      // Committed rows competing with the batch become pseudo-events.
-      val touchedEv = existing.join(keys, Seq("url"), "left_semi")
-        .select(
-          (Seq(
-            when(col("_deleted"), lit("D")).otherwise(lit("U")).as("op"),
-            col("_lsn").as("lsn"),
-            col("_wal_part").as("wal_part"),
-            lit(1).as("is_table"),
-            col("url")) ++
-            mergedUser.fields.filter(_.name != "url").map(f => col(f.name))).toIndexedSeq: _*)
-
-      val batchEv = alignUser(winners, mergedUser)
-        .withColumn("is_table", lit(0))
-        .select(touchedEv.columns.map(col).toIndexedSeq: _*)
-
-      val resolvedCols = touchedEv.columns
-      val resolved = touchedEv.unionByName(batchEv)
-        .groupBy(col("url"))
-        .agg(max_by(struct(resolvedCols.map(col).toIndexedSeq: _*), ordKey(col("is_table"))).as("w"))
-        .select(col("w.*"))
-
-      val rows = toFileRows(resolved, mergedUser)
-
-      val newData = untouched.unionByName(rows)
-      val newFiles = table.writeDataFiles(newData, schemaId, snap0.buckets,
-        nTasks = math.max(1, affected.size))
-
-      // ------------------------------------------------------------- commit
-      val keep = snap0.files.filterNot(f => affected.contains(f.bucket))
-      val schemas = if (evolved) snap0.schemas + (schemaId.toString -> mergedFile.json) else snap0.schemas
-      val committed = table.commit(snap0.copy(
-        currentSchemaId = schemaId,
-        schemas = schemas,
-        files = keep ++ newFiles,
-        watermarks = snap0.watermarks + (queryId -> batchId),
-        lineage = snap0.lineage :+
-          LineageEntry(queryId, batchId, events, upserts, deletes, minLsn, maxLsn, -1)))
-
-      ApplyStats(queryId, batchId, skipped = false, events, upserts, deletes,
-        minLsn, maxLsn, committed.version)
-    } finally winners.unpersist()
-  }
-
   /** Deletion-vector apply (the Iceberg-v2 positional-delete design): the
-    * READ-optimized merge mode that replaces copy-on-write. A batch
+    * READ-optimized merge path. A batch
     *
-    *  1. computes its LWW winners (same map-side-combined `max_by` as COW);
+    *  1. computes its LWW winners (a map-side-combined `max_by`);
     *  2. reads the CURRENT committed row identity of competing urls from the
     *     touched buckets — a '''column-pruned masked scan''' of
     *     `(url, _lsn, _wal_part)` plus each row's physical position
     *     ([[graft.lake.LakeTable.readFilesSlim]]); payload bytes (html) are
-    *     never read, which is the read-amplification win over COW's full
-    *     rewrite of every touched bucket;
+    *     never read, and the touched buckets are never rewritten;
     *  3. masks superseded committed rows by appending their
     *     `(file, row-ordinal)` pairs to a per-batch DV sidecar
     *     ([[graft.lake.LakeTable.writeDvFiles]]) — committed rows that WIN
@@ -305,14 +175,15 @@ object CdcApply {
     *  4. appends only the winning rows as new bucket files.
     *
     * Per-batch cost is O(batch + touched-bucket key columns); write
-    * amplification is O(batch) like merge-on-read — but reads stay a pure
+    * amplification is O(batch) like the append path — but reads stay a pure
     * scan + broadcast anti-join (NO url-keyed resolve shuffle), because the
     * table keeps the single-live-version invariant: every superseded row is
     * positionally masked the moment its successor lands. Compaction folds
     * masks into the data and clears the sidecar list.
     *
-    * Requires a single-version base (no un-compacted MOR deltas / L0
-    * spanning files) — the invariant the mode itself maintains.
+    * Requires a single-version base (no un-compacted raw-append deltas / L0
+    * spanning files) — the invariant the path itself maintains. A table fed
+    * by the append path switches to dv after one full `compact()`.
     *
     * Reference analogue: the reference's only rewrite mechanism is the
     * whole-partition `rebuild` copy (`builtins/commands/rebuild.cpp:45-77`);
@@ -341,13 +212,14 @@ object CdcApply {
     val ev = batch.drop("seg")
     val (mergedUser, evolved, schemaId, mergedFile) = evolveSchema(table, snap0, ev)
 
-    // batch LWW winners + bookkeeping in one aggregation, same two-job shape
-    // as the COW path (stats job, then the write jobs)
+    // batch LWW winners (order: LSN, then WAL partition for determinism) +
+    // bookkeeping in one aggregation: a stats job, then the write jobs
     val evCols = ev.columns
     val winners = ev
       .groupBy(col("url"))
       .agg(
-        max_by(struct(evCols.map(col).toIndexedSeq: _*), ordKey(lit(0))).as("w"),
+        max_by(struct(evCols.map(col).toIndexedSeq: _*), struct(col("lsn"), col("wal_part")))
+          .as("w"),
         count(lit(1)).as("_n"),
         min(col("lsn")).as("_minLsn"),
         max(col("lsn")).as("_maxLsn"))
@@ -379,14 +251,14 @@ object CdcApply {
 
       // current committed competitor per url: slim masked identity read of
       // the touched buckets, semi-restricted to the batch's keys (broadcast
-      // below the same key limit as COW — the pruned scan never shuffles)
+      // below BroadcastKeyLimit — the pruned scan never shuffles)
       val candidateFiles = table.planFiles(snap0, buckets = Some(affected))
       val keysRaw = winners.select(col("url"), col("lsn").as("_b_lsn"))
       val keys = if (keyCount <= BroadcastKeyLimit) broadcast(keysRaw) else keysRaw
       // inner join: only committed rows whose url the batch touches matter.
-      // Batch-wins iff _b_lsn > _lsn (at equal LSN the committed row wins —
-      // exactly ordKey's is_table tiebreak, with wal_part never reached
-      // because a url's committed row and its redelivered duplicate share it)
+      // Batch-wins iff _b_lsn > _lsn: at equal LSN the committed row wins,
+      // so a redelivered duplicate never supersedes its committed original
+      // (the two share wal_part, so no later tiebreak is needed)
       val cmp = table.readFilesSlim(snap0, candidateFiles)
         .join(keys, Seq("url"))
         .persist()
@@ -426,118 +298,21 @@ object CdcApply {
     } finally winners.unpersist()
   }
 
-  /** Merge-on-read apply: append the batch's LWW winners as new per-bucket
-    * delta files WITHOUT reading or rewriting existing data — per-batch cost is
-    * O(batch), not O(table). Readers resolve the row version with the highest
-    * `(_lsn, _wal_part)` across files ([[graft.lake.LakeTable.pages]]);
-    * compaction folds deltas back into one file per bucket.
-    *
-    * This is the write-optimized path for sustained high-rate ingest (the COW
-    * [[applyBatch]] is the read-optimized path): copy-on-write rewrites the
-    * whole touched bucket set every batch, so at 10^10-event scale its write
-    * amplification — not compute — caps throughput. Same exactly-once
-    * watermark, lineage, and schema-evolution semantics; batch bookkeeping
-    * rides in an `observe` on the write itself, so the whole apply is ONE
-    * Spark job plus footer-stat reads and the manifest commit.
-    *
-    * Reference analogue: Tenzir's import path appends store partitions and
-    * never rewrites them (`libtenzir/src/importer.cpp:35-106`); its
-    * lookup-table context resolves upserts/erases at probe time
-    * (`libtenzir/builtins/contexts/lookup_table.cpp:416-470`).
-    */
-  def applyBatchAppend(
-      table: LakeTable,
-      batch: DataFrame,
-      queryId: String,
-      batchId: Long,
-      createBuckets: Int = 64): ApplyStats = {
-
-    val snap0: Snapshot = phase("snapshot") { table.currentSnapshot.getOrElse {
-      table.create(userSchemaOf(batch.schema), createBuckets)
-    } }
-    if (snap0.watermarks.get(queryId).exists(_ >= batchId))
-      return ApplyStats(queryId, batchId, skipped = true, 0, 0, 0, -1, -1, snap0.version)
-    requireNoStagedGap(table, queryId, batchId)
-
-    val ev = batch.drop("seg")
-
-    val (mergedUser, evolved, schemaId, mergedFile) = evolveSchema(table, snap0, ev)
-
-    // LWW winners within the batch (map-side combine absorbs hot keys), then
-    // straight to file-schema rows — no table read, no join. Raw-batch
-    // bookkeeping (event count, LSN range — pre-dedup, like the COW path)
-    // observes below the aggregation; winner stats observe above it.
-    val rawObs = org.apache.spark.sql.Observation(s"cdc-raw-$queryId-$batchId")
-    val evObs = ev.observe(rawObs,
-      count(lit(1)).as("events"), min(col("lsn")).as("minLsn"), max(col("lsn")).as("maxLsn"))
-    val evCols = ev.columns
-    val winners = alignUser(
-      evObs.groupBy(col("url"))
-        .agg(max_by(struct(evCols.map(col).toIndexedSeq: _*), ordKey(lit(0))).as("w"))
-        .select(col("w.*")),
-      mergedUser)
-
-    val rows = toFileRows(winners, mergedUser)
-
-    // winner bookkeeping rides in the write job itself
-    val winObs = org.apache.spark.sql.Observation(s"cdc-win-$queryId-$batchId")
-    val observed = rows.observe(winObs,
-      count(lit(1)).as("winners"),
-      sum(when(col("_deleted"), 1L).otherwise(0L)).as("deletes"))
-
-    val newFiles = phase("write-job") { table.writeDataFiles(observed, schemaId, snap0.buckets,
-      nTasks = writeTasks(table, snap0.buckets)) }
-    val raw = phase("obs-get") { rawObs.get }; val win = winObs.get
-    // an empty LOCAL batch (in-memory relation, zero rows) executes no
-    // observed plan, so the metrics map can be EMPTY — treat as 0 events
-    val events = raw.getOrElse("events", 0L).asInstanceOf[Long]
-    if (events == 0L) {
-      val s = table.commit(snap0.copy(
-        watermarks = snap0.watermarks + (queryId -> batchId),
-        lineage = snap0.lineage :+ LineageEntry(queryId, batchId, 0, 0, 0, -1, -1, -1)),
-        appendedOnly = Some(Nil))
-      return ApplyStats(queryId, batchId, skipped = false, 0, 0, 0, -1, -1, s.version)
-    }
-    val deletes = win("deletes").asInstanceOf[Long]
-    val upserts = win("winners").asInstanceOf[Long] - deletes
-    val minLsn = raw("minLsn").asInstanceOf[Long]
-    val maxLsn = raw("maxLsn").asInstanceOf[Long]
-
-    val schemas =
-      if (evolved) snap0.schemas + (schemaId.toString -> mergedFile.json) else snap0.schemas
-    val committed = phase("commit") { table.commit(snap0.copy(
-      currentSchemaId = schemaId,
-      schemas = schemas,
-      files = snap0.files ++ newFiles,
-      watermarks = snap0.watermarks + (queryId -> batchId),
-      lineage = snap0.lineage :+
-        LineageEntry(queryId, batchId, events, upserts, deletes, minLsn, maxLsn, -1),
-      props = snap0.props + (LakeTable.NeedsResolveProp -> "true")),
-      appendedOnly = Some(newFiles)) }
-
-    ApplyStats(queryId, batchId, skipped = false, events, upserts, deletes,
-      minLsn, maxLsn, committed.version)
-  }
-
   /** Merge-on-read apply WITHOUT batch-level LWW dedup: every event row is
     * appended to the delta files as its own version; readers and compaction
     * already LWW-resolve across versions, so intra-batch losers are just
     * extra delta rows that the next compaction folds (the LSM/sorted-run
     * design — Paimon/Hudi-style changelog appends).
     *
-    * Why this exists: the deduped append's `max_by(struct(<whole row>))`
-    * hash-aggregate holds the full row (html bytes included) per key in the
-    * aggregation buffer — measured as THE memory-bandwidth/GC hot spot that
-    * capped 4→16-core scaling at ~0.55 (stage profile: identical scan+agg
-    * tasks take 1.8 s at 4 cores, 7+ s when 16 run concurrently). Skipping
-    * the aggregate turns the batch into scan → one bucket shuffle → sorted
-    * parquet append: no wide hash map, ~half the memory traffic, and the
-    * intra-batch dup factor (~1.2×) is paid in delta bytes instead —
+    * Why no dedup: a batch `max_by(struct(<whole row>))` holds the full row
+    * per key in its aggregation buffer, the hot spot that capped the removed
+    * deduped append's 4→16-core scaling (BASELINE.md, round 2). The raw
+    * append pays the intra-batch dup factor (~1.2×) in delta bytes instead,
     * amortized away by compaction.
     *
     * Lineage bookkeeping reports RAW event counts (upserts/deletes as
     * delivered); exactly-once watermark + schema evolution identical to
-    * [[applyBatchAppend]].
+    * [[applyBatchDv]].
     *
     * With `spanning = true` (mode `"l0"`) even the bucket shuffle goes away:
     * the batch is appended as L0 ''spanning'' files

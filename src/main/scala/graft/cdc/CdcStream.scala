@@ -29,19 +29,16 @@ object CdcStream {
     *
     * @param maxFilesPerTrigger bounds micro-batch size (backpressure knob; the
     *        reference's demand window analogue, `execution_node.cpp:44-67`)
-    * @param mode               `"cow"` (copy-on-write MERGE — superseded by
-    *                           `"dv"` as the read-optimized path),
-    *                           `"dv"` (deletion-vector merge: positional
-    *                           delete sidecars + winner appends;
-    *                           [[CdcApply.applyBatchDv]]),
-    *                           `"mor"` (merge-on-read append of batch-deduped
-    *                           LWW winners; [[CdcApply.applyBatchAppend]]), or
-    *                           `"morraw"` (LSM-style raw append, dedup wholly
-    *                           deferred to read/compaction;
-    *                           [[CdcApply.applyBatchAppendRaw]]), or `"l0"`
-    *                           (raw append as spanning L0 files — no bucket
-    *                           shuffle at all, bucket placement deferred to
-    *                           compaction; the write-optimized headline path)
+    * @param mode               the write-optimized append path
+    *                           ([[CdcApply.applyBatchAppendRaw]]): `"l0"`
+    *                           (the default: raw append as spanning L0 files —
+    *                           no bucket shuffle at all, bucket placement
+    *                           deferred to compaction) or `"morraw"` (raw
+    *                           append into bucket files); or the
+    *                           read-optimized `"dv"` (deletion-vector merge:
+    *                           positional delete sidecars + winner appends;
+    *                           [[CdcApply.applyBatchDv]], which needs a
+    *                           compacted base)
     * @param autoCompactFilesPerBucket when k > 0, after a batch commit any
     *        bucket holding more than k files triggers a partial compaction
     *        (bounded read amplification for long MOR streams; reference
@@ -88,7 +85,7 @@ object CdcStream {
       queryId: String = "cdc",
       maxFilesPerTrigger: Int = 8,
       createBuckets: Int = 64,
-      mode: String = "cow",
+      mode: String = "l0",
       autoCompactFilesPerBucket: Int = 0,
       expireKeepLast: Int = 0,
       onBatch: ApplyStats => Unit = _ => (),
@@ -109,9 +106,7 @@ object CdcStream {
     lazy val runTag = runIdentity(spark, checkpointDir)
     def wapId(batchId: Long): String = s"$queryId-b$batchId-$runTag"
     val apply: (DataFrame, Long) => ApplyStats = mode match {
-      case "cow" => (b, id) => CdcApply.applyBatch(table, b, queryId, id, createBuckets)
       case "dv" => (b, id) => CdcApply.applyBatchDv(table, b, queryId, id, createBuckets)
-      case "mor" => (b, id) => CdcApply.applyBatchAppend(table, b, queryId, id, createBuckets)
       case "morraw" => (b, id) => CdcApply.applyBatchAppendRaw(table, b, queryId, id,
         createBuckets, stageAs = audit.map(_ => wapId(id)))
       case "l0" => (b, id) =>

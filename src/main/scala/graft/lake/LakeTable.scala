@@ -655,7 +655,7 @@ class LakeTable(val spark: SparkSession, val root: String,
     readFiles(snap, snap.files, currentFileSchema(snap))
 
   /** LWW-resolve multi-version rows across files: keep the row with the
-    * highest `(_lsn, _wal_part)` per url. A no-op semantically for COW- or
+    * highest `(_lsn, _wal_part)` per url. A no-op semantically for dv- or
     * compaction-maintained tables (≤1 version per url); required for
     * merge-on-read delta files. `max_by` partial-aggregates map-side, so the
     * resolve is one shuffle on url — the MOR read amplification, amortized by
@@ -678,8 +678,8 @@ class LakeTable(val spark: SparkSession, val root: String,
 
   /** True when the snapshot may hold more than one version of a url (any
     * merge-on-read append since the last full compaction). Cleared by
-    * [[compact]]; COW-only tables never set it, so their reads skip the
-    * whole-table resolve shuffle and stay pure scans.
+    * [[compact]]; dv applies never set it, so dv-maintained tables skip the
+    * whole-table resolve shuffle and stay pure (masked) scans.
     *
     * Invariant (maintained by every writer in this codebase): the prop is
     * ABSENT only when no MOR/L0 append has happened since table creation or
@@ -1226,9 +1226,9 @@ class LakeTable(val spark: SparkSession, val root: String,
     * APPEND-ONLY staged delta (MOR/L0 batches — no base files removed) is
     * rebased onto the head: files appended, watermarks max-merged per query,
     * fresh lineage entries carried over, schema additions merged with
-    * id-clash detection. A staged REWRITE (compaction/COW — removes base
-    * files) cannot be rebased mechanically and is refused for re-audit, as
-    * is any conflicting schema/bucket change.
+    * id-clash detection. A staged REWRITE (one that removes base files,
+    * e.g. a compaction) cannot be rebased mechanically and is refused for
+    * re-audit, as is any conflicting schema/bucket change.
     */
   /** Whether `wapId`'s PENDING staged bytes match the head's published
     * breadcrumb — i.e. a crash landed between the publish commit and the

@@ -320,11 +320,15 @@ object MLQueries {
         .select(col("url"), col("lsn"), col("text"))
     }),
 
-    // The real engine end-to-end: envelope → 4 micro-batches → LakeTable
-    // MERGE commits → read back the final page table.
+    // The real engine across the write → read handoff on one table: L0
+    // appends (batches 0-1), a full compaction, then dv merges.
     "q_cdc_lww_table" -> ((s, d) =>
       replayLake(s, d, "graft-q-cdc-lww") { (table, batch, b) =>
-        CdcApply.applyBatch(table, batch, "q_cdc", b, createBuckets = 16)
+        if (b <= 1L) {
+          CdcApply.applyBatchAppendRaw(table, batch, "q_cdc", b, createBuckets = 16,
+            spanning = true)
+          if (b == 1L) table.compact() // L0 → buckets, single-version base for dv
+        } else CdcApply.applyBatchDv(table, batch, "q_cdc", b, createBuckets = 16)
       }.pages().select(col("url"), col("text"), col("lang"))),
 
     // deletion-vector merge under the same hard oracle: positional-delete

@@ -9,9 +9,10 @@ import graft.gen.{ChangeGen, GenConfig, GenEvent}
 import graft.lake.LakeTable
 
 /** Deletion-vector apply mode ([[CdcApply.applyBatchDv]]): positional delete
-  * sidecars + winner appends must converge to the same LWW state as every
-  * other mode, while maintaining the single-live-version invariant that lets
-  * reads skip the resolve shuffle entirely.
+  * sidecars + winner appends must converge to the same LWW state as the
+  * append path and the independent oracle, while maintaining the
+  * single-live-version invariant that lets reads skip the resolve shuffle
+  * entirely.
   */
 class CdcDvSpec extends SparkSpec {
   import spark.implicits._
@@ -54,6 +55,13 @@ class CdcDvSpec extends SparkSpec {
     assert(dupes == 0, s"$dupes urls hold more than one unmasked version")
   }
 
+  test("dv replay with different batch boundaries reaches the same state") {
+    val t1 = new LakeTable(spark, tmpDir()); replayDv(t1, segGroups(allEvents, 3), "a")
+    val t2 = new LakeTable(spark, tmpDir()); replayDv(t2, segGroups(allEvents, 20), "b")
+    assert(pagesMap(t1.pages()) == golden)
+    assert(pagesMap(t2.pages()) == golden)
+  }
+
   test("out-of-order replay (stale late batches) reaches the same state") {
     // apply the lsn windows in REVERSE: every batch after the first is
     // entirely stale vs the committed state, so the loser path (batch rows
@@ -93,6 +101,12 @@ class CdcDvSpec extends SparkSpec {
     replayDv(table, segGroups(allEvents, 8), "q")
     val snap = table.currentSnapshot.get
     val url = golden.keysIterator.next()
+    // manifest pruning: the lookup touches at most the files of one bucket
+    val h = LakeTable.urlHash(url)
+    val b = LakeTable.bucketOf(h, snap.buckets)
+    val planned = table.planFiles(snap, buckets = Some(Set(b)), urlHash = Some(h))
+    assert(planned.nonEmpty)
+    assert(planned.size < snap.files.size, "pruning must cut the file list")
     val row = table.lookupUrl(snap, url).collect()
     assert(row.length == 1 && row(0).getAs[String]("text") == golden(url)._1)
   }
@@ -106,6 +120,19 @@ class CdcDvSpec extends SparkSpec {
     assert(snap.dvFiles.isEmpty, "full compaction must clear the DV list")
     assert(pagesMap(table.pages(snap)) == golden)
     // time travel: the pre-compaction snapshot still reads masked
+    assert(pagesMap(table.pages(table.snapshotAt(before.version))) == golden)
+  }
+
+  test("dv compaction bounds files per bucket; tombstone GC drops deletes") {
+    val table = new LakeTable(spark, tmpDir())
+    replayDv(table, segGroups(allEvents, 2), "q") // many small commits → many files
+    val before = table.currentSnapshot.get
+    val maxLsn = allEvents.map(_.lsn).max
+    val snap = table.compact(maxFilesPerBucket = 1, gcTombstonesBelowLsn = Some(maxLsn + 1))
+    assert(pagesMap(table.pages(snap)) == golden)
+    assert(snap.files.groupBy(_.bucket).values.forall(_.size == 1))
+    assert(table.scanRaw(snap).filter(col("_deleted")).count() == 0)
+    // time travel: the pre-compaction snapshot still reads identically
     assert(pagesMap(table.pages(table.snapshotAt(before.version))) == golden)
   }
 
@@ -321,14 +348,18 @@ class CdcDvSpec extends SparkSpec {
     assert(schema.fieldNames.contains("fetch_status"))
     val rows = table.pages().collect()
       .map(r => r.getAs[String]("url") ->
-        (r.getAs[String]("text"), r.getAs[Long]("score"))).toMap
-    assert(rows == Map("https://s/1" -> ("t1b", 5L), "https://s/2" -> ("t2", 123456789012L)))
+        (r.getAs[String]("text"), r.getAs[Long]("score"),
+          Option(r.getAs[Integer]("fetch_status")).map(_.toInt)))
+      .toMap
+    assert(rows == Map(
+      "https://s/1" -> ("t1b", 5L, Some(304)),
+      "https://s/2" -> ("t2", 123456789012L, Some(200))))
   }
 
   test("dv apply refuses a multi-version (merge-on-read) base") {
     val table = new LakeTable(spark, tmpDir())
     val g = segGroups(allEvents, 8)
-    CdcApply.applyBatchAppend(table, spark.createDataset(g.head).toDF(), "q", 0L,
+    CdcApply.applyBatchAppendRaw(table, spark.createDataset(g.head).toDF(), "q", 0L,
       createBuckets = 16)
     val e = intercept[IllegalArgumentException] {
       CdcApply.applyBatchDv(table, spark.createDataset(g(1)).toDF(), "q", 1L,

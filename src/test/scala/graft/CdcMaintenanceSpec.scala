@@ -20,7 +20,7 @@ class CdcMaintenanceSpec extends SparkSpec {
   private def segGroups(events: Seq[GenEvent], segsPerBatch: Int): Seq[Seq[GenEvent]] =
     events.groupBy(_.seg / segsPerBatch).toSeq.sortBy(_._1).map(_._2)
 
-  test("raw append (morraw) converges to the same golden state as deduped MOR") {
+  test("raw append (morraw) converges to the golden state; lineage counts delivered events") {
     val table = new LakeTable(spark, tmpDir())
     segGroups(allEvents, 6).zipWithIndex.foreach { case (g, i) =>
       CdcApply.applyBatchAppendRaw(table, spark.createDataset(g).toDF(), "r", i.toLong,
@@ -123,11 +123,11 @@ class CdcMaintenanceSpec extends SparkSpec {
       GenEvent(op, lsn, (lsn % 4).toInt, url, ts,
         if (op == "D") null else text.getBytes("UTF-8"),
         if (op == "D") null else text, if (op == "D") null else "en", 0L)
-    CdcApply.applyBatch(table, spark.createDataset(Seq(
+    CdcApply.applyBatchDv(table, spark.createDataset(Seq(
       ev("I", 1, "u1", "a1"), ev("I", 2, "u2", "b1"), ev("I", 3, "u3", "c1")
     )).toDF(), "c", 0L, createBuckets = 4)
     val vFrom = table.currentSnapshot.get.version
-    CdcApply.applyBatch(table, spark.createDataset(Seq(
+    CdcApply.applyBatchDv(table, spark.createDataset(Seq(
       ev("U", 10, "u2", "b2"), ev("D", 11, "u3", null), ev("I", 12, "u4", "d1")
     )).toDF(), "c", 1L, createBuckets = 4)
     val vTo = table.currentSnapshot.get.version
@@ -148,7 +148,7 @@ class CdcMaintenanceSpec extends SparkSpec {
     val table = new LakeTable(spark, tmpDir())
     val groups = segGroups(allEvents, 3)
     groups.zipWithIndex.foreach { case (g, i) =>
-      CdcApply.applyBatch(table, spark.createDataset(g).toDF(), "m", i.toLong,
+      CdcApply.applyBatchDv(table, spark.createDataset(g).toDF(), "m", i.toLong,
         createBuckets = 8)
       if (i == 1) () // vMid captured below via lineage-independent snapshot read
     }
@@ -188,7 +188,7 @@ class CdcMaintenanceSpec extends SparkSpec {
     assert(table.changes(vBefore, vAfter).isEmpty)
   }
 
-  test("needs_resolve: set by appends, cleared by full compaction; COW never sets it") {
+  test("needs_resolve: set by appends, cleared by full compaction; dv never sets it") {
     val mor = new LakeTable(spark, tmpDir())
     segGroups(allEvents, 8).zipWithIndex.foreach { case (g, i) =>
       CdcApply.applyBatchAppendRaw(mor, spark.createDataset(g).toDF(), "q", i.toLong,
@@ -198,12 +198,12 @@ class CdcMaintenanceSpec extends SparkSpec {
     mor.compact(maxFilesPerBucket = 1)
     assert(!mor.needsResolve(mor.currentSnapshot.get))
     assert(pagesMap(mor.pages()) == golden) // resolve-free read is correct
-    val cow = new LakeTable(spark, tmpDir())
+    val dv = new LakeTable(spark, tmpDir())
     segGroups(allEvents, 8).zipWithIndex.foreach { case (g, i) =>
-      CdcApply.applyBatch(cow, spark.createDataset(g).toDF(), "q", i.toLong, createBuckets = 8)
+      CdcApply.applyBatchDv(dv, spark.createDataset(g).toDF(), "q", i.toLong, createBuckets = 8)
     }
-    assert(!cow.needsResolve(cow.currentSnapshot.get))
-    assert(pagesMap(cow.pages()) == golden)
+    assert(!dv.needsResolve(dv.currentSnapshot.get))
+    assert(pagesMap(dv.pages()) == golden)
   }
 
   test("auto-compaction bounds delta files per bucket during a streaming tail") {
@@ -402,7 +402,7 @@ class CdcMaintenanceSpec extends SparkSpec {
     consume() // nothing committed yet: no-op
     assert(cursor == 0L && polls == 0)
     segGroups(allEvents, 4).zipWithIndex.foreach { case (g, i) =>
-      CdcApply.applyBatch(table, spark.createDataset(g).toDF(), "f", i.toLong,
+      CdcApply.applyBatchDv(table, spark.createDataset(g).toDF(), "f", i.toLong,
         createBuckets = 8)
       if (i % 2 == 1) consume() // consume every other commit (multi-version diffs)
     }
@@ -417,11 +417,11 @@ class CdcMaintenanceSpec extends SparkSpec {
   test("changes withPreimages: updates split into pre/post rows matching the two states") {
     val table = new LakeTable(spark, tmpDir())
     val groups = segGroups(allEvents, 8)
-    CdcApply.applyBatch(table, spark.createDataset(groups.head).toDF(), "pi", 0L,
+    CdcApply.applyBatchDv(table, spark.createDataset(groups.head).toDF(), "pi", 0L,
       createBuckets = 8)
     val v1 = table.currentSnapshot.get.version
     groups.tail.zipWithIndex.foreach { case (g, i) =>
-      CdcApply.applyBatch(table, spark.createDataset(g).toDF(), "pi", (i + 1).toLong,
+      CdcApply.applyBatchDv(table, spark.createDataset(g).toDF(), "pi", (i + 1).toLong,
         createBuckets = 8)
     }
     val v2 = table.currentSnapshot.get.version
@@ -453,7 +453,7 @@ class CdcMaintenanceSpec extends SparkSpec {
     var cursor = 0L
     var view: Option[org.apache.spark.sql.DataFrame] = None
     segGroups(allEvents, 6).zipWithIndex.foreach { case (g, i) =>
-      CdcApply.applyBatch(table, spark.createDataset(g).toDF(), "mv", i.toLong,
+      CdcApply.applyBatchDv(table, spark.createDataset(g).toDF(), "mv", i.toLong,
         createBuckets = 8)
       cursor = CdcStream.followChanges(table, cursor, withPreimages = true) {
         (df, from, _) =>
@@ -522,7 +522,7 @@ class CdcMaintenanceSpec extends SparkSpec {
     val table = new LakeTable(spark, tmpDir())
     val groups = segGroups(allEvents, 6)
     groups.take(2).zipWithIndex.foreach { case (g, i) =>
-      CdcApply.applyBatch(table, spark.createDataset(g).toDF(), "fp", i.toLong,
+      CdcApply.applyBatchDv(table, spark.createDataset(g).toDF(), "fp", i.toLong,
         createBuckets = 8)
     }
     var cursor = 0L
@@ -542,7 +542,7 @@ class CdcMaintenanceSpec extends SparkSpec {
     val pinned = cursor
     // follower lags: 4 more commits + maintenance that would expire v(pinned)
     groups.drop(2).zipWithIndex.foreach { case (g, i) =>
-      CdcApply.applyBatch(table, spark.createDataset(g).toDF(), "fp", (i + 2).toLong,
+      CdcApply.applyBatchDv(table, spark.createDataset(g).toDF(), "fp", (i + 2).toLong,
         createBuckets = 8)
     }
     table.expireSnapshots(keepLast = 1)
@@ -592,7 +592,7 @@ class CdcMaintenanceSpec extends SparkSpec {
     val table = new LakeTable(spark, tmpDir())
     val groups = segGroups(allEvents, 6)
     groups.take(2).zipWithIndex.foreach { case (g, i) =>
-      CdcApply.applyBatch(table, spark.createDataset(g).toDF(), "fc", i.toLong,
+      CdcApply.applyBatchDv(table, spark.createDataset(g).toDF(), "fc", i.toLong,
         createBuckets = 8)
     }
     var downstream = Map.empty[String, String]
@@ -613,7 +613,7 @@ class CdcMaintenanceSpec extends SparkSpec {
     // the world moves on: 4 more commits + retention that would collect the
     // old base were it not pinned under follower-c.prev
     groups.drop(2).zipWithIndex.foreach { case (g, i) =>
-      CdcApply.applyBatch(table, spark.createDataset(g).toDF(), "fc", (i + 2).toLong,
+      CdcApply.applyBatchDv(table, spark.createDataset(g).toDF(), "fc", (i + 2).toLong,
         createBuckets = 8)
     }
     table.expireSnapshots(keepLast = 1)
@@ -628,7 +628,7 @@ class CdcMaintenanceSpec extends SparkSpec {
     val table = new LakeTable(spark, tmpDir())
     val groups = segGroups(allEvents, 6)
     groups.take(2).zipWithIndex.foreach { case (g, i) =>
-      CdcApply.applyBatch(table, spark.createDataset(g).toDF(), "fb", i.toLong,
+      CdcApply.applyBatchDv(table, spark.createDataset(g).toDF(), "fb", i.toLong,
         createBuckets = 8)
     }
     var cursor = 0L
@@ -653,7 +653,7 @@ class CdcMaintenanceSpec extends SparkSpec {
     assert(consume() == 0) // normal incremental poll (v0 empty-creation base)
     val stale = cursor
     groups.drop(2).zipWithIndex.foreach { case (g, i) =>
-      CdcApply.applyBatch(table, spark.createDataset(g).toDF(), "fb", (i + 2).toLong,
+      CdcApply.applyBatchDv(table, spark.createDataset(g).toDF(), "fb", (i + 2).toLong,
         createBuckets = 8)
     }
     table.expireSnapshots(keepLast = 1) // unpinned: the cursor version dies

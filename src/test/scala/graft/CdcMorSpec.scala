@@ -8,8 +8,9 @@ import graft.cdc.{CdcApply, CdcStream}
 import graft.gen.{ChangeGen, GenConfig, GenEvent}
 import graft.lake.LakeTable
 
-/** Merge-on-read apply path: append-only delta files + LWW resolve at read.
-  * Must reach byte-identical state to the COW path and the independent oracle.
+/** Merge-on-read apply path (raw append, bucketed `morraw` and L0 `l0`):
+  * append-only delta files + LWW resolve at read. Must reach byte-identical
+  * state to the dv path and the independent oracle.
   */
 class CdcMorSpec extends SparkSpec {
   import spark.implicits._
@@ -20,7 +21,7 @@ class CdcMorSpec extends SparkSpec {
 
   private def replayMor(table: LakeTable, groups: Seq[Seq[GenEvent]], queryId: String): Unit =
     groups.zipWithIndex.foreach { case (g, i) =>
-      CdcApply.applyBatchAppend(table, spark.createDataset(g).toDF(), queryId, i.toLong,
+      CdcApply.applyBatchAppendRaw(table, spark.createDataset(g).toDF(), queryId, i.toLong,
         createBuckets = 16)
     }
 
@@ -39,13 +40,13 @@ class CdcMorSpec extends SparkSpec {
     assert(lineageBatches == segGroups(allEvents, 8).indices.map(_.toLong).toSet)
   }
 
-  test("MOR and COW reach identical final state from the same WAL") {
+  test("morraw and dv reach identical final state from the same WAL") {
     val mor = new LakeTable(spark, tmpDir()); replayMor(mor, segGroups(allEvents, 5), "m")
-    val cow = new LakeTable(spark, tmpDir())
+    val dv = new LakeTable(spark, tmpDir())
     segGroups(allEvents, 5).zipWithIndex.foreach { case (g, i) =>
-      CdcApply.applyBatch(cow, spark.createDataset(g).toDF(), "c", i.toLong, createBuckets = 16)
+      CdcApply.applyBatchDv(dv, spark.createDataset(g).toDF(), "d", i.toLong, createBuckets = 16)
     }
-    assert(pagesMap(mor.pages()) == pagesMap(cow.pages()))
+    assert(pagesMap(mor.pages()) == pagesMap(dv.pages()))
     assert(pagesMap(mor.pages()) == golden)
   }
 
@@ -54,7 +55,7 @@ class CdcMorSpec extends SparkSpec {
     val groups = segGroups(allEvents, 8)
     replayMor(table, groups, "q")
     val before = table.currentSnapshot.get
-    val st = CdcApply.applyBatchAppend(table, spark.createDataset(groups(1)).toDF(), "q", 1L)
+    val st = CdcApply.applyBatchAppendRaw(table, spark.createDataset(groups(1)).toDF(), "q", 1L)
     assert(st.skipped)
     assert(table.currentSnapshot.get.version == before.version)
     assert(pagesMap(table.pages()) == golden)
@@ -71,7 +72,7 @@ class CdcMorSpec extends SparkSpec {
     val b1 = Seq(ev("D", 10, 1, "https://a/x", null))
     val b2 = Seq(ev("U", 5, 2, "https://a/x", "stale"), ev("U", 11, 1, "https://a/y", "w2"))
     Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
-      CdcApply.applyBatchAppend(table, spark.createDataset(b).toDF(), "q", i.toLong,
+      CdcApply.applyBatchAppendRaw(table, spark.createDataset(b).toDF(), "q", i.toLong,
         createBuckets = 4)
     }
     val rows = table.pages().collect()
@@ -291,18 +292,18 @@ class CdcMorSpec extends SparkSpec {
     ChangeGen.writeWal(spark, cfg, walDir)
     val table = new LakeTable(spark, s"$work/lake")
     CdcStream.start(spark, walDir, table, s"$work/ckpt", queryId = "s",
-      maxFilesPerTrigger = 6, createBuckets = 16, mode = "mor").awaitTermination()
+      maxFilesPerTrigger = 6, createBuckets = 16, mode = "morraw").awaitTermination()
     assert(pagesMap(table.pages()) == golden)
     val v = table.currentSnapshot.get.version
     // second run: nothing new → same version
     CdcStream.start(spark, walDir, table, s"$work/ckpt", queryId = "s",
-      maxFilesPerTrigger = 6, createBuckets = 16, mode = "mor").awaitTermination()
+      maxFilesPerTrigger = 6, createBuckets = 16, mode = "morraw").awaitTermination()
     assert(table.currentSnapshot.get.version == v)
     // wipe checkpoint: all batches replay as skips, state unchanged
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$work/ckpt"))
     var skips = 0
     CdcStream.start(spark, walDir, table, s"$work/ckpt2", queryId = "s",
-      maxFilesPerTrigger = 6, createBuckets = 16, mode = "mor",
+      maxFilesPerTrigger = 6, createBuckets = 16, mode = "morraw",
       onBatch = st => if (st.skipped) skips += 1).awaitTermination()
     assert(skips > 0)
     assert(pagesMap(table.pages()) == golden)

@@ -25,6 +25,33 @@ class CdcStreamSpec extends SparkSpec {
     assert(lin.map(_.events).sum >= cfg.events)
   }
 
+  test("start without a mode writes L0 spanning files until a compaction") {
+    val small = GenConfig(events = 1000, segmentSize = 250)
+    val wal = tmpDir("wal"); val ckpt = tmpDir("ckpt")
+    ChangeGen.writeWal(spark, small, wal)
+    val table = new LakeTable(spark, tmpDir("lake"))
+    CdcStream.start(spark, wal, table, ckpt, maxFilesPerTrigger = 2, createBuckets = 4)
+      .awaitTermination()
+    val snap = table.currentSnapshot.get
+    assert(snap.files.nonEmpty && snap.files.forall(_.bucket < 0),
+      s"buckets ${snap.files.map(_.bucket).distinct}")
+    assert(pagesMap(table.pages()) == expectedMap(ChangeGen.events(spark, small).collect().toSeq))
+  }
+
+  test("the removed cow and mor modes are rejected by name before any query starts") {
+    val wal = tmpDir("wal"); val ckpt = tmpDir("ckpt")
+    ChangeGen.writeWal(spark, GenConfig(events = 500, segmentSize = 250), wal)
+    val table = new LakeTable(spark, tmpDir("lake"))
+    Seq("cow", "mor").foreach { m =>
+      val e = intercept[IllegalArgumentException](
+        CdcStream.start(spark, wal, table, ckpt, queryId = s"gone-$m", mode = m))
+      assert(e.getMessage.contains(s"'$m'"), e.getMessage)
+    }
+    assert(spark.streams.active.forall(q => !q.name.startsWith("gone-")))
+    assert(table.currentSnapshot.isEmpty)
+    assert(new java.io.File(ckpt).list().isEmpty)
+  }
+
   test("WAP run identity lives IN the checkpoint: resume keeps it, wipe mints anew") {
     val wal = tmpDir("wal"); val ckpt = tmpDir("ckpt"); val quar = tmpDir("quar")
     ChangeGen.writeWal(spark, GenConfig(events = 1000, segmentSize = 500), wal)

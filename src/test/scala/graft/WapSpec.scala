@@ -219,32 +219,37 @@ class WapSpec extends SparkSpec {
     table.dropStaged("gc")
   }
 
-  test("cross-mode seams: COW refuses un-flushed L0 files and staged-gap commits") {
+  test("cross-mode seams: dv refuses un-flushed L0 files and staged-gap commits") {
     val table = new LakeTable(spark, tmpDir())
     val groups = segGroups(allEvents, 6)
-    // L0 spanning append, then a COW apply without a flush: the spanning
-    // file's rows would be duplicated into bucket files while the file
-    // itself is kept — refused until compaction flushes it
+    // L0 spanning append, then a dv apply without a flush: the spanning
+    // file is a second version of every url it holds, which the dv mask
+    // cannot account for — refused until compaction flushes it
     CdcApply.applyBatchAppendRaw(table, spark.createDataset(groups(0)).toDF(), "m", 0L,
       createBuckets = 16, spanning = true)
+    assert(table.currentSnapshot.get.files.exists(_.bucket < 0))
     val e1 = intercept[IllegalArgumentException](
-      CdcApply.applyBatch(table, spark.createDataset(groups(1)).toDF(), "m", 1L,
+      CdcApply.applyBatchDv(table, spark.createDataset(groups(1)).toDF(), "m", 1L,
         createBuckets = 16))
-    assert(e1.getMessage.contains("L0"))
+    assert(e1.getMessage.contains("run compact()"))
     table.compact(maxFilesPerBucket = 1) // full flush: L0 → buckets
-    CdcApply.applyBatch(table, spark.createDataset(groups(1)).toDF(), "m", 1L,
+    CdcApply.applyBatchDv(table, spark.createDataset(groups(1)).toDF(), "m", 1L,
       createBuckets = 16)
     // the WAP ordering guard holds across MODES too: staged batch 2 (raw),
-    // then a COW commit of batch 3 under the same query — refused
+    // then a dv commit of batch 3 under the same query — refused
     CdcApply.applyBatchAppendRaw(table, spark.createDataset(groups(2)).toDF(), "m", 2L,
       createBuckets = 16, stageAs = Some("gap2"))
     val e2 = intercept[IllegalStateException](
-      CdcApply.applyBatch(table, spark.createDataset(groups(3)).toDF(), "m", 3L,
+      CdcApply.applyBatchDv(table, spark.createDataset(groups(3)).toDF(), "m", 3L,
         createBuckets = 16))
     assert(e2.getMessage.contains("publish or drop"))
+    // the published raw batch leaves the table multi-version: dv needs a
+    // full compaction before its next batch
     table.publishStaged("gap2")
+    assert(table.needsResolve(table.currentSnapshot.get))
+    table.compact(maxFilesPerBucket = 1)
     (3 until groups.size).foreach { i =>
-      CdcApply.applyBatch(table, spark.createDataset(groups(i)).toDF(), "m", i.toLong,
+      CdcApply.applyBatchDv(table, spark.createDataset(groups(i)).toDF(), "m", i.toLong,
         createBuckets = 16)
     }
     assert(pagesMap(table.pages()) == golden)

@@ -8,6 +8,11 @@ import graft.cdc.CdcApply
 import graft.gen.{ChangeGen, GenConfig, GenEvent}
 import graft.lake.LakeTable
 
+/** Raw-append apply ([[CdcApply.applyBatchAppendRaw]]): bucketed (`morraw`)
+  * and spanning L0 (`l0`) appends resolve last-writer-wins on read, so
+  * tombstones, schema evolution and manifest pruning must hold without any
+  * merge at write time. The deletion-vector path has its own spec.
+  */
 class CdcApplySpec extends SparkSpec {
   import spark.implicits._
 
@@ -16,45 +21,10 @@ class CdcApplySpec extends SparkSpec {
     ChangeGen.events(spark, cfg).collect().toSeq
   lazy val golden: Map[String, (String, String, Long, Int)] = expectedMap(allEvents)
 
-  /** Apply events grouped into batches by a segment-grouping function. */
-  private def replay(table: LakeTable, groups: Seq[Seq[GenEvent]], queryId: String): Unit =
-    groups.zipWithIndex.foreach { case (g, i) =>
-      CdcApply.applyBatch(table, spark.createDataset(g).toDF(), queryId, i.toLong, createBuckets = 16)
-    }
-
   private def segGroups(events: Seq[GenEvent], segsPerBatch: Int): Seq[Seq[GenEvent]] =
     events.groupBy(_.seg / segsPerBatch).toSeq.sortBy(_._1).map(_._2)
 
-  test("full replay converges to the independently computed final state") {
-    val table = new LakeTable(spark, tmpDir())
-    replay(table, segGroups(allEvents, 8), "q1")
-    val got = pagesMap(table.pages())
-    assert(got.size == golden.size, s"rows ${got.size} vs expected ${golden.size}")
-    assert(got == golden) // byte-identical text/lang/ts/html per url
-  }
-
-  test("replay with different batch boundaries reaches the same state") {
-    val t1 = new LakeTable(spark, tmpDir()); replay(t1, segGroups(allEvents, 3), "a")
-    val t2 = new LakeTable(spark, tmpDir()); replay(t2, segGroups(allEvents, 20), "b")
-    assert(pagesMap(t1.pages()) == golden)
-    assert(pagesMap(t2.pages()) == golden)
-  }
-
-  test("re-applying a committed batch is skipped (exactly-once watermark)") {
-    val table = new LakeTable(spark, tmpDir())
-    val groups = segGroups(allEvents, 8)
-    replay(table, groups, "q")
-    val before = table.currentSnapshot.get
-    // replay an old batch id — must be a no-op
-    val st = CdcApply.applyBatch(table, spark.createDataset(groups(1)).toDF(), "q", 1L)
-    assert(st.skipped)
-    val after = table.currentSnapshot.get
-    assert(after.version == before.version)
-    assert(pagesMap(table.pages()) == golden)
-  }
-
   test("stale update arriving after a delete does not resurrect the row (tombstone)") {
-    val table = new LakeTable(spark, tmpDir())
     val ts = new Timestamp(1704067200000L)
     def ev(op: String, lsn: Long, part: Int, url: String, text: String): GenEvent =
       GenEvent(op, lsn, part, url,
@@ -65,15 +35,19 @@ class CdcApplySpec extends SparkSpec {
     val b0 = Seq(ev("I", 1, 0, "https://a/x", "v1"), ev("I", 2, 0, "https://a/y", "w1"))
     val b1 = Seq(ev("D", 10, 1, "https://a/x", null))
     val b2 = Seq(ev("U", 5, 2, "https://a/x", "stale"), ev("U", 11, 1, "https://a/y", "w2"))
-    Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
-      CdcApply.applyBatch(table, spark.createDataset(b).toDF(), "q", i.toLong, createBuckets = 4)
+    for (spanning <- Seq(false, true)) {
+      val table = new LakeTable(spark, tmpDir())
+      Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
+        CdcApply.applyBatchAppendRaw(table, spark.createDataset(b).toDF(), "q", i.toLong,
+          createBuckets = 4, spanning = spanning)
+      }
+      val rows = table.pages().collect()
+        .map(r => r.getAs[String]("url") -> r.getAs[String]("text")).toMap
+      assert(rows == Map("https://a/y" -> "w2"), s"spanning=$spanning") // u1 stays deleted
     }
-    val rows = table.pages().collect().map(r => r.getAs[String]("url") -> r.getAs[String]("text")).toMap
-    assert(rows == Map("https://a/y" -> "w2")) // u1 stays deleted, u2 updated
   }
 
   test("schema evolution: added column and widened type apply mid-stream") {
-    val table = new LakeTable(spark, tmpDir())
     val ts = new Timestamp(1704067200000L)
     val b0: DataFrame = Seq(
       ("I", 1L, 0, "https://s/1", ts, "t1", "en", 7)
@@ -83,24 +57,32 @@ class CdcApplySpec extends SparkSpec {
       ("I", 2L, 0, "https://s/2", ts, "t2", "en", 123456789012L, 200),
       ("U", 3L, 0, "https://s/1", ts, "t1b", "en", 5L, 304)
     ).toDF("op", "lsn", "wal_part", "url", "warc_ts", "text", "lang", "score", "fetch_status")
-    CdcApply.applyBatch(table, b0, "q", 0L, createBuckets = 4)
-    CdcApply.applyBatch(table, b1, "q", 1L, createBuckets = 4)
-    val snap = table.currentSnapshot.get
-    val schema = table.currentFileSchema(snap)
-    assert(schema("score").dataType == org.apache.spark.sql.types.LongType)
-    assert(schema.fieldNames.contains("fetch_status"))
-    val rows = table.pages().collect()
-      .map(r => r.getAs[String]("url") ->
-        (r.getAs[String]("text"), r.getAs[Long]("score"), Option(r.getAs[Integer]("fetch_status")).map(_.toInt)))
-      .toMap
-    assert(rows == Map(
-      "https://s/1" -> ("t1b", 5L, Some(304)),
-      "https://s/2" -> ("t2", 123456789012L, Some(200))))
+    for (spanning <- Seq(false, true)) {
+      val table = new LakeTable(spark, tmpDir())
+      CdcApply.applyBatchAppendRaw(table, b0, "q", 0L, createBuckets = 4, spanning = spanning)
+      CdcApply.applyBatchAppendRaw(table, b1, "q", 1L, createBuckets = 4, spanning = spanning)
+      val schema = table.currentFileSchema(table.currentSnapshot.get)
+      assert(schema("score").dataType == org.apache.spark.sql.types.LongType)
+      assert(schema.fieldNames.contains("fetch_status"))
+      val rows = table.pages().collect()
+        .map(r => r.getAs[String]("url") ->
+          (r.getAs[String]("text"), r.getAs[Long]("score"),
+            Option(r.getAs[Integer]("fetch_status")).map(_.toInt)))
+        .toMap
+      assert(rows == Map(
+        "https://s/1" -> ("t1b", 5L, Some(304)),
+        "https://s/2" -> ("t2", 123456789012L, Some(200))), s"spanning=$spanning")
+    }
   }
 
   test("manifest pruning: point lookup touches at most the files of one bucket") {
+    // bucketed appends: every file belongs to one bucket, so a lookup plans
+    // only that bucket's files and resolves the url's versions among them
     val table = new LakeTable(spark, tmpDir())
-    replay(table, segGroups(allEvents, 8), "q")
+    segGroups(allEvents, 8).zipWithIndex.foreach { case (g, i) =>
+      CdcApply.applyBatchAppendRaw(table, spark.createDataset(g).toDF(), "q", i.toLong,
+        createBuckets = 16)
+    }
     val snap = table.currentSnapshot.get
     val url = golden.keysIterator.next()
     val h = LakeTable.urlHash(url)
@@ -110,18 +92,5 @@ class CdcApplySpec extends SparkSpec {
     assert(planned.size < snap.files.size, "pruning must cut the file list")
     val row = table.lookupUrl(snap, url).collect()
     assert(row.length == 1 && row(0).getAs[String]("text") == golden(url)._1)
-  }
-
-  test("compaction preserves state and bounds files per bucket; tombstone GC drops deletes") {
-    val table = new LakeTable(spark, tmpDir())
-    replay(table, segGroups(allEvents, 2), "q") // many small commits → many files
-    val before = table.currentSnapshot.get
-    val maxLsn = allEvents.map(_.lsn).max
-    val snap = table.compact(maxFilesPerBucket = 1, gcTombstonesBelowLsn = Some(maxLsn + 1))
-    assert(pagesMap(table.pages(snap)) == golden)
-    assert(snap.files.groupBy(_.bucket).values.forall(_.size == 1))
-    assert(table.scanRaw(snap).filter(org.apache.spark.sql.functions.col("_deleted")).count() == 0)
-    // time travel: the pre-compaction snapshot still reads identically
-    assert(pagesMap(table.pages(table.snapshotAt(before.version))) == golden)
   }
 }

@@ -203,11 +203,13 @@ object CdcApply {
     if (snap0.watermarks.get(queryId).exists(_ >= batchId))
       return ApplyStats(queryId, batchId, skipped = true, 0, 0, 0, -1, -1, snap0.version)
     requireNoStagedGap(table, queryId, batchId)
+    // L0 first: every spanning append also sets needs_resolve, so checked
+    // second its more specific message could never be shown
+    require(!snap0.files.exists(_.bucket < 0),
+      "table has un-flushed L0 spanning files — run compact() before deletion-vector applies")
     require(!table.needsResolve(snap0),
       "dv apply requires a single-version base (un-compacted merge-on-read deltas " +
         "present) — run compact() first")
-    require(!snap0.files.exists(_.bucket < 0),
-      "table has un-flushed L0 spanning files — run compact() before deletion-vector applies")
 
     val ev = batch.drop("seg")
     val (mergedUser, evolved, schemaId, mergedFile) = evolveSchema(table, snap0, ev)

@@ -477,20 +477,6 @@ class LakeTable(val spark: SparkSession, val root: String,
     }
   }
 
-  /** Point lookup through the chunked planner — the cold-start fast path:
-    * no full manifest fold, no full file list in driver heap. Semantics
-    * identical to [[lookupUrl]] at the same version.
-    */
-  def lookupUrlChunked(version: Long, url: String): DataFrame = {
-    val base = ManifestCodec.fromJson(readString(versionPath(version)))
-    val h = LakeTable.urlHash(url)
-    val b = LakeTable.bucketOf(h, base.buckets)
-    val files = planFilesChunked(version, Set(b), urlHash = Some(h))
-    val hit = readFiles(base, files, currentFileSchema(base))
-      .filter(col("url") === lit(url))
-    resolveIfNeeded(base, hit).filter(!col("_deleted"))
-  }
-
   /** Full per-batch lineage history from the append-only commit log (oldest
     * first) — unlike `currentSnapshot.lineage` this is not trimmed to the
     * retention tail and is not lost when `expireSnapshots` deletes old
@@ -940,35 +926,39 @@ class LakeTable(val spark: SparkSession, val root: String,
     graft.cdc.CdcApply.phase("footer-stats") { collectDataFiles(dir, schemaId) }
   }
 
-  /** The parquet settings of a lake file, decided by its tier; reads need
-    * none, since parquet records the codec per column chunk.
+  /** The parquet settings of a lake file; reads need none, since parquet
+    * records the codec per column chunk.
     *
-    * - '''Compaction output''' (`compacted`) is long-lived and carries most
-    *   of the bytes a stream writes: zstd level 1, about 0.65× snappy's
-    *   column bytes on the lake's rows (level 3 compresses no better at
-    *   twice the CPU; BASELINE.md, "Tiered lake codec").
-    *   It also carries a parquet bloom filter on `url`. Files are sorted by
-    *   `_urlhash`, so url's row-group min/max stats cannot prune a point
-    *   lookup; the bloom lets parquet-mr skip row groups on the pushed
-    *   `url = x` equality, the row-group complement of the manifest's
-    *   file-level pruning (reference analogue: per-partition bloom
-    *   synopses, synopsis.cpp). The adaptive filter keeps the smallest of
-    *   its candidates, halving from 1 MiB, that still holds the row group's
-    *   distinct urls at fpp 1%; ten candidates reach down to 2 KiB, where
-    *   parquet's default five stop at 64 KiB, many times what a compacted
-    *   file of a few thousand rows needs.
-    * - '''Appends''' (spanning L0 files, bucketed deltas, DV sidecars) are
-    *   on the apply hot path: snappy and no bloom filter. zstd there cost
-    *   the l0 path a third of its throughput (BASELINE.md, codec sweep).
+    * - '''One codec for every file''': L0 spanning files, bucketed and dv
+    *   appends, DV sidecars and compaction output are all zstd level 1. On
+    *   the lake's rows it writes about 0.65× snappy's column bytes; level 3
+    *   compresses no better at twice the CPU. Appends carry most of the
+    *   bytes a stream writes; on them level 1 writes about a third fewer
+    *   bytes than snappy, for an l0 ingest cost of 2–13% at 4M-event
+    *   batches that the host's noise leaves unresolved (BASELINE.md,
+    *   "Tiered lake codec" and "One lake codec").
+    * - '''A url bloom filter on compaction output''' (`compacted`) only.
+    *   Files are sorted by `_urlhash`, so url's row-group min/max stats
+    *   cannot prune a point lookup; the bloom lets parquet-mr skip row
+    *   groups on the pushed `url = x` equality, the row-group complement of
+    *   the manifest's file-level pruning (reference analogue: per-partition
+    *   bloom synopses, synopsis.cpp). The adaptive filter keeps the smallest
+    *   of its candidates, halving from 1 MiB, that still holds the row
+    *   group's distinct urls at fpp 1%; ten candidates reach down to 2 KiB,
+    *   where parquet's default five stop at 64 KiB, many times what a
+    *   compacted file of a few thousand rows needs. Appends go without it:
+    *   on the apply hot path it costs CPU and buys no measurable lookup
+    *   gain on L0 files.
     */
-  private def tiered[T](w: DataFrameWriter[T], compacted: Boolean): DataFrameWriter[T] =
+  private def tiered[T](w: DataFrameWriter[T], compacted: Boolean): DataFrameWriter[T] = {
+    val zstd = w.option("compression", "zstd")
+      .option("parquet.compression.codec.zstd.level", "1")
     if (compacted)
-      w.option("compression", "zstd")
-        .option("parquet.compression.codec.zstd.level", "1")
-        .option("parquet.bloom.filter.enabled#url", "true")
+      zstd.option("parquet.bloom.filter.enabled#url", "true")
         .option("parquet.bloom.filter.adaptive.enabled", "true")
         .option("parquet.bloom.filter.candidates.number#url", "10")
-    else w.option("compression", "snappy")
+    else zstd
+  }
 
   /** Write `rows` as L0 ''spanning'' files: NO repartition, NO sort, NO
     * bucket dirs — each upstream task streams its partition straight into one
@@ -1042,10 +1032,12 @@ class LakeTable(val spark: SparkSession, val root: String,
     * the rewrite. Once those files together reach half the rows of the
     * bucket's largest file, the whole bucket is folded instead: without
     * that, a stream that never runs a full compaction would re-rewrite an
-    * ever larger merged delta on every run. Rows, not bytes: compaction
-    * output is zstd and appends are snappy (see [[tiered]]), so a delta
-    * holds about 1.5× the bytes per row of a compacted base, and a bytes
-    * rule would fold the base in at about a third of its rows. The L0
+    * ever larger merged delta on every run. Rows, not bytes: a small delta
+    * holds more bytes per row than a large base, because of its fixed
+    * per-file and per-column-chunk overhead and the fewer rows it
+    * compresses together (about 2× for 90 rows against 400 of the same
+    * payload, both zstd), so a bytes rule would fold the base in at well
+    * under half of its rows. The L0
     * spanning group (bucket −1) is always flushed whole, and with tombstone
     * GC requested victim buckets are taken whole (a tombstone may kill a
     * version in a file outside a subset).

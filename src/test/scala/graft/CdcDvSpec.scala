@@ -228,10 +228,12 @@ class CdcDvSpec extends SparkSpec {
     assert(textsOf(table, snap) == expected && expected.size == 40)
   }
 
-  test("partial compaction compares rows: snappy deltas under half a zstd base's rows fold alone") {
+  test("partial compaction compares rows: deltas over half a base's bytes but under half its rows fold alone") {
     val urls = (1 to 400).map(i => s"https://a/p$i")
-    // a compacted (zstd) base of 400 urls, then two snappy deltas of 90
-    // updates each: under half the base in rows, over half of it in bytes
+    // a compacted base of 400 urls, then two deltas of 90 updates each:
+    // under half the base in rows, over half of it in bytes (a small file
+    // holds more bytes per row: fixed per-file and per-chunk overhead, and
+    // fewer rows to compress together)
     val table = oneBucketDv(Seq(
       urls.zipWithIndex.map { case (u, i) => ("I", i + 1L, u) },
       urls.take(10).zipWithIndex.map { case (u, i) => ("U", 500L + i, u) }))

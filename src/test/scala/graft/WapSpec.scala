@@ -231,7 +231,7 @@ class WapSpec extends SparkSpec {
     val e1 = intercept[IllegalArgumentException](
       CdcApply.applyBatchDv(table, spark.createDataset(groups(1)).toDF(), "m", 1L,
         createBuckets = 16))
-    assert(e1.getMessage.contains("run compact()"))
+    assert(e1.getMessage.contains("un-flushed L0 spanning files"), e1.getMessage)
     table.compact(maxFilesPerBucket = 1) // full flush: L0 → buckets
     CdcApply.applyBatchDv(table, spark.createDataset(groups(1)).toDF(), "m", 1L,
       createBuckets = 16)

@@ -89,20 +89,13 @@ object CdcApply {
     */
   val BroadcastKeyLimit: Long = 1000L * 1000
 
-  /** Write-stage tasks per executor slot (default 1: one whole wave of
-    * uniform write tasks measured ~15% faster than two at 16 cores —
-    * ScalingLab morraw-t1 vs morraw).
-    */
-  private def tasksPerSlot: Int =
-    sys.props.get("graft.tasksPerSlot").map(_.toInt).getOrElse(1)
-
-  /** Write parallelism: tracks the cluster, capped by bucket count — tiny
+  /** Write parallelism: one task per slot, capped by bucket count — tiny
     * sessions don't pay per-bucket task overhead, big ones use every slot.
+    * One whole wave of uniform write tasks measured ~15% faster than two at
+    * 16 cores (BASELINE.md:100, the "one write wave per core" row).
     */
-  private def writeTasks(table: LakeTable, buckets: Int): Int = {
-    val slots = table.spark.sparkContext.defaultParallelism
-    math.max(1, math.min(buckets, slots * tasksPerSlot))
-  }
+  private def writeTasks(table: LakeTable, buckets: Int): Int =
+    math.max(1, math.min(buckets, table.spark.sparkContext.defaultParallelism))
 
   /** Schema-evolution preamble shared by both apply paths (a drift here
     * would silently diverge table state between them): merge the event user

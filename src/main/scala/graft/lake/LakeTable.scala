@@ -222,10 +222,11 @@ class LakeTable(val spark: SparkSession, val root: String,
     * Commit with an append-only hint: `appendedOnly = Some(newFiles)` asserts
     * this commit ADDED exactly those files and removed none, skipping the
     * O(table) file-list diff — at 10^6 manifest entries that diff costs
-    * ~1.7 s PER COMMIT (ManifestLab), which would dominate every streaming
-    * micro-batch; the hinted path is O(batch). Guarded by an O(1) size check;
-    * the unhinted path stays for compaction/expiry (rare, remove files,
-    * genuinely need the diff).
+    * ~1.7 s PER COMMIT (BASELINE.md, "Round 4: the metadata path at 10^6
+    * files"), which would dominate every streaming micro-batch; the hinted
+    * path is O(batch). Guarded by an O(1) size check; the unhinted path
+    * stays for compaction/expiry (rare, remove files, genuinely need the
+    * diff).
     */
   def commit(snap: Snapshot, appendedOnly: Option[Seq[DataFile]]): Snapshot =
       LakeTable.commitMutex(root).synchronized {

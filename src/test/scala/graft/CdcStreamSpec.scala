@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.streaming.StreamingQueryException
 
-import graft.cdc.CdcStream
-import graft.gen.{ChangeGen, GenConfig}
+import graft.cdc.{CdcApply, CdcStream}
+import graft.gen.{ChangeGen, GenConfig, GenEvent}
 import graft.lake.LakeTable
 
 class CdcStreamSpec extends SparkSpec {
@@ -50,6 +50,58 @@ class CdcStreamSpec extends SparkSpec {
     assert(spark.streams.active.forall(q => !q.name.startsWith("gone-")))
     assert(table.currentSnapshot.isEmpty)
     assert(new java.io.File(ckpt).list().isEmpty)
+  }
+
+  test("one table switches l0 → compact → dv → l0 on one stream checkpoint") {
+    import spark.implicits._
+    val staging = tmpDir("wal"); val wal = tmpDir("wal"); val ckpt = tmpDir("ckpt")
+    ChangeGen.writeWal(spark, GenConfig(events = 3000, segmentSize = 250), staging)
+    val parts = new java.io.File(staging).listFiles().filter(_.getName.endsWith(".parquet"))
+      .sortBy(_.getName)
+    assert(parts.length >= 8, s"want at least 8 WAL files, got ${parts.length}")
+    val delivered = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+    def deliver(files: Seq[java.io.File]): Unit = files.foreach { f =>
+      java.nio.file.Files.copy(f.toPath, java.nio.file.Paths.get(wal, f.getName))
+      delivered += f
+    }
+    def goldenSoFar = expectedMap(spark.read.parquet(delivered.map(_.getPath).toSeq: _*)
+      .as[GenEvent].collect().toSeq)
+    val table = new LakeTable(spark, tmpDir("lake"))
+    def run(mode: String, filesPerTrigger: Int = 1, autoCompact: Int = 0): Unit =
+      CdcStream.start(spark, wal, table, ckpt, queryId = "mt", mode = mode,
+        maxFilesPerTrigger = filesPerTrigger, createBuckets = 4,
+        autoCompactFilesPerBucket = autoCompact)
+        .awaitTermination()
+    def dvRefusal(): String = intercept[IllegalArgumentException](
+      CdcApply.applyBatchDv(table, spark.read.parquet(parts.head.getPath), "probe", 0L))
+      .getMessage
+
+    // write leg: l0 appends, auto-compaction flushing the L0 group as it grows
+    deliver(parts.take(5).toSeq)
+    run("l0", autoCompact = 3)
+    val afterL0 = table.currentSnapshot.get
+    assert(afterL0.files.exists(_.bucket >= 0), "auto-compaction never flushed the L0 group")
+    assert(afterL0.files.exists(_.bucket < 0), "precondition: the last l0 batch left L0 files")
+    assert(table.needsResolve(afterL0))
+    assert(dvRefusal().contains("un-flushed L0 spanning files"))
+
+    // handoff: one full compaction, then the same checkpoint resumes as dv
+    table.compact()
+    deliver(parts.slice(5, parts.length - 1).toSeq)
+    run("dv", filesPerTrigger = 3)
+    val afterDv = table.currentSnapshot.get
+    assert(pagesMap(table.pages()) == goldenSoFar)
+    assert(!table.needsResolve(afterDv))
+    assert(afterDv.files.nonEmpty && afterDv.files.forall(_.bucket >= 0))
+    assert(afterDv.dvFiles.nonEmpty, "the dv leg masked no committed row")
+
+    // and back: one more l0 batch makes the table multi-version again
+    deliver(Seq(parts.last))
+    run("l0")
+    val back = table.currentSnapshot.get
+    assert(table.needsResolve(back) && back.files.exists(_.bucket < 0))
+    assert(dvRefusal().contains("un-flushed L0 spanning files"))
+    assert(pagesMap(table.pages()) == goldenSoFar)
   }
 
   test("WAP run identity lives IN the checkpoint: resume keeps it, wipe mints anew") {

@@ -268,9 +268,8 @@ object Bench {
         // appended as un-bucketed spanning parquet files — scan → project →
         // write with ZERO exchanges (listener-verified zero shuffle bytes);
         // bucket placement and LWW folding are deferred to the compaction
-        // flush, the RocksDB/LSM L0 design. Measured ~1.9x the bucketed raw
-        // append (`morraw`) at both core counts — see BASELINE.md. The
-        // read-optimized deletion-vector merge (`dv`) is reported below.
+        // flush, the RocksDB/LSM L0 design (BASELINE.md). The read-optimized
+        // deletion-vector merge (`dv`) is reported below.
         val mor = cdcPairs(mainWal, warmWal, "l0", pairs = 7, filesPerTrigger = 192)
         headline = mor.bestSteadyTp16
         parts += s""""cdc_mor":{"apply_mode":"l0","wal_events":$nEvents,${modeJson(mor)}}"""

@@ -35,7 +35,7 @@ object Demo {
     } else println(s"[demo] reusing existing WAL at $wal")
 
     val table = new LakeTable(spark, lake)
-    // SPARK_GRAFT_MODE selects the apply mode: l0 (default) | morraw | dv
+    // SPARK_GRAFT_MODE selects the apply mode: l0 (default) | dv
     val mode = sys.env.getOrElse("SPARK_GRAFT_MODE", "l0")
     var applied = 0L; var skipped = 0L
     val q = CdcStream.start(spark, wal, table, ckpt, maxFilesPerTrigger = 8,

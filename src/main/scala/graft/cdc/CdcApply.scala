@@ -29,8 +29,8 @@ case class ApplyStats(
   * Catalyst-driven schema evolution. Two apply paths:
   *
   *  - [[applyBatchAppendRaw]], write-optimized: every event is appended as
-  *    its own row version (bucketed `morraw`, or un-bucketed L0 spanning
-  *    files `l0`); readers and compaction resolve LWW.
+  *    its own row version in un-bucketed L0 spanning files (mode `l0`);
+  *    readers and compaction resolve LWW.
   *  - [[applyBatchDv]], read-optimized: superseded committed rows are masked
   *    by deletion vectors and only the batch's winners are appended, so the
   *    table keeps one live version per url and reads need no resolve.
@@ -88,14 +88,6 @@ object CdcApply {
     * of the bucket-pruned existing side).
     */
   val BroadcastKeyLimit: Long = 1000L * 1000
-
-  /** Write parallelism: one task per slot, capped by bucket count — tiny
-    * sessions don't pay per-bucket task overhead, big ones use every slot.
-    * One whole wave of uniform write tasks measured ~15% faster than two at
-    * 16 cores (BASELINE.md:100, the "one write wave per core" row).
-    */
-  private def writeTasks(table: LakeTable, buckets: Int): Int =
-    math.max(1, math.min(buckets, table.spark.sparkContext.defaultParallelism))
 
   /** Schema-evolution preamble shared by both apply paths (a drift here
     * would silently diverge table state between them): merge the event user
@@ -174,9 +166,10 @@ object CdcApply {
     * positionally masked the moment its successor lands. Compaction folds
     * masks into the data and clears the sidecar list.
     *
-    * Requires a single-version base (no un-compacted raw-append deltas / L0
-    * spanning files) — the invariant the path itself maintains. A table fed
-    * by the append path switches to dv after one full `compact()`.
+    * Requires a single-version base (no L0 spanning files, and no bucket
+    * deltas a partial flush left multi-version) — the invariant the path
+    * itself maintains. A table fed by the append path switches to dv after
+    * one full `compact()`.
     *
     * Reference analogue: the reference's only rewrite mechanism is the
     * whole-partition `rebuild` copy (`builtins/commands/rebuild.cpp:45-77`);
@@ -294,10 +287,15 @@ object CdcApply {
   }
 
   /** Merge-on-read apply WITHOUT batch-level LWW dedup: every event row is
-    * appended to the delta files as its own version; readers and compaction
-    * already LWW-resolve across versions, so intra-batch losers are just
-    * extra delta rows that the next compaction folds (the LSM/sorted-run
-    * design — Paimon/Hudi-style changelog appends).
+    * appended as its own version in L0 ''spanning'' files
+    * ([[graft.lake.LakeTable.writeDataFilesSpanning]]) — scan → project →
+    * write, ZERO exchanges, each scan task streaming straight into one parquet
+    * file. Readers and compaction already LWW-resolve across versions, so
+    * intra-batch losers are just extra rows that the next compaction folds
+    * (the LSM/sorted-run design — Paimon/Hudi-style changelog appends).
+    * Bucket placement is deferred wholly to compaction (the L0→L1 flush of
+    * an LSM tree); until then point lookups pay a read of the un-flushed L0
+    * files, bounded by the auto-compaction threshold.
     *
     * Why no dedup: a batch `max_by(struct(<whole row>))` holds the full row
     * per key in its aggregation buffer, the hot spot that capped the removed
@@ -309,13 +307,8 @@ object CdcApply {
     * delivered); exactly-once watermark + schema evolution identical to
     * [[applyBatchDv]].
     *
-    * With `spanning = true` (mode `"l0"`) even the bucket shuffle goes away:
-    * the batch is appended as L0 ''spanning'' files
-    * ([[graft.lake.LakeTable.writeDataFilesSpanning]]) — scan → project →
-    * write, ZERO exchanges, each scan task streaming straight into one parquet
-    * file. Bucket placement is deferred wholly to compaction (the L0→L1 flush
-    * of an LSM tree); until then point lookups pay a read of the un-flushed L0
-    * files, bounded by the auto-compaction threshold.
+    * `spanning` must be `true`; it remains only for callers that still pass
+    * it.
     *
     * `stageAs = Some(wapId)` switches the final commit to
     * [[graft.lake.LakeTable.stageCommit]] — write-audit-publish: the batch's
@@ -336,8 +329,10 @@ object CdcApply {
       queryId: String,
       batchId: Long,
       createBuckets: Int = 64,
-      spanning: Boolean = false,
+      spanning: Boolean = true,
       stageAs: Option[String] = None): ApplyStats = {
+    require(spanning,
+      "bucketed raw appends were removed: raw appends always write L0 spanning files")
 
     val snap0: Snapshot = phase("snapshot") { table.currentSnapshot.getOrElse {
       table.create(userSchemaOf(batch.schema), createBuckets)
@@ -385,11 +380,7 @@ object CdcApply {
       sum(when(col("_deleted"), 1L).otherwise(0L)).as("deletes"),
       min(col("_lsn")).as("minLsn"), max(col("_lsn")).as("maxLsn"))
 
-    val newFiles = phase("write-job") {
-      if (spanning) table.writeDataFilesSpanning(observed, schemaId)
-      else table.writeDataFiles(observed, schemaId, snap0.buckets,
-        nTasks = writeTasks(table, snap0.buckets))
-    }
+    val newFiles = phase("write-job") { table.writeDataFilesSpanning(observed, schemaId) }
     val m = phase("obs-get") { obs.get }
     // an empty LOCAL batch (in-memory relation, zero rows) executes no
     // observed plan, so the metrics map can be EMPTY — treat as 0 events

@@ -29,16 +29,14 @@ object CdcStream {
     *
     * @param maxFilesPerTrigger bounds micro-batch size (backpressure knob; the
     *        reference's demand window analogue, `execution_node.cpp:44-67`)
-    * @param mode               the write-optimized append path
-    *                           ([[CdcApply.applyBatchAppendRaw]]): `"l0"`
-    *                           (the default: raw append as spanning L0 files —
-    *                           no bucket shuffle at all, bucket placement
-    *                           deferred to compaction) or `"morraw"` (raw
-    *                           append into bucket files); or the
-    *                           read-optimized `"dv"` (deletion-vector merge:
-    *                           positional delete sidecars + winner appends;
-    *                           [[CdcApply.applyBatchDv]], which needs a
-    *                           compacted base)
+    * @param mode               the write-optimized `"l0"` (the default:
+    *                           [[CdcApply.applyBatchAppendRaw]], raw append
+    *                           as spanning L0 files — no bucket shuffle at
+    *                           all, bucket placement deferred to compaction)
+    *                           or the read-optimized `"dv"` (deletion-vector
+    *                           merge: positional delete sidecars + winner
+    *                           appends; [[CdcApply.applyBatchDv]], which
+    *                           needs a compacted base)
     * @param autoCompactFilesPerBucket when k > 0, after a batch commit any
     *        bucket holding more than k files triggers a partial compaction
     *        (bounded read amplification for long MOR streams; reference
@@ -56,7 +54,7 @@ object CdcStream {
     *        published batches report the PUBLISHED version; a rejected batch
     *        reports `quarantined = true` with its real counts
     * @param audit              AUDITED INGEST (write-audit-publish per
-    *        micro-batch; append modes `morraw`/`l0` only, and requires
+    *        micro-batch; append mode `l0` only, and requires
     *        `quarantineDir` — rejecting with no durable record would be
     *        silent data loss). Each batch lands as a STAGED commit under a
     *        run-scoped WAP id (`<queryId>-b<batch>-<checkpoint hash>`, so a
@@ -91,8 +89,8 @@ object CdcStream {
       onBatch: ApplyStats => Unit = _ => (),
       audit: Option[(DataFrame, ApplyStats) => Boolean] = None,
       quarantineDir: Option[String] = None): StreamingQuery = {
-    require(audit.isEmpty || mode == "morraw" || mode == "l0",
-      s"audited ingest requires an append mode (morraw/l0), not '$mode'")
+    require(audit.isEmpty || mode == "l0",
+      s"audited ingest requires the append mode l0, not '$mode'")
     require(audit.isEmpty || quarantineDir.isDefined,
       "audited ingest requires a quarantineDir — rejecting a batch with no durable record is silent data loss")
     // run-scoped WAP id: stable across RESUMES of this checkpoint (replay
@@ -107,11 +105,10 @@ object CdcStream {
     def wapId(batchId: Long): String = s"$queryId-b$batchId-$runTag"
     val apply: (DataFrame, Long) => ApplyStats = mode match {
       case "dv" => (b, id) => CdcApply.applyBatchDv(table, b, queryId, id, createBuckets)
-      case "morraw" => (b, id) => CdcApply.applyBatchAppendRaw(table, b, queryId, id,
+      case "l0" => (b, id) => CdcApply.applyBatchAppendRaw(table, b, queryId, id,
         createBuckets, stageAs = audit.map(_ => wapId(id)))
-      case "l0" => (b, id) =>
-        CdcApply.applyBatchAppendRaw(table, b, queryId, id, createBuckets, spanning = true,
-          stageAs = audit.map(_ => wapId(id)))
+      case removed @ ("cow" | "mor" | "morraw") =>
+        throw new IllegalArgumentException(s"CDC mode '$removed' was removed; use l0 or dv")
       case other => throw new IllegalArgumentException(s"unknown CDC mode '$other'")
     }
     spark.readStream

@@ -344,9 +344,10 @@ class LakeTable(val spark: SparkSession, val root: String,
     * it plus the chunks covering their buckets
     * ([[LakeTable.planFilesChunked]]) — in L0/streaming mode only that one
     * chunk is dirty per consolidation, so steady-state consolidation I/O is
-    * O(recent batches) there. Bucketed appends touch hash-random buckets and
-    * dirty most chunks — their consolidation stays O(table) in I/O (CPU for
-    * clean-chunk detection is one MD5 pass over the entries).
+    * O(recent batches) there. The bucketed writers — dv winner appends and
+    * compaction output — touch hash-random buckets and dirty most chunks;
+    * their consolidation stays O(table) in I/O (CPU for clean-chunk
+    * detection is one MD5 pass over the entries).
     */
   private def consolidateChunks(allFiles: Seq[DataFile], oldManifests: Seq[String],
       buckets: Int, addedNow: Seq[DataFile], removedNow: Seq[String],
@@ -930,7 +931,7 @@ class LakeTable(val spark: SparkSession, val root: String,
   /** The parquet settings of a lake file; reads need none, since parquet
     * records the codec per column chunk.
     *
-    * - '''One codec for every file''': L0 spanning files, bucketed and dv
+    * - '''One codec for every file''': L0 spanning files, dv winner
     *   appends, DV sidecars and compaction output are all zstd level 1. On
     *   the lake's rows it writes about 0.65× snappy's column bytes; level 3
     *   compresses no better at twice the CPU. Appends carry most of the
@@ -1103,7 +1104,9 @@ class LakeTable(val spark: SparkSession, val root: String,
     // outside the subset. With L0 spanning files a url's versions can straddle
     // the -1 group and its bucket, so tombstone GC only runs when the input
     // covers every file (full compaction) or no L0 files exist (then a
-    // bucket's files hold ALL versions of its urls, the pre-L0 invariant).
+    // bucket's files hold ALL versions of its urls: the only bucketed
+    // writers, compaction output and dv winner appends, place every row in
+    // its url's bucket).
     val gcSafe = gcTombstonesBelowLsn.filter(_ =>
       !byBucket.contains(-1) || untouched.isEmpty)
     val raw0 = readFiles(snap, input, currentFileSchema(snap))

@@ -325,8 +325,7 @@ object MLQueries {
     "q_cdc_lww_table" -> ((s, d) =>
       replayLake(s, d, "graft-q-cdc-lww") { (table, batch, b) =>
         if (b <= 1L) {
-          CdcApply.applyBatchAppendRaw(table, batch, "q_cdc", b, createBuckets = 16,
-            spanning = true)
+          CdcApply.applyBatchAppendRaw(table, batch, "q_cdc", b, createBuckets = 16)
           if (b == 1L) table.compact() // L0 → buckets, single-version base for dv
         } else CdcApply.applyBatchDv(table, batch, "q_cdc", b, createBuckets = 16)
       }.pages().select(col("url"), col("text"), col("lang"))),
@@ -358,7 +357,7 @@ object MLQueries {
       } finally env.unpersist()
     }),
 
-    // WAP under the same hard oracle: batch 1 is STAGED (invisible) under
+    // WAP under the same hard oracle, on L0 appends: batch 1 is STAGED (invisible) under
     // its own queryId — the multi-writer pattern; committing the main
     // query's later batches past a staged batch of the SAME query is
     // refused — while batch 2 commits past it, then the audit passes and
@@ -384,13 +383,12 @@ object MLQueries {
     // resolve-on-read page table — final state must be mode-independent
     "q_cdc_l0_table" -> ((s, d) =>
       replayLake(s, d, "graft-q-cdc-l0") { (table, batch, b) =>
-        CdcApply.applyBatchAppendRaw(table, batch, "q_cdc_l0", b, createBuckets = 16,
-          spanning = true)
+        CdcApply.applyBatchAppendRaw(table, batch, "q_cdc_l0", b, createBuckets = 16)
         if (b == 1L) table.compact(maxFilesPerBucket = 4) // mid-stream L0 flush
       }.pages().select(col("url"), col("text"), col("lang"))),
 
     // snapshot-diff changelog (CDC *output*: Iceberg incremental scan /
-    // Delta CDF analogue) — replay the WAL as raw MOR appends, then diff the
+    // Delta CDF analogue) — replay the WAL as L0 appends, then diff the
     // version after batch 1 against the final version; the oracle recomputes
     // both LWW states relationally and classifies
     "q_cdc_changes" -> ((s, d) => {
@@ -409,7 +407,7 @@ object MLQueries {
     }),
 
     // incremental materialized view (IVM over the CDC output): replay the
-    // WAL as raw MOR appends and keep a per-lang (count, char-sum) view up
+    // WAL as L0 appends and keep a per-lang (count, char-sum) view up
     // to date by folding each preimage changelog delta — NEVER re-reading
     // the table — then emit the final view; the oracle aggregates the final
     // LWW state directly (incremental ≡ direct is the IVM invariant)

@@ -849,7 +849,7 @@ object Tql {
         }
       case Ident("import") =>
         // import "<lake root>" — append the piped CHANGE EVENTS (url, lsn,
-        // op, wal_part envelope) to the lake as one committed batch (the
+        // op, wal_part envelope) to the lake as one committed L0 batch (the
         // reference's `import` store write, importer.cpp:35-106); the batch
         // id continues the "tql-import" watermark so re-running a pipeline
         // appends a NEW batch rather than silently replacing

@@ -361,16 +361,22 @@ class CdcDvSpec extends SparkSpec {
   test("dv apply refuses a multi-version (merge-on-read) base") {
     val table = new LakeTable(spark, tmpDir())
     val g = segGroups(allEvents, 8)
-    CdcApply.applyBatchAppendRaw(table, spark.createDataset(g.head).toDF(), "q", 0L,
-      createBuckets = 16)
+    // two L0 appends, each flushed into its buckets: the buckets then hold
+    // two versions of some urls, with no L0 file left
+    segGroups(g.head, 4).zipWithIndex.foreach { case (h, i) =>
+      CdcApply.applyBatchAppendRaw(table, spark.createDataset(h).toDF(), "q", i.toLong,
+        createBuckets = 16)
+      table.compact(maxFilesPerBucket = 2)
+    }
+    assert(table.currentSnapshot.get.files.forall(_.bucket >= 0))
     val e = intercept[IllegalArgumentException] {
-      CdcApply.applyBatchDv(table, spark.createDataset(g(1)).toDF(), "q", 1L,
+      CdcApply.applyBatchDv(table, spark.createDataset(g(1)).toDF(), "q", 2L,
         createBuckets = 16)
     }
     assert(e.getMessage.contains("single-version base"))
     // after a full compaction the base is single-version again → dv applies
     table.compact(maxFilesPerBucket = 1)
-    CdcApply.applyBatchDv(table, spark.createDataset(g(1)).toDF(), "q", 1L,
+    CdcApply.applyBatchDv(table, spark.createDataset(g(1)).toDF(), "q", 2L,
       createBuckets = 16)
     assert(pagesMap(table.pages()) == expectedMap(g.head ++ g(1)))
   }

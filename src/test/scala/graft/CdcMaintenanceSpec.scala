@@ -7,7 +7,7 @@ import graft.gen.{ChangeGen, GenConfig, GenEvent}
 import graft.lake.LakeTable
 import graft.ops.MatView
 
-/** Raw (LSM-style) MOR append, auto-compaction, snapshot expiry / orphan GC,
+/** Raw (LSM-style) L0 append, auto-compaction, snapshot expiry / orphan GC,
   * and the conditional-resolve flag.
   */
 class CdcMaintenanceSpec extends SparkSpec {
@@ -20,7 +20,7 @@ class CdcMaintenanceSpec extends SparkSpec {
   private def segGroups(events: Seq[GenEvent], segsPerBatch: Int): Seq[Seq[GenEvent]] =
     events.groupBy(_.seg / segsPerBatch).toSeq.sortBy(_._1).map(_._2)
 
-  test("raw append (morraw) converges to the golden state; lineage counts delivered events") {
+  test("l0 append converges to the golden state; lineage counts delivered events") {
     val table = new LakeTable(spark, tmpDir())
     segGroups(allEvents, 6).zipWithIndex.foreach { case (g, i) =>
       CdcApply.applyBatchAppendRaw(table, spark.createDataset(g).toDF(), "r", i.toLong,
@@ -73,7 +73,7 @@ class CdcMaintenanceSpec extends SparkSpec {
       CdcApply.applyBatchAppendRaw(table, spark.createDataset(g).toDF(), "b", i.toLong,
         createBuckets = 4)
     }
-    assertAppendTier(table.currentSnapshot.get.files.map(_.path), "bucketed delta")
+    assertAppendTier(table.currentSnapshot.get.files.map(_.path), "L0 append")
     table.compact(maxFilesPerBucket = 1)
     val snap = table.currentSnapshot.get
     // every column chunk of the compaction output is zstd
@@ -102,7 +102,7 @@ class CdcMaintenanceSpec extends SparkSpec {
     val l0 = new LakeTable(spark, tmpDir())
     segGroups(allEvents, 6).take(2).zipWithIndex.foreach { case (g, i) =>
       CdcApply.applyBatchAppendRaw(l0, spark.createDataset(g).toDF(), "s", i.toLong,
-        createBuckets = 4, spanning = true)
+        createBuckets = 4)
     }
     assertAppendTier(l0.currentSnapshot.get.files.map(_.path), "L0 spanning")
     val dv = new LakeTable(spark, tmpDir())
@@ -212,7 +212,7 @@ class CdcMaintenanceSpec extends SparkSpec {
     val table = new LakeTable(spark, s"$work/lake")
     val published = scala.collection.mutable.ArrayBuffer.empty[Long]
     CdcStream.start(spark, s"$work/wal", table, s"$work/ckpt", queryId = "ac",
-      maxFilesPerTrigger = 2, createBuckets = 8, mode = "morraw",
+      maxFilesPerTrigger = 2, createBuckets = 8, mode = "l0",
       autoCompactFilesPerBucket = 3, expireKeepLast = 2,
       onBatch = s => published += s.version).awaitTermination()
     val snap = table.currentSnapshot.get
@@ -764,7 +764,7 @@ class CdcMaintenanceSpec extends SparkSpec {
     val groups = segGroups(allEvents, 8).take(3)
     groups.zipWithIndex.foreach { case (g, i) =>
       CdcApply.applyBatchAppendRaw(table, spark.createDataset(g).toDF(), "e", i.toLong,
-        createBuckets = 8, spanning = true)
+        createBuckets = 8)
     }
     val preFiles = table.currentSnapshot.get.files.map(_.path)
     assert(preFiles.nonEmpty && table.currentSnapshot.get.files.forall(_.bucket < 0),

@@ -8,9 +8,10 @@ import graft.cdc.{CdcApply, CdcStream}
 import graft.gen.{ChangeGen, GenConfig, GenEvent}
 import graft.lake.LakeTable
 
-/** Merge-on-read apply path (raw append, bucketed `morraw` and L0 `l0`):
-  * append-only delta files + LWW resolve at read. Must reach byte-identical
-  * state to the dv path and the independent oracle.
+/** Merge-on-read apply path (raw append as L0 spanning files, mode `l0`):
+  * append-only delta files + LWW resolve at read, and bucketed multi-version
+  * deltas once partial compactions flush L0. Must reach byte-identical state
+  * to the dv path and the independent oracle.
   */
 class CdcMorSpec extends SparkSpec {
   import spark.implicits._
@@ -40,7 +41,7 @@ class CdcMorSpec extends SparkSpec {
     assert(lineageBatches == segGroups(allEvents, 8).indices.map(_.toLong).toSet)
   }
 
-  test("morraw and dv reach identical final state from the same WAL") {
+  test("l0 and dv reach identical final state from the same WAL") {
     val mor = new LakeTable(spark, tmpDir()); replayMor(mor, segGroups(allEvents, 5), "m")
     val dv = new LakeTable(spark, tmpDir())
     segGroups(allEvents, 5).zipWithIndex.foreach { case (g, i) =>
@@ -100,14 +101,16 @@ class CdcMorSpec extends SparkSpec {
 
   test("partial compaction of raw deltas folds a subset per bucket and keeps needs_resolve") {
     val table = new LakeTable(spark, tmpDir())
-    // a large first append, then two small ones: the small pair stays under
-    // half the large file, so each bucket folds only its two smallest files
+    // a large first append, then two small ones, each flushed from L0 into
+    // one file per bucket: the small pair stays under half the large file,
+    // so each bucket folds only its two smallest files
     val ordered = allEvents.sortBy(e => (e.seg, e.lsn))
-    val (first, rest) = ordered.splitAt(ordered.size * 3 / 4)
+    val (first, rest) = ordered.splitAt(ordered.size * 7 / 8)
     val (second, third) = rest.splitAt(rest.size / 2)
     Seq(first, second, third).zipWithIndex.foreach { case (g, i) =>
       CdcApply.applyBatchAppendRaw(table, spark.createDataset(g).toDF(), "r", i.toLong,
         createBuckets = 16)
+      table.compact(maxFilesPerBucket = 2) // flushes only the L0 group
     }
     val before = table.currentSnapshot.get
     assert(before.files.groupBy(_.bucket).values.forall(_.size > 2), "every bucket over k")
@@ -128,14 +131,19 @@ class CdcMorSpec extends SparkSpec {
         if (op == "D") null else text.getBytes("UTF-8"),
         if (op == "D") null else text, if (op == "D") null else "en", 0L)
     val filler = (1 to 50).map(i => ev("I", i + 1L, s"https://a/f$i", s"filler text $i"))
+    // tombstones of urls never inserted: each small batch has three rows, so
+    // it lands as three L0 files and a k = 2 compaction flushes it
+    def never(lsn: Long) = Seq(ev("D", lsn, s"https://a/never$lsn", null),
+      ev("D", lsn + 1, s"https://a/never${lsn + 1}", null))
     // one bucket: the victim x lives in the largest file, its tombstone and
-    // an unrelated update in two small ones
+    // an unrelated update in two small ones, each flushed from L0
     Seq(
       ev("I", 1, "https://a/x", "v1") +: filler,
-      Seq(ev("D", 100, "https://a/x", null)),
-      Seq(ev("U", 101, "https://a/f1", "w2"))).zipWithIndex.foreach { case (b, i) =>
+      ev("D", 100, "https://a/x", null) +: never(102),
+      ev("U", 101, "https://a/f1", "w2") +: never(104)).zipWithIndex.foreach { case (b, i) =>
       CdcApply.applyBatchAppendRaw(table, spark.createDataset(b).toDF(), "g", i.toLong,
         createBuckets = 1)
+      table.compact(maxFilesPerBucket = 2) // flushes only the L0 group
     }
     val before = table.currentSnapshot.get
     assert(before.files.size == 3)
@@ -153,7 +161,7 @@ class CdcMorSpec extends SparkSpec {
     val table = new LakeTable(spark, tmpDir())
     segGroups(allEvents, 8).zipWithIndex.foreach { case (g, i) =>
       CdcApply.applyBatchAppendRaw(table, spark.createDataset(g).toDF(), "l", i.toLong,
-        createBuckets = 16, spanning = true)
+        createBuckets = 16)
     }
     val snap = table.currentSnapshot.get
     // every data file is an un-bucketed L0 spanning file
@@ -177,17 +185,18 @@ class CdcMorSpec extends SparkSpec {
       GenEvent(op, lsn, part, url, ts,
         if (op == "D") null else text.getBytes("UTF-8"),
         if (op == "D") null else text, if (op == "D") null else "en", 0L)
-    // batch 0: bucketed delta file holds the live row (morraw path)
+    // batch 0: flushed into a bucket file that holds the live row
     CdcApply.applyBatchAppendRaw(table,
       spark.createDataset(Seq(ev("I", 1, 0, "https://a/x", "v1"))).toDF(), "g", 0L,
       createBuckets = 4)
+    table.compact()
     // batches 1-3: L0 spanning files; batch 1 holds the tombstone
     Seq(
       Seq(ev("D", 10, 1, "https://a/x", null)),
       Seq(ev("I", 11, 1, "https://a/y", "w1")),
       Seq(ev("U", 12, 1, "https://a/y", "w2"))).zipWithIndex.foreach { case (b, i) =>
       CdcApply.applyBatchAppendRaw(table, spark.createDataset(b).toDF(), "g", i + 1L,
-        createBuckets = 4, spanning = true)
+        createBuckets = 4)
     }
     // partial compaction targeting only the L0 group (3 files > 2), GC armed:
     // the tombstone's victim sits in a bucketed file OUTSIDE the input, so GC
@@ -221,8 +230,8 @@ class CdcMorSpec extends SparkSpec {
       ("I", 2L, 0, "https://s/2", ts, "t2", "en", 123456789012L, 200),
       ("U", 3L, 0, "https://s/1", ts, "t1b", "en", 5L, 304)
     ).toDF("op", "lsn", "wal_part", "url", "warc_ts", "text", "lang", "score", "fetch_status")
-    CdcApply.applyBatchAppendRaw(table, b0, "q", 0L, createBuckets = 4, spanning = true)
-    CdcApply.applyBatchAppendRaw(table, b1, "q", 1L, createBuckets = 4, spanning = true)
+    CdcApply.applyBatchAppendRaw(table, b0, "q", 0L, createBuckets = 4)
+    CdcApply.applyBatchAppendRaw(table, b1, "q", 1L, createBuckets = 4)
     val snap = table.currentSnapshot.get
     val schema = table.currentFileSchema(snap)
     assert(schema("score").dataType == org.apache.spark.sql.types.LongType)
@@ -261,7 +270,7 @@ class CdcMorSpec extends SparkSpec {
     try {
       val table = new LakeTable(spark, tmpDir())
       CdcApply.applyBatchAppendRaw(table, spark.createDataset(allEvents).toDF(), "z", 0L,
-        createBuckets = 16, spanning = true)
+        createBuckets = 16)
       // listener delivery is async; wait for the stage events to drain
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       while (stages.get() == 0 && System.nanoTime() < deadline) Thread.sleep(50)
@@ -292,18 +301,18 @@ class CdcMorSpec extends SparkSpec {
     ChangeGen.writeWal(spark, cfg, walDir)
     val table = new LakeTable(spark, s"$work/lake")
     CdcStream.start(spark, walDir, table, s"$work/ckpt", queryId = "s",
-      maxFilesPerTrigger = 6, createBuckets = 16, mode = "morraw").awaitTermination()
+      maxFilesPerTrigger = 6, createBuckets = 16, mode = "l0").awaitTermination()
     assert(pagesMap(table.pages()) == golden)
     val v = table.currentSnapshot.get.version
     // second run: nothing new → same version
     CdcStream.start(spark, walDir, table, s"$work/ckpt", queryId = "s",
-      maxFilesPerTrigger = 6, createBuckets = 16, mode = "morraw").awaitTermination()
+      maxFilesPerTrigger = 6, createBuckets = 16, mode = "l0").awaitTermination()
     assert(table.currentSnapshot.get.version == v)
     // wipe checkpoint: all batches replay as skips, state unchanged
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$work/ckpt"))
     var skips = 0
     CdcStream.start(spark, walDir, table, s"$work/ckpt2", queryId = "s",
-      maxFilesPerTrigger = 6, createBuckets = 16, mode = "morraw",
+      maxFilesPerTrigger = 6, createBuckets = 16, mode = "l0",
       onBatch = st => if (st.skipped) skips += 1).awaitTermination()
     assert(skips > 0)
     assert(pagesMap(table.pages()) == golden)

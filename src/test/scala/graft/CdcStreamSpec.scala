@@ -42,11 +42,16 @@ class CdcStreamSpec extends SparkSpec {
     val wal = tmpDir("wal"); val ckpt = tmpDir("ckpt")
     ChangeGen.writeWal(spark, GenConfig(events = 500, segmentSize = 250), wal)
     val table = new LakeTable(spark, tmpDir("lake"))
-    Seq("cow", "mor").foreach { m =>
+    Seq("cow", "mor", "morraw").foreach { m =>
       val e = intercept[IllegalArgumentException](
         CdcStream.start(spark, wal, table, ckpt, queryId = s"gone-$m", mode = m))
       assert(e.getMessage.contains(s"'$m'"), e.getMessage)
     }
+    // audited ingest names the one append mode it accepts
+    val audited = intercept[IllegalArgumentException](
+      CdcStream.start(spark, wal, table, ckpt, queryId = "gone-audit", mode = "morraw",
+        audit = Some((_, _) => true), quarantineDir = Some(tmpDir("quar"))))
+    assert(audited.getMessage.contains("'morraw'"), audited.getMessage)
     assert(spark.streams.active.forall(q => !q.name.startsWith("gone-")))
     assert(table.currentSnapshot.isEmpty)
     assert(new java.io.File(ckpt).list().isEmpty)
@@ -165,7 +170,7 @@ class CdcStreamSpec extends SparkSpec {
     var audited = 0
     val reported = scala.collection.mutable.ArrayBuffer.empty[graft.cdc.ApplyStats]
     val q = CdcStream.start(spark, wal, table, ckpt, queryId = "aud",
-      maxFilesPerTrigger = 4, createBuckets = 16, mode = "morraw",
+      maxFilesPerTrigger = 4, createBuckets = 16, mode = "l0",
       audit = Some { (pages, stats) =>
         audited += 1
         // the gate sees the staged state (base + this batch only): reject
@@ -204,7 +209,7 @@ class CdcStreamSpec extends SparkSpec {
     assert(!lin.exists(_.batchId == 1L) && lin.exists(_.batchId >= 2L))
     // a resumed run is a no-op: nothing re-applies, state unchanged
     val q2 = CdcStream.start(spark, wal, table, ckpt, queryId = "aud",
-      maxFilesPerTrigger = 4, createBuckets = 16, mode = "morraw",
+      maxFilesPerTrigger = 4, createBuckets = 16, mode = "l0",
       audit = Some((_, _) => true), quarantineDir = Some(quar))
     q2.awaitTermination()
     assert(pagesMap(table.pages()) == expected)
@@ -230,7 +235,7 @@ class CdcStreamSpec extends SparkSpec {
         }
       }
     val q = CdcStream.start(spark, wal, table, ckpt, queryId = "all",
-      maxFilesPerTrigger = 4, createBuckets = 16, mode = "morraw",
+      maxFilesPerTrigger = 4, createBuckets = 16, mode = "l0",
       autoCompactFilesPerBucket = 2, expireKeepLast = 2,
       audit = Some((_, _) => true), quarantineDir = Some(quar),
       onBatch = _ => poll())
@@ -253,7 +258,7 @@ class CdcStreamSpec extends SparkSpec {
     // run 1: crash INSIDE the audit of batch 1 — after its stage landed,
     // before publish/drop (the pending-stage crash window)
     val q1 = CdcStream.start(spark, wal, table, ckpt, queryId = "ac",
-      maxFilesPerTrigger = 4, createBuckets = 16, mode = "morraw",
+      maxFilesPerTrigger = 4, createBuckets = 16, mode = "l0",
       audit = Some { (_, stats) =>
         if (stats.batchId == 1L) throw new RuntimeException("injected crash")
         true
@@ -265,7 +270,7 @@ class CdcStreamSpec extends SparkSpec {
     // zeroed skip stats) before publishing
     val resumed = scala.collection.mutable.ArrayBuffer.empty[graft.cdc.ApplyStats]
     val q2 = CdcStream.start(spark, wal, table, ckpt, queryId = "ac",
-      maxFilesPerTrigger = 4, createBuckets = 16, mode = "morraw",
+      maxFilesPerTrigger = 4, createBuckets = 16, mode = "l0",
       audit = Some { (_, stats) =>
         if (stats.batchId == 1L) resumed += stats
         true

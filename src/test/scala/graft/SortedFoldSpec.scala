@@ -27,7 +27,7 @@ class SortedFoldSpec extends SparkSpec {
   private def l0Replay(table: LakeTable): Unit =
     segGroups(allEvents, 4).zipWithIndex.foreach { case (g, i) =>
       CdcApply.applyBatchAppendRaw(table, spark.createDataset(g).toDF(), "f", i.toLong,
-        createBuckets = 16, spanning = true)
+        createBuckets = 16)
     }
 
   /** The wide `max_by` LWW fold over `raw`: one winner row per url
@@ -94,9 +94,9 @@ class SortedFoldSpec extends SparkSpec {
     // tombstone and the insert would win — x must instead vanish entirely.
     CdcApply.applyBatchAppendRaw(table, spark.createDataset(Seq(
       ev("I", 1, "https://a/x", "v1"), ev("I", 2, "https://a/y", "keep"))).toDF(),
-      "g", 0L, createBuckets = 4, spanning = true)
+      "g", 0L, createBuckets = 4)
     CdcApply.applyBatchAppendRaw(table, spark.createDataset(Seq(
-      ev("D", 3, "https://a/x", null))).toDF(), "g", 1L, createBuckets = 4, spanning = true)
+      ev("D", 3, "https://a/x", null))).toDF(), "g", 1L, createBuckets = 4)
     val snap = table.compact(maxFilesPerBucket = 1, gcTombstonesBelowLsn = Some(100L))
     val state = table.pages(snap).collect()
       .map(r => r.getAs[String]("url") -> r.getAs[String]("text")).toMap
@@ -131,7 +131,7 @@ class SortedFoldSpec extends SparkSpec {
       val shuffled = new scala.util.Random(b).shuffle(evs.map(_._2))
       CdcApply.applyBatchAppendRaw(table,
         spark.createDataset(shuffled).toDF().repartition(3), "adv", b.toLong,
-        createBuckets = 48, spanning = true)
+        createBuckets = 48)
     }
     val snap = table.currentSnapshot.get
     require(snap.files.size >= 30, s"want many small L0 files, got ${snap.files.size}")

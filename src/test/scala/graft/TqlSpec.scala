@@ -344,6 +344,10 @@ class TqlSpec extends SparkSpec {
     Tql(s"""import "$root"""")(b1)
     val table = new graft.lake.LakeTable(spark, root)
     val v1 = table.currentSnapshot.get.version
+    // an import is an L0 append: un-bucketed files, resolved on read
+    val files = table.currentSnapshot.get.files
+    assert(files.nonEmpty && files.forall(_.bucket == -1), files.map(_.bucket))
+    assert(table.needsResolve(table.currentSnapshot.get))
     table.tag("cut", v1)
     // second import continues the watermark (a NEW batch, not a replay-skip)
     val b2 = Seq(("U", 3L, 0, "u1", "one-v2"), ("D", 4L, 0, "u2", null))

@@ -226,7 +226,7 @@ class WapSpec extends SparkSpec {
     // file is a second version of every url it holds, which the dv mask
     // cannot account for — refused until compaction flushes it
     CdcApply.applyBatchAppendRaw(table, spark.createDataset(groups(0)).toDF(), "m", 0L,
-      createBuckets = 16, spanning = true)
+      createBuckets = 16)
     assert(table.currentSnapshot.get.files.exists(_.bucket < 0))
     val e1 = intercept[IllegalArgumentException](
       CdcApply.applyBatchDv(table, spark.createDataset(groups(1)).toDF(), "m", 1L,

@@ -263,6 +263,7 @@ object CdcApply {
         val appendRows = toFileRows(
           alignUser(winners.join(loserSide, Seq("url"), "left_anti"), mergedUser),
           mergedUser)
+        // one winner per url: the writer's LWW fold keeps every row
         val newFiles = phase("write-job") {
           table.writeDataFiles(appendRows, schemaId, snap0.buckets,
             nTasks = math.max(1, affected.size))

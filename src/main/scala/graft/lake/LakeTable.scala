@@ -607,19 +607,18 @@ class LakeTable(val spark: SparkSession, val root: String,
   /** Drop DV entries pointing at data files a partial compaction rewrote
     * (their rows are physically gone) and rewrite the survivors as ONE fresh
     * consolidated sidecar — the mask a long-running stream reads stays
-    * O(still-masked rows), not O(every delete ever). Paths are compared
-    * scheme-normalized: sidecar entries carry `_metadata.file_path` URIs
-    * while DataFile paths are Hadoop `Path.toString`s.
+    * O(still-masked rows), not O(every delete ever). Sidecar entries carry
+    * Spark's `_metadata.file_path`, the percent-encoded URI of the file,
+    * while DataFile paths are decoded Hadoop `Path.toString`s, so each live
+    * path is compared in its URI form.
     */
   private def consolidateDvs(snap: Snapshot, live: Seq[DataFile]): Seq[DvFile] = {
-    val livePaths = live.map(f => LakeTable.normalizePath(f.path))
+    val livePaths = live.map(f => new Path(f.path).toUri.toString)
     val liveDf = spark.createDataFrame(
       livePaths.map(org.apache.spark.sql.Row(_)).asJava,
       StructType(Seq(StructField("_live_path", StringType, nullable = false))))
     val kept = dvEntries(snap).join(broadcast(liveDf),
-      regexp_replace(col(LakeTable.DvPathCol), "^[a-z][a-zA-Z0-9+.-]*:/+", "/")
-        === col("_live_path"),
-      "left_semi")
+      col(LakeTable.DvPathCol) === col("_live_path"), "left_semi")
     writeDvFiles(kept)
   }
 
@@ -853,48 +852,39 @@ class LakeTable(val spark: SparkSession, val root: String,
 
   // -------------------------------------------------------------------- write
 
-  /** Write `rows` (already in file-schema shape, `_bucket` NOT included) as new
-    * per-bucket data files; returns their DataFile entries with footer stats.
-    * One output file per touched bucket: rows are hash-repartitioned on the
-    * bucket id and the dynamic-partition writer splits residual collisions.
-    * `sortWithinPartitions(_urlhash, url)` gives deterministic file content for
-    * replay comparison and clusters urls for scan locality.
+  /** The one bucketed writer: LWW fold + bucket placement of `raw` (file-schema
+    * shape, `_bucket` NOT included) in ONE exchange, written as per-bucket
+    * data files; returns their DataFile entries with footer stats. Dv winner
+    * appends and every compaction (a rebucket too) write through it.
+    *
+    * Rows are routed to bucket slots and each slot is sorted by
+    * `(_bucket, _urlhash, url, _lsn desc, _wal_part desc)` — which makes the
+    * per-url winner the FIRST row of its group AND is exactly the layout the
+    * bucketed writer wants (deterministic file content for replay comparison,
+    * urls clustered for scan locality) — then the O(1)-state [[KeyChange]]
+    * streaming filter keeps first-per-url. `resolve` followed by a bucketed
+    * write would pay TWO full-data exchanges (url hash-aggregate holding one
+    * wide row per key, then the bucket-slot repartition) plus the same sort;
+    * the fold's only wide state is the sorter's, which spills gracefully.
+    * Same LWW semantics: one winner per url by max `(_lsn, _wal_part)`. On
+    * single-version input (dv winners, a dv table's compaction) the filter
+    * keeps every row. One output file per touched bucket unless
+    * `maxRecordsPerFile` splits it.
+    *
+    * `gcTombstonesBelowLsn` drops tombstone WINNERS below the watermark —
+    * applied after the winner filter, in resolve-then-filter order (an
+    * ordinary deterministic filter; Catalyst keeps it above
+    * the nondeterministic [[KeyChange]] so it cannot drop a tombstone before
+    * the tombstone wins its group).
     */
-  def writeDataFiles(rows: DataFrame, schemaId: Int, buckets: Int, nTasks: Int,
-      maxRecordsPerFile: Long = 0L, compacted: Boolean = false): Seq[DataFile] = {
+  def writeDataFiles(raw: DataFrame, schemaId: Int, buckets: Int, nTasks: Int,
+      gcTombstonesBelowLsn: Option[Long] = None, maxRecordsPerFile: Long = 0L,
+      compacted: Boolean = false): Seq[DataFile] = {
     // Exact bucket→task placement (round-robin via ExactPartition): plain
     // repartition(col("_bucket")) re-hashes 64 bucket ids into nTasks
     // partitions and the balls-in-bins collisions gave the write stage a
     // measured 2x straggler. Buckets are uniform in rows (hash of url), so
     // round-robin slots are balanced.
-    val n = math.max(1, nTasks)
-    val bucketed = rows.withColumn("_bucket", LakeTable.bucketCol(col("_urlhash"), buckets))
-    val placed = ExactPartition.bySlot(bucketed, n, pmod(col("_bucket"), lit(n)))
-      .sortWithinPartitions(col("_bucket"), col("_urlhash"), col("url"))
-    writeBucketFiles(placed, schemaId, maxRecordsPerFile, compacted)
-  }
-
-  /** Sort-based LWW fold + bucketed write, fused into ONE exchange: route
-    * rows to bucket slots, sort each slot by
-    * `(_bucket, _urlhash, url, _lsn desc, _wal_part desc)` — which makes the
-    * per-url winner the FIRST row of its group AND is exactly the layout the
-    * bucketed writer wants — then keep first-per-url with the O(1)-state
-    * [[KeyChange]] streaming filter and write. Replaces
-    * `resolve` + [[writeDataFiles]] on the compaction path, which paid TWO
-    * full-data exchanges (url hash-aggregate holding one wide row per key,
-    * then the bucket-slot repartition) plus the same sort; the fold's only
-    * wide state is now the sorter's, which spills gracefully. Same LWW
-    * semantics: one winner per url by max `(_lsn, _wal_part)`.
-    *
-    * `gcTombstonesBelowLsn` drops tombstone WINNERS below the watermark —
-    * applied after the winner filter, same as the resolve-then-filter order
-    * it replaces (an ordinary deterministic filter; Catalyst keeps it above
-    * the nondeterministic [[KeyChange]] so it cannot drop a tombstone before
-    * the tombstone wins its group).
-    */
-  def writeDataFilesSortedFold(raw: DataFrame, schemaId: Int, buckets: Int, nTasks: Int,
-      gcTombstonesBelowLsn: Option[Long] = None, maxRecordsPerFile: Long = 0L,
-      compacted: Boolean = false): Seq[DataFile] = {
     val n = math.max(1, nTasks)
     val bucketed = raw.withColumn("_bucket", LakeTable.bucketCol(col("_urlhash"), buckets))
     val winners = ExactPartition.bySlot(bucketed, n, pmod(col("_bucket"), lit(n)))
@@ -905,20 +895,12 @@ class LakeTable(val spark: SparkSession, val root: String,
       case Some(w) => winners.filter(!col("_deleted") || col("_lsn") >= lit(w))
       case None => winners
     }
-    writeBucketFiles(kept, schemaId, maxRecordsPerFile, compacted)
-  }
-
-  /** Shared bucketed-write tail: `placed` must already be partitioned and
-    * sorted with `_bucket` leading (the dynamic-partition writer then opens
-    * one file at a time and file content is deterministic for replay
-    * comparison).
-    */
-  private def writeBucketFiles(placed: DataFrame, schemaId: Int,
-      maxRecordsPerFile: Long, compacted: Boolean): Seq[DataFile] = {
     val commitId = java.util.UUID.randomUUID().toString
     val dir = new Path(dataDir, commitId).toString
     graft.cdc.CdcApply.phase("spark-write") {
-      val writer = tiered(placed.write.partitionBy("_bucket"), compacted)
+      // `_bucket` leads the sort, so the dynamic-partition writer opens one
+      // file at a time
+      val writer = tiered(kept.write.partitionBy("_bucket"), compacted)
       // target file sizing: a 10^10-event table folded to one file per bucket
       // would produce ~TB parquet files — split on a row target instead
       // (readers/pruning already handle many files per bucket)
@@ -1021,11 +1003,23 @@ class LakeTable(val spark: SparkSession, val root: String,
     * (reference analogue `rebuild.cpp`). If `gcTombstonesBelowLsn` is set,
     * tombstones with `_lsn` below it are dropped — safe once the source's
     * out-of-orderness bound guarantees no older update can still arrive.
+    * Every rewrite goes through the sorted LWW fold of [[writeDataFiles]];
+    * the default row target is the reference's own partition cap
+    * (defaults.hpp:220, 4 Mi events), so "one file per bucket" never becomes
+    * a TB-scale file on a 10^10-event table.
     *
     * With `maxFilesPerBucket = 1` this is a FULL compaction (the OPTIMIZE
-    * analogue): every bucket is folded through [[resolve]] down to one
-    * version per url, the `needs_resolve` flag is cleared, deletion vectors
-    * are applied physically, and subsequent reads are pure scans.
+    * analogue): every bucket is folded down to one version per url, the
+    * `needs_resolve` flag is cleared, deletion vectors are applied
+    * physically, and subsequent reads are pure scans.
+    *
+    * `rebucket = Some(n)` with n ≠ the current count is a full compaction at
+    * the new count, whatever `maxFilesPerBucket` is: bucket = hash(url) % n
+    * changes for every row (as Iceberg partition-spec evolution does), so
+    * every file is rewritten, and the snapshot publishes the new count. Old
+    * snapshots keep their own count — time travel stays correct. A table
+    * created at 64 buckets must not still have 64 ~150GB buckets at 10^10
+    * rows.
     *
     * Partial compaction (`maxFilesPerBucket = k > 1`) rewrites, in each
     * bucket holding n > k files, only its n−k+1 smallest files (by rows,
@@ -1053,33 +1047,13 @@ class LakeTable(val spark: SparkSession, val root: String,
   def compact(maxFilesPerBucket: Int = 1, gcTombstonesBelowLsn: Option[Long] = None,
       maxRecordsPerFile: Long = 4L * 1024 * 1024, rebucket: Option[Int] = None): Snapshot = {
     val snap = currentSnapshot.getOrElse(throw new IllegalStateException("no table"))
-    rebucket.filter(_ != snap.buckets).foreach { nb =>
-      // Bucket-count evolution: a table created at 64 buckets must not still
-      // have 64 ~150GB buckets at 10^10 rows. Rebucketing is a full rewrite
-      // by construction (bucket = hash(url) % n changes for every row — the
-      // same is true of Iceberg partition-spec evolution), so it rides the
-      // full-compaction path: resolve once, write under the new count, and
-      // publish a snapshot whose readers/pruners use the new count. Old
-      // snapshots keep their own bucket count — time travel stays correct.
-      require(nb > 0, "bucket count must be positive")
-      val raw0 = readFiles(snap, snap.files, currentFileSchema(snap))
-      val nTasks = math.max(1, math.min(nb, spark.sparkContext.defaultParallelism * 2))
-      val newFiles = foldAndWrite(snap, raw0, nb, nTasks, gcTombstonesBelowLsn,
-        maxRecordsPerFile)
-      val rbProps = gcTombstonesBelowLsn.fold(
-        snap.props - LakeTable.NeedsResolveProp)(w =>
-        (snap.props - LakeTable.NeedsResolveProp) +
-          (LakeTable.TombstoneGcLsnProp -> math.max(w,
-            snap.props.get(LakeTable.TombstoneGcLsnProp).map(_.toLong)
-              .getOrElse(Long.MinValue)).toString))
-      // rebucket rewrites every row through the masked read → no DV survives
-      return commit(snap.copy(files = newFiles, buckets = nb, props = rbProps,
-        dvFiles = Nil))
-    }
+    val nb = rebucket.getOrElse(snap.buckets)
+    require(nb > 0, "bucket count must be positive")
     val byBucket = snap.files.groupBy(_.bucket)
     // a DV'd table at one file per bucket still needs the full pass: the
     // rewrite applies the masks physically so the sidecar list can be cleared
-    val full = maxFilesPerBucket <= 1 && (needsResolve(snap) || snap.dvFiles.nonEmpty)
+    val full = nb != snap.buckets ||
+      maxFilesPerBucket <= 1 && (needsResolve(snap) || snap.dvFiles.nonEmpty)
     val victims = byBucket.filter(_._2.size > maxFilesPerBucket)
     if (victims.isEmpty && gcTombstonesBelowLsn.isEmpty && !full) return snap
     val target = if (victims.nonEmpty && !full) victims else byBucket
@@ -1089,7 +1063,7 @@ class LakeTable(val spark: SparkSession, val root: String,
     // file the whole bucket is folded: past that point every run would
     // re-rewrite a merged delta nearly the base's size, more than folding
     // the base in once
-    val subset = maxFilesPerBucket > 1 && gcTombstonesBelowLsn.isEmpty
+    val subset = maxFilesPerBucket > 1 && gcTombstonesBelowLsn.isEmpty && !full
     val input = target.toSeq.flatMap { case (bucket, files) =>
       val small = files.sortBy(f => (f.rows, f.path)).take(files.size - maxFilesPerBucket + 1)
       if (!subset || bucket < 0 || 2 * small.map(_.rows).sum >= files.map(_.rows).max) files
@@ -1097,8 +1071,8 @@ class LakeTable(val spark: SparkSession, val root: String,
     }
     val inputPaths = input.map(_.path).toSet
     val untouched = snap.files.filterNot(f => inputPaths.contains(f.path))
-    // resolve folds merge-on-read deltas down to one version per url.
-    // Folding a file SUBSET is always safe (max_by is associative: the global
+    // the fold reduces merge-on-read deltas to one version per url.
+    // Folding a file SUBSET is always safe (LWW is associative: the global
     // read-side resolve still picks the true winner across subsets) — but
     // DROPPING rows is not: a tombstone may kill a version living in a file
     // outside the subset. With L0 spanning files a url's versions can straddle
@@ -1110,12 +1084,15 @@ class LakeTable(val spark: SparkSession, val root: String,
     val gcSafe = gcTombstonesBelowLsn.filter(_ =>
       !byBucket.contains(-1) || untouched.isEmpty)
     val raw0 = readFiles(snap, input, currentFileSchema(snap))
-    // An L0 flush (-1 in the target) spans all buckets → slot-scaled writers;
-    // plain bucket compaction keeps one task per victim bucket.
+    // A rebucket or an L0 flush (-1 in the target) spans all buckets →
+    // slot-scaled writers; plain bucket compaction keeps one task per victim
+    // bucket.
     val nTasks =
-      if (target.contains(-1)) math.min(snap.buckets, spark.sparkContext.defaultParallelism * 2)
+      if (nb != snap.buckets || target.contains(-1))
+        math.min(nb, spark.sparkContext.defaultParallelism * 2)
       else target.size
-    val newFiles = foldAndWrite(snap, raw0, snap.buckets, nTasks, gcSafe, maxRecordsPerFile)
+    val newFiles = writeDataFiles(raw0, snap.currentSchemaId, nb, nTasks,
+      gcTombstonesBelowLsn = gcSafe, maxRecordsPerFile = maxRecordsPerFile, compacted = true)
     // only a rewrite of EVERY file leaves one version per url; after a
     // subset rewrite the files left in place may still hold older versions
     val props0 =
@@ -1130,39 +1107,16 @@ class LakeTable(val spark: SparkSession, val root: String,
     // physically: every file rewritten → no DV survives; otherwise keep only
     // entries pointing at files left in place (a base file outside the
     // subset keeps its masked rows masked), rewritten as one fresh sidecar.
-    // The fold drops rows only through the mask, the resolve or the GC, so
-    // when it wrote every input row no entry pointed at a rewritten file and
-    // the sidecar list stands as it is, with no consolidation job
+    // The fold drops rows only through the mask, the LWW filter or the GC,
+    // so when it wrote every input row no entry pointed at a rewritten file
+    // and the sidecar list stands as it is, with no consolidation job
     val dvLeft =
       if (snap.dvFiles.isEmpty || untouched.isEmpty) Nil
       else if (newFiles.map(_.rows).sum == input.map(_.rows).sum) snap.dvFiles
       else consolidateDvs(snap, untouched)
-    commit(snap.copy(files = untouched ++ newFiles, lineage = snap.lineage,
-      props = props, dvFiles = dvLeft))
+    commit(snap.copy(files = untouched ++ newFiles, buckets = nb, props = props,
+      dvFiles = dvLeft))
   }
-
-  /** The compaction write: multi-version tables go through the fused
-    * sort-based fold ([[writeDataFilesSortedFold]]: winner selection AND the
-    * GC filter, applied to winners only); single-version tables (dv, or
-    * compacted) skip the semantically no-op LWW fold. Default row target =
-    * the reference's own partition cap (defaults.hpp:220, 4 Mi events) —
-    * "one file per bucket" must not become a TB-scale file on a
-    * 10^10-event table.
-    */
-  private def foldAndWrite(snap: Snapshot, raw: DataFrame, buckets: Int, nTasks: Int,
-      gcTombstonesBelowLsn: Option[Long], maxRecordsPerFile: Long): Seq[DataFile] =
-    if (needsResolve(snap))
-      writeDataFilesSortedFold(raw, snap.currentSchemaId, buckets, nTasks = nTasks,
-        gcTombstonesBelowLsn = gcTombstonesBelowLsn,
-        maxRecordsPerFile = maxRecordsPerFile, compacted = true)
-    else {
-      val kept = gcTombstonesBelowLsn match {
-        case Some(w) => raw.filter(!col("_deleted") || col("_lsn") >= lit(w))
-        case None => raw
-      }
-      writeDataFiles(kept, snap.currentSchemaId, buckets, nTasks = nTasks,
-        maxRecordsPerFile = maxRecordsPerFile, compacted = true)
-    }
 
   // ------------------------------------------- WAP: staged commits (audit)
 
@@ -1290,11 +1244,12 @@ class LakeTable(val spark: SparkSession, val root: String,
             s"staged '$wapId' rewrites ${removed.size} base file(s) but the table advanced " +
               s"past its base v${staged.version} (head v$head) — drop and re-audit")
         val cur = snapshotAt(head)
-        // a concurrent REBUCKET changed bucket = hash % n for every row: the
-        // staged files' manifest bucket ids are stale and bucket-pruned
-        // reads would silently miss them — refuse, re-audit under the new
-        // layout
-        if (cur.buckets != base.buckets)
+        // a concurrent REBUCKET changed bucket = hash % n for every row: a
+        // staged bucketed file's manifest bucket id is stale and
+        // bucket-pruned reads would silently miss it — refuse, re-audit
+        // under the new layout. L0 files (bucket -1) span every bucket, so
+        // a stage of only those is valid under any count
+        if (cur.buckets != base.buckets && added.exists(_.bucket >= 0))
           throw new java.util.ConcurrentModificationException(
             s"staged '$wapId' was bucketed under buckets=${base.buckets} but the table " +
               s"was rebucketed to ${cur.buckets} — drop and re-audit")
@@ -1595,15 +1550,6 @@ object LakeTable {
     * what keeps real tables under it. */
   def DvBroadcastLimit: Long =
     sys.props.get("graft.dvBroadcastLimit").map(_.toLong).getOrElse(2L * 1000 * 1000)
-
-  /** Scheme-normalized path for cross-representation comparison: strips the
-    * URI scheme but keeps authority + path, matching the sidecar-side
-    * `regexp_replace(path, "^scheme:/+", "/")` normalization. */
-  def normalizePath(p: String): String = {
-    val u = new Path(p).toUri
-    Option(u.getAuthority).filter(_.nonEmpty)
-      .map(a => s"/$a${u.getPath}").getOrElse(u.getPath)
-  }
 
   /** Per-root intra-process commit lock (see [[LakeTable.commit]]). */
   private val commitMutexes =

@@ -414,30 +414,20 @@ object Pipe {
       * subplans and merge (reference `if.cpp`). Subplans must produce
       * union-compatible schemas.
       *
-      * Default lowering scans the source once PER BRANCH, each scan carrying
-      * its own pushed disjoint predicate — the right trade when the source
-      * is a pruned columnar scan (predicate + column pushdown make each
-      * branch's scan cheap, and nothing is materialized). For an EXPENSIVE
-      * un-prunable source (a subprocess parse, an un-pushable UDF chain),
-      * set `cacheSource = true`: the input is materialized once
-      * (`localCheckpoint` — compute-once, lineage-truncated) and both
-      * branches route from the cached blocks — one source evaluation, at
-      * the cost of materializing the whole frame. `localCheckpoint` is a
-      * batch-only operation, so on a STREAMING frame the flag is ignored
-      * and the routing lowering is used (a session-wide
-      * `-Dgraft.tql.ifCache=true` must not break streaming `if`s).
+      * The lowering scans the source once PER BRANCH, each scan carrying its
+      * own pushed disjoint predicate — the right trade when the source is a
+      * pruned columnar scan (predicate + column pushdown make each branch's
+      * scan cheap, and nothing is materialized).
       *
       * The predicate must be DETERMINISTIC: it is evaluated independently
       * per branch (the same contract Spark itself applies to filters — a
       * `rand()`-style predicate re-draws per evaluation and would route
       * rows into both or neither branch).
       */
-    def ifElse_(pred: Column, thenP: DataFrame => DataFrame, elseP: DataFrame => DataFrame,
-        cacheSource: Boolean = false): DataFrame = {
-      val src = if (cacheSource && !df.isStreaming) df.localCheckpoint(true) else df
-      thenP(src.filter(pred)).unionByName(elseP(src.filter(!pred || pred.isNull)),
+    def ifElse_(pred: Column, thenP: DataFrame => DataFrame,
+        elseP: DataFrame => DataFrame): DataFrame =
+      thenP(df.filter(pred)).unionByName(elseP(df.filter(!pred || pred.isNull)),
         allowMissingColumns = true)
-    }
 
     /** `assert expr` — filter that counts what it drops into an accumulator-
       * style metric column contract (reference `where_map.cpp:148-248`); we

@@ -582,10 +582,7 @@ object Tql {
           requireUngrouped(st, "if")
           def run(stmts: Seq[Stmt])(d: DataFrame): DataFrame =
             stmts.foldLeft(new State(d, st.orderKeys))((s, x) => x(s)).df
-          // -Dgraft.tql.ifCache=true: cache-once-route lowering for
-          // expensive un-prunable sources (see Pipe.ifElse_ scaladoc)
-          st.next(st.df.ifElse_(cond, run(thenStmts), run(elseStmts),
-            cacheSource = sys.props.get("graft.tql.ifCache").contains("true")))
+          st.next(st.df.ifElse_(cond, run(thenStmts), run(elseStmts)))
         }
       // `every <duration> { … }` / `cron "<expr>" { … }` — scheduled
       // subpipelines (reference `every_cron.cpp`; docs

@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.col
 
 import graft.cdc.CdcApply
@@ -30,12 +31,14 @@ class CdcDvSpec extends SparkSpec {
   private def segGroups(events: Seq[GenEvent], segsPerBatch: Int): Seq[Seq[GenEvent]] =
     events.groupBy(_.seg / segsPerBatch).toSeq.sortBy(_._1).map(_._2)
 
-  /** Every DV entry of `snap` as (scheme-less data-file path, row ordinal). */
+  /** Every DV entry of `snap` as (data-file URI, row ordinal). */
   private def dvEntries(snap: graft.lake.Snapshot): Set[(String, Long)] =
     if (snap.dvFiles.isEmpty) Set.empty
     else spark.read.schema(LakeTable.dvSchema).parquet(snap.dvFiles.map(_.path): _*)
-      .as[(String, Long)].collect()
-      .map { case (p, pos) => (p.replaceFirst("^[a-z][a-zA-Z0-9+.-]*:/+", "/"), pos) }.toSet
+      .as[(String, Long)].collect().toSet
+
+  /** A data file's path in the percent-encoded URI form DV entries carry. */
+  private def uriOf(f: graft.lake.DataFile): String = new Path(f.path).toUri.toString
 
   /** urls holding more than one unmasked row — the single-live-version
     * invariant that lets dv reads skip the resolve. */
@@ -144,7 +147,7 @@ class CdcDvSpec extends SparkSpec {
     val snap = table.compact(maxFilesPerBucket = 2)
     assert(pagesMap(table.pages(snap)) == golden)
     // every surviving entry must point at a file that still exists
-    val live = snap.files.map(f => LakeTable.normalizePath(f.path)).toSet
+    val live = snap.files.map(uriOf).toSet
     dvEntries(snap).foreach { case (p, _) =>
       assert(live.contains(p), s"dangling DV entry for $p")
     }
@@ -152,8 +155,11 @@ class CdcDvSpec extends SparkSpec {
     assert(liveDupes(table, snap) == 0)
   }
 
-  test("partial compaction folds only the small deltas; the base file and its DV entries stay") {
-    val table = new LakeTable(spark, tmpDir())
+  /** Base + two small dv deltas in every bucket, then `compact(k = 2)`: only
+    * the deltas are rewritten, and the base's DV entries survive the
+    * consolidation exactly. */
+  private def baseAndTwoDeltas(root: String): Unit = {
+    val table = new LakeTable(spark, root)
     // seven eighths of the stream build the base, two small batches follow
     val ordered = allEvents.sortBy(e => (e.seg, e.lsn))
     val (baseEvents, rest) = ordered.splitAt(ordered.size * 7 / 8)
@@ -174,7 +180,7 @@ class CdcDvSpec extends SparkSpec {
     }, "want the two deltas under half the base's rows in every bucket")
     val bases = byBucket.values.map(_.maxBy(_.rows)).toSeq
     assert(byBucket.values.forall(fs => fs.count(_.rows == fs.map(_.rows).max) == 1))
-    val basePaths = bases.map(f => LakeTable.normalizePath(f.path)).toSet
+    val basePaths = bases.map(uriOf).toSet
     val baseEntries = dvEntries(before).filter(e => basePaths.contains(e._1))
     assert(baseEntries.nonEmpty, "the deltas must mask rows of the base")
     val snap = table.compact(maxFilesPerBucket = 2)
@@ -185,6 +191,16 @@ class CdcDvSpec extends SparkSpec {
     assert(dvEntries(snap) == baseEntries)
     assert(liveDupes(table, snap) == 0)
     assert(pagesMap(table.pages(snap)) == golden)
+  }
+
+  test("partial compaction folds only the small deltas; the base file and its DV entries stay") {
+    baseAndTwoDeltas(tmpDir())
+  }
+
+  test("partial compaction keeps the base's DV entries under a root with a space and a %") {
+    // DV entries carry the percent-encoded file URI, DataFile paths the
+    // decoded form: the two spellings differ only under such a root
+    baseAndTwoDeltas(tmpDir() + "/lake with space o u%t")
   }
 
   /** Apply one hand-made `(op, lsn, url)` batch to a one-bucket dv table. */
@@ -249,7 +265,7 @@ class CdcDvSpec extends SparkSpec {
     val snap = table.compact(maxFilesPerBucket = 2)
     // only the deltas were folded: the base stays, with its masks
     assert(snap.files.size == 2 && snap.files.exists(_.path == base.path))
-    assert(dvEntries(snap).map(_._1) == Set(LakeTable.normalizePath(base.path)))
+    assert(dvEntries(snap).map(_._1) == Set(uriOf(base)))
     assert(liveDupes(table, snap) == 0)
     assert(textsOf(table, snap) == expected && expected.size == 400)
   }
@@ -272,7 +288,7 @@ class CdcDvSpec extends SparkSpec {
     assert(snap.files.size == 2 && snap.files.exists(_.path == base.path))
     // no consolidation: the very same sidecars, all pointing at the base
     assert(snap.dvFiles == before.dvFiles)
-    assert(dvEntries(snap).map(_._1) == Set(LakeTable.normalizePath(base.path)))
+    assert(dvEntries(snap).map(_._1) == Set(uriOf(base)))
     assert(liveDupes(table, snap) == 0)
     assert(textsOf(table, snap) == expected && expected.size == 203)
   }
@@ -419,7 +435,7 @@ class CdcDvSpec extends SparkSpec {
     // reflects only still-live files
     assert(snap.files.groupBy(_.bucket).values.forall(_.size <= 2))
     assert(firstFiles.nonEmpty && firstFiles.intersect(snap.files.map(_.path).toSet).isEmpty)
-    val live = snap.files.map(f => LakeTable.normalizePath(f.path)).toSet
+    val live = snap.files.map(uriOf).toSet
     assert(dvEntries(snap).forall(e => live.contains(e._1)))
     // checkpoint resume: nothing new to apply, state unchanged
     var applied2 = 0

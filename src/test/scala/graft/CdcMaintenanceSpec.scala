@@ -271,6 +271,25 @@ class CdcMaintenanceSpec extends SparkSpec {
     assert(got.length == 1 && got(0).getAs[String]("text") == exp._1)
     // time travel: the pre-rebucket snapshot still reads with its own count
     assert(pagesMap(table.pages(table.snapshotAt(before.version))) == golden)
+
+    // a rebucket is a full compaction whatever maxFilesPerBucket is: on a dv
+    // table with DV entries the subset rule must not leave a file in place
+    val dv = new LakeTable(spark, tmpDir())
+    segGroups(allEvents, 2).zipWithIndex.foreach { case (g, i) =>
+      CdcApply.applyBatchDv(dv, spark.createDataset(g).toDF(), "rbdv", i.toLong,
+        createBuckets = 16)
+    }
+    val dvBefore = dv.currentSnapshot.get
+    assert(dvBefore.dvFiles.nonEmpty && dvBefore.files.size > 16)
+    val dvSnap = dv.compact(maxFilesPerBucket = 3, rebucket = Some(8))
+    assert(dvSnap.buckets == 8)
+    assert(dvSnap.files.forall(f => f.bucket >= 0 && f.bucket < 8))
+    assert(dvSnap.files.map(_.path).toSet.intersect(dvBefore.files.map(_.path).toSet).isEmpty,
+      "every file is rewritten")
+    assert(dvSnap.dvFiles.isEmpty)
+    assert(!dv.needsResolve(dvSnap))
+    assert(pagesMap(dv.pages(dvSnap)) == pagesMap(dv.pages(dvBefore)))
+    assert(pagesMap(dv.pages(dvSnap)) == golden)
   }
 
   test("lineage log keeps full history past the snapshot tail and expiry") {

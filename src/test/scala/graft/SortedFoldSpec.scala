@@ -58,9 +58,8 @@ class SortedFoldSpec extends SparkSpec {
     assert(table.scanRaw(snap).count() == winners.count())
   }
 
-  test("sorted fold runs exactly one shuffle") {
-    val table = new LakeTable(spark, tmpDir())
-    l0Replay(table)
+  /** Stages that wrote shuffle bytes while `body` ran. */
+  private def shufflesDuring(body: => Unit): Int = {
     val counter = new java.util.concurrent.atomic.AtomicInteger
     val stages = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
@@ -73,13 +72,33 @@ class SortedFoldSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      table.compact(maxFilesPerBucket = 1)
+      body
       // listener delivery is async; wait for the stage events to drain
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       while (stages.get() == 0 && System.nanoTime() < deadline) Thread.sleep(50)
       Thread.sleep(300) // let straggler stage events land
     } finally spark.sparkContext.removeSparkListener(listener)
-    assert(counter.get() == 1)
+    counter.get()
+  }
+
+  test("sorted fold runs exactly one shuffle") {
+    val table = new LakeTable(spark, tmpDir())
+    l0Replay(table)
+    assert(shufflesDuring(table.compact(maxFilesPerBucket = 1)) == 1)
+    // a dv table's compaction is single-version input through the same
+    // fold: one shuffle, and every unmasked row is kept
+    val dv = new LakeTable(spark, tmpDir())
+    segGroups(allEvents, 8).zipWithIndex.foreach { case (g, i) =>
+      CdcApply.applyBatchDv(dv, spark.createDataset(g).toDF(), "d", i.toLong,
+        createBuckets = 16)
+    }
+    val before = dv.currentSnapshot.get
+    assert(before.dvFiles.nonEmpty && !dv.needsResolve(before))
+    val rows = dv.scanRaw(before).count()
+    assert(shufflesDuring(dv.compact(maxFilesPerBucket = 1)) == 1)
+    val after = dv.currentSnapshot.get
+    assert(after.dvFiles.isEmpty)
+    assert(dv.scanRaw(after).count() == rows)
   }
 
   test("GC runs after the winner filter: a GC'd tombstone never resurrects its victim") {
@@ -137,7 +156,7 @@ class SortedFoldSpec extends SparkSpec {
     require(snap.files.size >= 30, s"want many small L0 files, got ${snap.files.size}")
     val schema = table.currentFileSchema(snap)
     val raw = table.readFiles(snap, snap.files, schema)
-    val out = table.writeDataFilesSortedFold(raw, snap.currentSchemaId,
+    val out = table.writeDataFiles(raw, snap.currentSchemaId,
       buckets = 48, nTasks = 5)
     assert(out.map(_.bucket).distinct.size > 5) // genuinely multi-bucket
     val folded = table.readFiles(snap, out, schema)

@@ -201,13 +201,23 @@ class WapSpec extends SparkSpec {
     val groups = segGroups(allEvents, 6)
     CdcApply.applyBatchAppendRaw(table, spark.createDataset(groups(0)).toDF(), "f", 0L,
       createBuckets = 16)
-    // rebucket fence: staged under 16 buckets, table rebucketed to 8
+    // rebucket fence: staged under 16 buckets, table rebucketed to 8. A
+    // stage that adds a bucketed file carries stale bucket ids — refused
+    val base = table.currentSnapshot.get
+    val bucketed = table.writeDataFiles(table.scanRaw(base), base.currentSchemaId,
+      base.buckets, nTasks = 4)
+    assert(bucketed.nonEmpty && bucketed.forall(_.bucket >= 0))
+    table.stageCommit(base.copy(files = base.files ++ bucketed), "rbb")
+    // an L0 stage spans every bucket, so it is valid under any count
     CdcApply.applyBatchAppendRaw(table, spark.createDataset(groups(1)).toDF(), "f-a", 1L,
       createBuckets = 16, stageAs = Some("rb"))
     table.compact(rebucket = Some(8))
-    val e1 = intercept[java.util.ConcurrentModificationException](table.publishStaged("rb"))
+    val e1 = intercept[java.util.ConcurrentModificationException](table.publishStaged("rbb"))
     assert(e1.getMessage.contains("rebucketed"))
-    table.dropStaged("rb")
+    table.dropStaged("rbb")
+    val published = table.publishStaged("rb")
+    assert(published.buckets == 8)
+    assert(pagesMap(table.pages(published)) == expectedMap(groups(0) ++ groups(1)))
     // tombstone-GC fence: stage an old-lsn batch, GC tombstones above it
     CdcApply.applyBatchAppendRaw(table, spark.createDataset(groups(2)).toDF(), "f-b", 1L,
       createBuckets = 16, stageAs = Some("gc"))

@@ -2,7 +2,8 @@ package graft.lake
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.{HadoopReadOptions, ParquetReadOptions}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, SparkSession}
@@ -596,10 +597,11 @@ class LakeTable(val spark: SparkSession, val root: String,
     graft.cdc.CdcApply.phase("dv-write") {
       tiered(placed.write, compacted = false).parquet(dir.toString)
     }
+    val options = HadoopReadOptions.builder(conf).build()
     val entries = fs.listStatus(dir)
       .filter(_.getPath.getName.endsWith(".parquet")).toSeq
       .map(f => DvFile(f.getPath.toString,
-        LakeTable.footerStats(f.getPath, conf, Nil)._1))
+        LakeTable.footerStats(f, conf, options, Nil)._1))
       .filter(_.rows > 0)
     if (entries.isEmpty) { fs.delete(dir, true); Nil } else entries
   }
@@ -843,9 +845,7 @@ class LakeTable(val spark: SparkSession, val root: String,
     val sys = Schemas.systemColumns.map(_.name).toSet
     val userCols = target.fields.map(_.name)
       .filterNot(c => sys.contains(c) || c == "url").toSeq
-    val raw = scanRaw(sTo)
-    val one = if (needsResolve(sTo)) resolve(raw) else raw
-    one.filter(!col("_deleted"))
+    resolveIfNeeded(sTo, scanRaw(sTo)).filter(!col("_deleted"))
       .select(lit("insert").as("change_type") +: col("url") +:
         userCols.map(col) :+ col("_lsn").as("lsn"): _*)
   }
@@ -911,7 +911,7 @@ class LakeTable(val spark: SparkSession, val root: String,
   }
 
   /** The parquet settings of a lake file; reads need none, since parquet
-    * records the codec per column chunk.
+    * records the codec of each column chunk and the encoding of each page.
     *
     * - '''One codec for every file''': L0 spanning files, dv winner
     *   appends, DV sidecars and compaction output are all zstd level 1. On
@@ -921,6 +921,18 @@ class LakeTable(val spark: SparkSession, val root: String,
     *   bytes than snappy, for an l0 ingest cost of 2–13% at 4M-event
     *   batches that the host's noise leaves unresolved (BASELINE.md,
     *   "Tiered lake codec" and "One lake codec").
+    * - '''No dictionary pages''': every page is PLAIN. By default parquet-mr
+    *   hashes every value of every column into a dictionary and falls back
+    *   to PLAIN once the dictionary is no smaller than the data. On the
+    *   lake's rows it fell back for html, text, `_lsn` and `_urlhash` in
+    *   every file and for url in every bucket file, about 97% of the bytes;
+    *   a dictionary stuck only on lang, `_wal_part`, `warc_ts`, the url of
+    *   L0 files and a DV sidecar's `_dv_path`, under 10 B of a 320-340 B
+    *   row, and zstd finds those repeats anyway. So the hashing is
+    *   per-value work thrown away: one 30,000-row write takes 0.45 s of CPU
+    *   without it against 0.54 s, at 0.2% fewer bytes. The reference
+    *   dictionary-encodes only columns declared `enumeration` (SURVEY.md),
+    *   and the lake has none (BASELINE.md, "Round 6: no dictionary pages").
     * - '''A url bloom filter on compaction output''' (`compacted`) only.
     *   Files are sorted by `_urlhash`, so url's row-group min/max stats
     *   cannot prune a point lookup; the bloom lets parquet-mr skip row
@@ -937,6 +949,7 @@ class LakeTable(val spark: SparkSession, val root: String,
   private def tiered[T](w: DataFrameWriter[T], compacted: Boolean): DataFrameWriter[T] = {
     val zstd = w.option("compression", "zstd")
       .option("parquet.compression.codec.zstd.level", "1")
+      .option("parquet.enable.dictionary", "false")
     if (compacted)
       zstd.option("parquet.bloom.filter.enabled#url", "true")
         .option("parquet.bloom.filter.adaptive.enabled", "true")
@@ -973,21 +986,23 @@ class LakeTable(val spark: SparkSession, val root: String,
     val entries = fs.listStatus(d)
     val buckets = entries.filter(s => s.isDirectory && s.getPath.getName.startsWith("_bucket="))
     // flat layout (no _bucket= dirs) = L0 spanning files → bucket -1
-    val l0: Seq[(Int, org.apache.hadoop.fs.FileStatus)] = entries.toSeq
+    val l0: Seq[(Int, FileStatus)] = entries.toSeq
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       .map(f => (-1, f))
-    val work: Seq[(Int, org.apache.hadoop.fs.FileStatus)] = l0 ++ buckets.toSeq.flatMap { bs =>
+    val work: Seq[(Int, FileStatus)] = l0 ++ buckets.toSeq.flatMap { bs =>
       val bucket = bs.getPath.getName.stripPrefix("_bucket=").toInt
       fs.listStatus(bs.getPath).filter(f => f.getPath.getName.endsWith(".parquet"))
         .map(f => (bucket, f))
     }
+    val options = HadoopReadOptions.builder(conf).build()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(16, work.size)))
     try {
       val futures = work.map { case (bucket, f) =>
         pool.submit(new java.util.concurrent.Callable[DataFile] {
           def call(): DataFile = {
-            val (rows, stats) = LakeTable.footerStats(f.getPath, conf, Seq("_lsn", "_urlhash"))
+            val (rows, stats) =
+              LakeTable.footerStats(f, conf, options, Seq("_lsn", "_urlhash"))
             val (minL, maxL) = stats("_lsn"); val (minH, maxH) = stats("_urlhash")
             DataFile(f.getPath.toString, bucket, schemaId, rows, f.getLen, minL, maxL, minH, maxH)
           }
@@ -1577,10 +1592,17 @@ object LakeTable {
     (if (m < 0) m + buckets else m).toInt
   }
 
-  /** Row count + per-column (min,max) from a Parquet footer (no data IO). */
-  def footerStats(path: Path, conf: org.apache.hadoop.conf.Configuration,
-      cols: Seq[String]): (Long, Map[String, (Long, Long)]) = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+  /** Row count + per-column (min,max) from a Parquet footer (no data IO).
+    * `file` is the listing's status, so opening the file costs no second
+    * `getFileStatus`. Build `options` once per run of footer reads with
+    * `HadoopReadOptions.builder(conf).build()`: without them
+    * `ParquetFileReader.open` builds a fresh Hadoop `Configuration` per file,
+    * which parses Hadoop's XML resources again. Footer reads never take a
+    * decompressor from the options' codec factory, so threads can share
+    * them. */
+  def footerStats(file: FileStatus, conf: org.apache.hadoop.conf.Configuration,
+      options: ParquetReadOptions, cols: Seq[String]): (Long, Map[String, (Long, Long)]) = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf), options)
     try {
       val blocks = reader.getFooter.getBlocks.asScala
       val rows = blocks.map(_.getRowCount).sum

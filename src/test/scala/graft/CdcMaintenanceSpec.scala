@@ -57,16 +57,20 @@ class CdcMaintenanceSpec extends SparkSpec {
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
       try f(reader) finally reader.close()
     }
-    /** (codec, carries a bloom filter) of every column chunk of a file. */
-    def chunks(path: String): Seq[(CompressionCodecName, Boolean)] = withReader(path) { r =>
-      r.getRowGroups.asScala.toSeq.flatMap(_.getColumns.asScala.map(c =>
-        (c.getCodec, c.getBloomFilterOffset >= 0)))
-    }
-    /** The append tier: zstd, no bloom filter, in every column chunk. */
+    /** (codec, carries a bloom filter, has a dictionary page) of every
+      * column chunk of a file. */
+    def chunks(path: String): Seq[(CompressionCodecName, Boolean, Boolean)] =
+      withReader(path) { r =>
+        r.getRowGroups.asScala.toSeq.flatMap(_.getColumns.asScala.map(c =>
+          (c.getCodec, c.getBloomFilterOffset >= 0, c.hasDictionaryPage)))
+      }
+    /** The append tier: zstd, no bloom filter and no dictionary page, in
+      * every column chunk. */
     def assertAppendTier(paths: Seq[String], what: String): Unit = {
       assert(paths.nonEmpty, s"no $what files")
-      paths.foreach(p => assert(chunks(p).toSet == Set((CompressionCodecName.ZSTD, false)),
-        s"$what file $p"))
+      paths.foreach(p =>
+        assert(chunks(p).toSet == Set((CompressionCodecName.ZSTD, false, false)),
+          s"$what file $p"))
     }
     val table = new LakeTable(spark, tmpDir())
     segGroups(allEvents, 6).zipWithIndex.foreach { case (g, i) =>
@@ -76,8 +80,9 @@ class CdcMaintenanceSpec extends SparkSpec {
     assertAppendTier(table.currentSnapshot.get.files.map(_.path), "L0 append")
     table.compact(maxFilesPerBucket = 1)
     val snap = table.currentSnapshot.get
-    // every column chunk of the compaction output is zstd
-    snap.files.foreach(f => assert(chunks(f.path).forall(_._1 == CompressionCodecName.ZSTD),
+    // every column chunk of the compaction output is zstd with no dictionary page
+    snap.files.foreach(f => assert(
+      chunks(f.path).forall(c => c._1 == CompressionCodecName.ZSTD && !c._3),
       s"compacted file ${f.path}"))
     val f = snap.files.head
     assert(f.rows > 500, s"want a file of several hundred rows, got ${f.rows}")

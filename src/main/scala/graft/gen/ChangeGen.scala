@@ -1,5 +1,6 @@
 package graft.gen
 
+import java.nio.charset.StandardCharsets
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -67,9 +68,17 @@ object ChangeGen {
     z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
     z ^ (z >>> 31)
   }
-  @inline private def h(seed: Long, parts: Long*): Long =
-    parts.foldLeft(mix(seed))((a, b) => mix(a ^ b))
+  // h(seed, a, b, ...) = mix(...mix(mix(mix(seed) ^ a) ^ b)...), fixed arity so
+  // the per-row calls box nothing
+  @inline private def h(seed: Long, a: Long): Long = mix(mix(seed) ^ a)
+  @inline private def h(seed: Long, a: Long, b: Long): Long = mix(h(seed, a) ^ b)
   @inline private def unit(x: Long): Double = (x >>> 11) * (1.0 / (1L << 53))
+
+  /** `java.lang.Long.remainderUnsigned(x, d)` for `d > 0`, without the JDK 17
+    * `BigInteger` path for a negative `x`: x = 2a + b, so x mod d = (2(a mod d) + b) mod d.
+    */
+  @inline private[graft] def remU(x: Long, d: Long): Long =
+    if (x >= 0) x % d else (((x >>> 1) % d) * 2 + (x & 1L)) % d
 
   /** Inverse-CDF Zipf sampler over [0, n). CDF built once per executor task. */
   final class Zipf(n: Int, s: Double) extends Serializable {
@@ -114,54 +123,104 @@ object ChangeGen {
     math.min(n - 1, (u * u * u * n).toLong)
   }
 
+  private val Digits = "0123456789abcdefghijklmnopqrstuvwxyz"
+  private val Pow36: Array[Long] = Array.iterate(1L, 13)(_ * 36L) // 36^0 .. 36^12
+
+  /** Appends the first `n` (1 to 12) characters of
+    * `java.lang.Long.toUnsignedString(st, 36)`, all of them if it is shorter,
+    * with no `BigInteger` and no `String`. A negative `st` is at least
+    * 2^63 > 36^12 and so has 13 digits; the leading `n` of `len` digits are
+    * `st / 36^(len-n)` (unsigned), and since 36^k is even that equals
+    * `(st >>> 1) / (36^k / 2)`, a signed division.
+    */
+  private[graft] def appendBase36Prefix(sb: java.lang.StringBuilder, st: Long, n: Int): Unit = {
+    var len = 13
+    if (st >= 0) while (len > 1 && st < Pow36(len - 1)) len -= 1
+    val k = math.min(len, n)
+    var q = if (len == k) st else (st >>> 1) / (Pow36(len - k) >>> 1)
+    val end = sb.length + k
+    sb.setLength(end)
+    var p = end
+    while (p > end - k) {
+      p -= 1
+      sb.setCharAt(p, Digits.charAt((q % 36).toInt))
+      q /= 36
+    }
+  }
+
   /** Deterministic page text for (url, lsn): the oracle for the byte-identical
-    * replay invariant. ~120–400 bytes of seeded base-36 words.
+    * replay invariant, ~120–400 bytes of seeded base-36 words.
+    *
+    * The text is `url=<url> v=<lsn>` and then `16 + s mod 40` words, each
+    * preceded by one space, where s = mix(mix(mix(mix(mix(seed) ^ 0x3E47) ^ lsn)
+    * ^ url.length) ^ url.hashCode) (the int widened with its sign) and "mod" is
+    * unsigned. Word `i` (from 0) is the first `3 + i % 6` characters of the
+    * unsigned base-36 form (`java.lang.Long.toUnsignedString(_, 36)`) of the
+    * `i+1`-th splitmix64 state after s, mix applied `i + 1` times.
+    *
+    * These bytes are a contract, not an implementation detail: cdcperf's
+    * `Wal.reference` fingerprints the live table from them, the replay goldens
+    * of FIXTURES.md §4 and the WALs Bench and Demo generate are built from them,
+    * and GenSpec pins them against the formula above and a golden fingerprint.
+    * A change here must keep every byte.
     */
   def textFor(url: String, lsn: Long, seed: Long): String = {
-    var st = h(seed, 0x3E47L, lsn, url.length.toLong, url.hashCode.toLong)
-    val words = 16 + (java.lang.Long.remainderUnsigned(st, 40L)).toInt
-    val sb = new StringBuilder(words * 8 + url.length + 24)
+    var st = mix(mix(h(seed, 0x3E47L, lsn) ^ url.length.toLong) ^ url.hashCode.toLong)
+    val words = 16 + remU(st, 40L).toInt
+    val sb = new java.lang.StringBuilder(words * 9 + url.length + 28)
     sb.append("url=").append(url).append(" v=").append(lsn)
     var i = 0
     while (i < words) {
       st = mix(st)
-      sb.append(' ').append(java.lang.Long.toUnsignedString(st, 36).take(3 + (i % 6)))
+      sb.append(' ')
+      appendBase36Prefix(sb, st, 3 + (i % 6))
       i += 1
     }
     sb.toString
   }
 
-  /** Build the event for global LSN `l` (without arrival/segment info). */
-  def eventAt(l: Long, cfg: GenConfig, zipf: Zipf): (Char, Long, Int, String, Long) = {
+  /** The event at global LSN `l`, arrival segment included; a duplicate
+    * re-delivery is the same event with `seg + 5` (see `events`).
+    */
+  def eventAt(l: Long, cfg: GenConfig, zipf: Zipf): GenEvent = {
     val op = opAt(l)
     val j = if (op == 'I') insertsBefore(l) else targetFor(l, cfg)
     val url = urlFor(j, cfg, zipf)
-    (op, l, (l % cfg.walParts).toInt, url, j)
+    val part = (l % cfg.walParts).toInt
+    val arrival = l + (cfg.walParts - 1 - part).toLong * 3L * cfg.segmentSize // per-part lag
+    val seg = arrival / cfg.segmentSize
+    val ts = new Timestamp((EpochBase + l) * 1000L)
+    if (op == 'D') GenEvent("D", l, part, url, ts, null, null, null, seg)
+    else {
+      val t = textFor(url, l, cfg.seed)
+      val html = ("<html><body>" + t + "</body></html>").getBytes(StandardCharsets.UTF_8)
+      val lang = Langs(remU(h(cfg.seed, 0x11A9L, j), Langs.length.toLong).toInt)
+      GenEvent(if (op == 'I') "I" else "U", l, part, url, ts, html, t, lang, seg)
+    }
   }
+
+  /** True when the event at `lsn` is delivered a second time, 5 segments later. */
+  private def redelivered(lsn: Long, cfg: GenConfig): Boolean =
+    remU(h(cfg.seed, 0xD4BL, lsn), cfg.dupMod.toLong) == 0L
 
   /** Full envelope + segment assignment, as a typed Dataset. Distributed: pure
     * function of the range index, no sequential state, no driver loop.
     */
   def events(spark: SparkSession, cfg: GenConfig): Dataset[GenEvent] = {
     import spark.implicits._
-    val skew = 3L * cfg.segmentSize // per-part arrival lag window
-    spark.range(cfg.events).flatMap { l =>
+    spark.range(cfg.events).mapPartitions { lsns =>
       val zipf = ZipfCache.get(cfg.domains, cfg.zipfExp)
-      val (op, lsn, part, url, j) = eventAt(l, cfg, zipf)
-      val ts = new Timestamp((EpochBase + lsn) * 1000L)
-      val (text, html, lang) =
-        if (op == 'D') (null: String, null: Array[Byte], null: String)
-        else {
-          val t = textFor(url, lsn, cfg.seed)
-          val hb = ("<html><body>" + t + "</body></html>").getBytes("UTF-8")
-          (t, hb, Langs((java.lang.Long.remainderUnsigned(h(cfg.seed, 0x11A9L, j), Langs.length.toLong)).toInt))
-        }
-      val arrival = lsn + (cfg.walParts - 1 - part).toLong * skew
-      val seg = arrival / cfg.segmentSize
-      val base = GenEvent(op.toString, lsn, part, url, ts, html, text, lang, seg)
-      if (java.lang.Long.remainderUnsigned(h(cfg.seed, 0xD4BL, lsn), cfg.dupMod.toLong) == 0L)
-        Seq(base, base.copy(seg = seg + 5)) // duplicate re-delivery, later segment
-      else Seq(base)
+      new Iterator[GenEvent] {
+        private var again: GenEvent = null // the pending duplicate re-delivery
+        def hasNext: Boolean = again != null || lsns.hasNext
+        def next(): GenEvent =
+          if (again != null) { val e = again; again = null; e }
+          else {
+            val e = eventAt(lsns.next(), cfg, zipf)
+            if (redelivered(e.lsn, cfg)) again = e.copy(seg = e.seg + 5)
+            e
+          }
+      }
     }
   }
 

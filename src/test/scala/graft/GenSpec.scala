@@ -1,6 +1,48 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
+
 import graft.gen.{ChangeGen, GenConfig}
+
+/** The generator as first written: varargs `h` and `Long.toUnsignedString`,
+  * kept verbatim as the oracle for the byte-identity pins in GenSpec.
+  */
+object GenOracle {
+  def mix(z0: Long): Long = {
+    var z = z0 + 0x9E3779B97F4A7C15L
+    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+    z ^ (z >>> 31)
+  }
+  def h(seed: Long, parts: Long*): Long = parts.foldLeft(mix(seed))((a, b) => mix(a ^ b))
+  def unit(x: Long): Double = (x >>> 11) * (1.0 / (1L << 53))
+
+  def urlFor(j: Long, cfg: GenConfig, zipf: ChangeGen.Zipf): String = {
+    val d = zipf.sample(unit(h(cfg.seed, 0xD0A1L, j)))
+    s"https://d$d.example.com/p/$j"
+  }
+
+  def targetFor(lsn: Long, cfg: GenConfig): Long = {
+    val n = ChangeGen.insertsBefore(lsn)
+    val u = unit(h(cfg.seed, 0x7A96L, lsn))
+    math.min(n - 1, (u * u * u * n).toLong)
+  }
+
+  def textFor(url: String, lsn: Long, seed: Long): String = {
+    var st = h(seed, 0x3E47L, lsn, url.length.toLong, url.hashCode.toLong)
+    val words = 16 + (java.lang.Long.remainderUnsigned(st, 40L)).toInt
+    val sb = new StringBuilder(words * 8 + url.length + 24)
+    sb.append("url=").append(url).append(" v=").append(lsn)
+    var i = 0
+    while (i < words) {
+      st = mix(st)
+      sb.append(' ').append(java.lang.Long.toUnsignedString(st, 36).take(3 + (i % 6)))
+      i += 1
+    }
+    sb.toString
+  }
+}
 
 class GenSpec extends SparkSpec {
   import spark.implicits._
@@ -56,5 +98,54 @@ class GenSpec extends SparkSpec {
       .filter(graft.functions.Text.extractText(col("html")) =!= col("text"))
       .count()
     assert(mismatches == 0L)
+  }
+
+  test("textFor, urlFor and targetFor equal the oracle over 120k inputs, negative seeds and lsns included") {
+    val zipf = new ChangeGen.Zipf(cfg.domains, cfg.zipfExp)
+    val seeds = Array(42L, 0L, -1L, 7L, Long.MinValue, Long.MaxValue, -123456789L)
+    var i = 0
+    while (i < 120000) {
+      val r = GenOracle.mix(i.toLong * 0x51ED)
+      val seed = if (i % 3 == 0) seeds(i % seeds.length) else r
+      val c = cfg.copy(seed = seed)
+      val lsn = if (i % 2 == 0) i.toLong else r >> (i % 64) // negatives of every magnitude
+      val j = if (i % 5 == 0) -i.toLong else i.toLong * 977
+      val url = GenOracle.urlFor(j, c, zipf)
+      assert(ChangeGen.urlFor(j, c, zipf) == url, s"urlFor($j, seed $seed)")
+      assert(ChangeGen.textFor(url, lsn, seed) == GenOracle.textFor(url, lsn, seed),
+        s"textFor($url, $lsn, $seed)")
+      val target = math.abs(lsn >> 2) // insertsBefore needs lsn >= 0
+      assert(ChangeGen.targetFor(target, c) == GenOracle.targetFor(target, c),
+        s"targetFor($target, seed $seed)")
+      i += 1
+    }
+  }
+
+  test("base-36 prefix kernel and unsigned remainder on edge states") {
+    val p12 = BigInt(36).pow(12).toLong
+    val edges = Seq(0L, 1L, 35L, 36L, 37L, 1295L, 1296L, p12 - 1, p12, p12 + 1,
+      Long.MaxValue, Long.MinValue, Long.MinValue + 1, -2L, -1L) ++
+      (1 to 12).flatMap { k => val p = BigInt(36).pow(k).toLong; Seq(p - 1, p, p + 1) }
+    for (st <- edges; n <- 1 to 12) {
+      val sb = new java.lang.StringBuilder("x")
+      ChangeGen.appendBase36Prefix(sb, st, n)
+      assert(sb.toString == "x" + java.lang.Long.toUnsignedString(st, 36).take(n), s"st=$st n=$n")
+    }
+    for (x <- edges; d <- Seq(1L, 2L, 6L, 8L, 23L, 36L, 40L))
+      assert(ChangeGen.remU(x, d) == java.lang.Long.remainderUnsigned(x, d), s"x=$x d=$d")
+  }
+
+  test("events fingerprint equals the golden of the first generator") {
+    val md = MessageDigest.getInstance("SHA-256")
+    val evs = ChangeGen.events(spark, cfg).collect().sortBy(e => (e.lsn, e.seg))
+    evs.foreach { e =>
+      md.update(s"${e.op}|${e.lsn}|${e.wal_part}|${e.url}|${e.warc_ts.getTime}|${e.text}|${e.lang}|${e.seg}|"
+        .getBytes(UTF_8))
+      if (e.html != null) md.update(e.html)
+      md.update('\n'.toByte)
+    }
+    val n = evs.length
+    val print = md.digest().map(b => f"${b & 0xff}%02x").mkString
+    assert(n == 5219 && print == "2412bf58932b0df2ea31891b4b18c0d47ffb7a1193d363d0466fd0564c46e367", s"$n events, sha-256 $print")
   }
 }

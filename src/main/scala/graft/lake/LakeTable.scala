@@ -185,9 +185,8 @@ class LakeTable(val spark: SparkSession, val root: String,
     // Resolve the file list by folding the snapshot's manifest chain
     // (oldest→newest); the snapshot JSON itself carries no file entries.
     val byPath = scala.collection.mutable.LinkedHashMap.empty[String, DataFile]
-    base.files.foreach(f => byPath(f.path) = f) // legacy inline lists, if any
     base.manifests.foreach { name =>
-      val d = ManifestCodec.deltaFromJson(readString(new Path(manifestDir, name)))
+      val d = readDelta(name)
       d.removedPaths.foreach(byPath.remove)
       d.added.foreach(f => byPath(f.path) = f)
     }
@@ -206,19 +205,21 @@ class LakeTable(val spark: SparkSession, val root: String,
     * The file list is persisted as a manifest *delta* (files this commit
     * added/removed vs the parent) — O(batch), not O(table), per commit; every
     * [[LakeTable.ManifestConsolidateEvery]] commits the delta chain is folded
-    * into one full manifest, bounding snapshot-read fan-in. This is Iceberg's
-    * manifest-list design; the reference's analogue is the catalog registering
-    * one immutable partition synopsis per partition (`src/catalog.cpp:98-106`)
-    * rather than rewriting a global file index.
+    * into a bucketed part and an L0 part, bounding snapshot-read fan-in.
+    * This is Iceberg's manifest-list design; the reference's analogue is the
+    * catalog registering one immutable partition synopsis per partition
+    * (`src/catalog.cpp:98-106`) rather than rewriting a global file index.
     */
   def commit(snap: Snapshot): Snapshot = commit(snap, None)
 
   /** CONTRACT: [[DataFile]] entries are immutable per path — a commit may
     * ADD new paths and REMOVE old ones, never mutate an existing entry's
     * stats in place. The delta chain diffs by path (an in-place stat change
-    * produces an empty delta and is silently dropped), and chunk-manifest
-    * reuse assumes a path's entry never changes. Rewrites (compaction,
-    * rebucket) honor this by writing new files under new paths.
+    * produces an empty delta and is silently dropped), and consolidation
+    * carries the bucketed part over by name on the grounds that a window
+    * which removed no file and added no bucketed file left every bucketed
+    * entry as it was. Rewrites (compaction, rebucket) honor this by writing
+    * new files under new paths.
     *
     * Commit with an append-only hint: `appendedOnly = Some(newFiles)` asserts
     * this commit ADDED exactly those files and removed none, skipping the
@@ -265,26 +266,14 @@ class LakeTable(val spark: SparkSession, val root: String,
         (snap.files.filterNot(f => oldPaths.contains(f.path)),
           oldFiles.map(_.path).filterNot(newPaths.contains))
     }
-    // delta names carry a random suffix so two cross-process racers from the
-    // same base can never write the same path — the loser's delta would
-    // otherwise replace the winner's AFTER the winner's version file already
-    // referenced it (silent file-list corruption); losers just leave an
-    // unreferenced delta for the manifest GC
-    def writeDelta(name: String, d: ManifestDelta): String = {
-      val out = fs.create(new Path(manifestDir, name), false)
-      try out.write(ManifestCodec.deltaToJson(d).getBytes("UTF-8"))
-      finally out.close()
-      name
-    }
     val nonce = java.util.UUID.randomUUID().toString.take(8)
-    // consolidation counts only the trailing DELTAS — the chunk files of the
-    // last consolidation are the folded base, not chain growth
-    val deltaCount = oldManifests.count(n => !LakeTable.isChunkManifest(n))
+    // consolidation counts only the trailing DELTAS — the parts of the last
+    // consolidation are the folded base, not chain growth
+    val deltaCount = oldManifests.count(n => !LakeTable.isConsolidatedPart(n))
     val manifests =
       if (added.isEmpty && removed.isEmpty) oldManifests
-      else if (deltaCount + 1 >= LakeTable.ManifestConsolidateEvery)
-        consolidateChunks(snap.files, oldManifests, snap.buckets,
-          added, removed, oldFiles)
+      else if (deltaCount + 1 >= consolidateEvery)
+        consolidate(v, nonce, snap.files, oldManifests, added, removed)
       else
         oldManifests :+ writeDelta(f"m-v$v%012d-$nonce%s.json", ManifestDelta(added, removed))
     val resolved = snap.copy(
@@ -320,164 +309,51 @@ class LakeTable(val spark: SparkSession, val root: String,
     resolved
   }
 
-  /** Two-level consolidation (the Iceberg manifest-list analogue): fold the
-    * delta chain into per-bucket-range CHUNK manifests instead of one full
-    * manifest. Chunks are '''content-addressed''' — the name carries
-    * `<idx>of<C>b<buckets>` plus an MD5 of the chunk's (path-sorted)
-    * entries — so a chunk whose content is unchanged since the previous
-    * consolidation is REUSED by name with zero I/O: the write cost is
-    * O(dirty chunks), and a COMPLETE file that already carries the name is
-    * by construction byte-equivalent (chunk writes go tmp-then-rename, so
-    * only complete bytes ever carry a final name; sharing across snapshots
-    * is safe, and the manifest GC takes the commit mutex so an in-process
-    * reuse decision cannot race a sweep — cross-process maintenance remains
-    * excluded by the single-writer contract).
-    *
-    * The reuse DECISION is the delta-derived dirty set below, and IT is the
-    * resurrection guard — clean chunks are never re-hashed, so the dirty
-    * derivation must stay conservative: any removal it cannot attribute to
-    * a chunk degrades to ALL-dirty, never to a wrongly-clean chunk. The
-    * content hash in the name guarantees what a NAME means (truncation/race
-    * safety), not that a kept chunk is current. This all rests on the
-    * [[DataFile]] path-immutability contract (see [[commit]]).
-    *
-    * The L0 chunk (index C) holds spanning files; point prunes always load
-    * it plus the chunks covering their buckets
-    * ([[LakeTable.planFilesChunked]]) — in L0/streaming mode only that one
-    * chunk is dirty per consolidation, so steady-state consolidation I/O is
-    * O(recent batches) there. The bucketed writers — dv winner appends and
-    * compaction output — touch hash-random buckets and dirty most chunks;
-    * their consolidation stays O(table) in I/O (CPU for clean-chunk
-    * detection is one MD5 pass over the entries).
+  /** Write one immutable manifest file (a delta or a consolidated part).
+    * Names carry the committing version plus a random nonce, so two
+    * cross-process racers from the same base can never write the same path
+    * — the loser's file would otherwise replace the winner's AFTER the
+    * winner's version file already referenced it (silent file-list
+    * corruption); losers just leave an unreferenced file for the manifest
+    * GC, as does a crash before the version claim.
     */
-  private def consolidateChunks(allFiles: Seq[DataFile], oldManifests: Seq[String],
-      buckets: Int, addedNow: Seq[DataFile], removedNow: Seq[String],
-      oldFiles: Seq[DataFile]): Seq[String] = {
-    val c = LakeTable.chunkCountFor(allFiles.size)
-    def idxOf(bucket: Int): Int =
-      if (bucket < 0) c else ((bucket.toLong * c) / buckets).toInt
-    val prev: Set[String] = oldManifests.filter(LakeTable.isChunkManifest).toSet
-    // O(dirty) CPU: a SOUND delta-derived dirty set lets clean chunks skip
-    // even the hash pass (the content hash in their reused NAME still
-    // guarantees integrity — this set only decides what gets re-derived).
-    // Soundness: every add in the window names its bucket; every removal is
-    // attributed via the parent list, the final list, or an earlier window
-    // add — and any removal that cannot be attributed (a base-chunk file
-    // removed mid-window, i.e. compaction/expiry shapes) degrades to
-    // ALL-dirty, never to a wrongly-clean chunk.
-    val prevByIdx: Map[Int, String] = oldManifests
-      .flatMap(n => LakeTable.parseChunkName(n).collect {
-        case (i, cc, bb) if cc == c && bb == buckets => i -> n
-      }).toMap
-    val dirtyOpt: Option[Set[Int]] =
-      if (prevByIdx.isEmpty) None
-      else {
-        val windowDeltas = oldManifests.filterNot(LakeTable.isChunkManifest)
-          .map(n => ManifestCodec.deltaFromJson(readString(new Path(manifestDir, n))))
-        val dirty = scala.collection.mutable.Set.empty[Int]
-        var sound = true
-        // removal attribution map built LAZILY — the append-only steady
-        // state (L0/streaming, the common case) has no removals and skips
-        // the O(table) seeding entirely
-        lazy val bucketOf: java.util.HashMap[String, Integer] = {
-          val m = new java.util.HashMap[String, Integer](
-            (oldFiles.size + allFiles.size) * 2)
-          oldFiles.foreach(f => m.put(f.path, f.bucket))
-          allFiles.foreach(f => m.put(f.path, f.bucket))
-          windowDeltas.foreach(_.added.foreach(f => m.put(f.path, f.bucket)))
-          m
-        }
-        // once ONE removal is unattributable the result is discarded (full
-        // rewrite) — stop attributing so the O(table) map isn't built and
-        // walked for nothing
-        def attribute(p: String): Unit = if (sound) {
-          val b = bucketOf.get(p)
-          if (b == null) sound = false else dirty += idxOf(b)
-        }
-        windowDeltas.foreach { d =>
-          d.added.foreach(f => dirty += idxOf(f.bucket))
-          d.removedPaths.foreach(attribute)
-        }
-        addedNow.foreach(f => dirty += idxOf(f.bucket))
-        removedNow.foreach(attribute)
-        if (sound) Some(dirty.toSet) else None
-      }
-    dirtyOpt match {
-      case Some(dirty) =>
-        // O(dirty) path: group only the files of dirty chunks; clean chunks
-        // reuse their previous names with zero hashing and zero I/O
-        val byIdx = allFiles.iterator.filter(f => dirty(idxOf(f.bucket)))
-          .toSeq.groupBy(f => idxOf(f.bucket))
-        val kept = prevByIdx.filterNot { case (i, _) => dirty(i) }
-        (kept.toSeq.sortBy(_._1).map(_._2) ++
-          byIdx.toSeq.sortBy(_._1).map { case (i, files0) =>
-            writeChunk(i, c, buckets, files0, prev)
-          })
-      case None =>
-        allFiles.groupBy(f => idxOf(f.bucket)).toSeq.sortBy(_._1)
-          .map { case (i, files0) => writeChunk(i, c, buckets, files0, prev) }
-    }
+  private def writeDelta(name: String, d: ManifestDelta): String = {
+    val out = fs.create(new Path(manifestDir, name), false)
+    try ManifestCodec.writeDelta(out, d)
+    finally out.close()
+    name
   }
 
-  private def writeChunk(i: Int, c: Int, buckets: Int, files0: Seq[DataFile],
-      prev: Set[String]): String = {
-      val files = files0.sortBy(_.path)
-      val name = f"m-chunk-${i}of${c}b$buckets-${LakeTable.chunkHash(files)}.json"
-      val p = new Path(manifestDir, name)
-      if (!prev.contains(name) && !fs.exists(p)) {
-        // tmp-then-rename, NOT a direct create: content addressing means a
-        // later consolidation may adopt this exact name — a crash mid-write
-        // would otherwise leave a TRUNCATED file that reuse-by-name silently
-        // adopts as a complete chunk. With the rename, only complete bytes
-        // ever carry the final name; a lost race leaves identical bytes
-        // (content-addressed), so an existing destination is simply reused.
-        val tmp = new Path(manifestDir,
-          s"$name.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-        val out = fs.create(tmp, true)
-        try out.write(ManifestCodec.deltaToJson(ManifestDelta(files, Nil)).getBytes("UTF-8"))
-        finally out.close()
-        if (!fs.rename(tmp, p)) {
-          fs.delete(tmp, false)
-          if (!fs.exists(p))
-            throw new java.io.IOException(s"chunk manifest claim failed: $tmp -> $p")
-        }
-      }
-      name
+  private def readDelta(name: String): ManifestDelta = {
+    val in = fs.open(new Path(manifestDir, name))
+    try ManifestCodec.readDelta(in)
+    finally in.close()
   }
 
-  /** Bucket-pruned file planning WITHOUT materializing the full file list:
-    * reads the snapshot header, only the consolidated chunks covering
-    * `buckets` (plus the always-loaded L0 chunk and any chunk written under
-    * a different bucket layout — safe after a rebucket), and every
-    * post-consolidation delta (O(recent)). The cold-start point-lookup path
-    * at 10^6-file scale: ~1/C of the manifest bytes instead of all of them.
-    * Equivalent to `planFiles(snapshotAt(version), buckets=…)` — deltas may
-    * remove chunk files and the fold applies them; files added by deltas in
-    * OTHER buckets are dropped by the final filter.
+  /** Fold the delta chain into at most two parts, written like deltas under
+    * version `v`'s name: a bucketed part (bucket ≥ 0) and an L0 part
+    * (bucket −1). The previous bucketed part is carried over by name when
+    * no commit since the last consolidation, this one included, removed a
+    * file or added a bucketed file — its entries are then exactly the
+    * bucketed files of `allFiles`. An append-only L0 window (the streaming
+    * `l0` shape) therefore rewrites only the L0 part: O(L0) I/O, not
+    * O(table). Any other window rewrites both parts from the full list.
     */
-  def planFilesChunked(version: Long, buckets: Set[Int],
-      urlHash: Option[Long] = None, lsnAtLeast: Option[Long] = None): Seq[DataFile] = {
-    val base = ManifestCodec.fromJson(readString(versionPath(version)))
-    val byPath = scala.collection.mutable.LinkedHashMap.empty[String, DataFile]
-    base.files.foreach(f => byPath(f.path) = f)
-    base.manifests.foreach { name =>
-      val load = LakeTable.parseChunkName(name) match {
-        case Some((idx, c, bb)) =>
-          idx == c || bb != base.buckets ||
-            buckets.exists(b => ((b.toLong * c) / bb).toInt == idx)
-        case None => true
-      }
-      if (load) {
-        val d = ManifestCodec.deltaFromJson(readString(new Path(manifestDir, name)))
-        d.removedPaths.foreach(byPath.remove)
-        d.added.foreach(f => byPath(f.path) = f)
-      }
-    }
-    byPath.values.toSeq.filter { f =>
-      (f.bucket < 0 || buckets.contains(f.bucket)) &&
-      urlHash.forall(h => h >= f.minUrlHash && h <= f.maxUrlHash) &&
-      lsnAtLeast.forall(l => f.maxLsn >= l)
-    }
+  private def consolidate(v: Long, nonce: String, allFiles: Seq[DataFile],
+      oldManifests: Seq[String], added: Seq[DataFile],
+      removed: Seq[String]): Seq[String] = {
+    def touchesBuckets(d: ManifestDelta): Boolean =
+      d.removedPaths.nonEmpty || d.added.exists(_.bucket >= 0)
+    val (parts, deltas) = oldManifests.partition(LakeTable.isConsolidatedPart)
+    val carry = !touchesBuckets(ManifestDelta(added, removed)) &&
+      !deltas.exists(n => touchesBuckets(readDelta(n)))
+    def part(kind: String, files: Seq[DataFile]): Seq[String] =
+      if (files.isEmpty) Nil
+      else Seq(writeDelta(f"m-v$v%012d-$kind-$nonce%s.json", ManifestDelta(files, Nil)))
+    val bucketedPart =
+      if (carry) parts.filter(LakeTable.isBucketedPart)
+      else part(LakeTable.BucketedPart, allFiles.filter(_.bucket >= 0))
+    bucketedPart ++ part(LakeTable.L0Part, allFiles.filter(_.bucket < 0))
   }
 
   /** Full per-batch lineage history from the append-only commit log (oldest
@@ -552,7 +428,7 @@ class LakeTable(val spark: SparkSession, val root: String,
     else {
       val dv = dvEntries(snap)
       val side =
-        if (snap.dvFiles.map(_.rows).sum <= LakeTable.DvBroadcastLimit) broadcast(dv)
+        if (snap.dvFiles.map(_.rows).sum <= dvBroadcastLimit) broadcast(dv)
         else dv
       tagged.join(side, Seq(LakeTable.DvPathCol, LakeTable.DvPosCol), "left_anti")
     }
@@ -1350,12 +1226,10 @@ class LakeTable(val spark: SparkSession, val root: String,
     require(keepLast >= 1, "must keep at least the current snapshot")
     // Kept set, version deletion and manifest sweep form ONE commit-mutex
     // block: a commit that lands between computing the kept set and the
-    // sweep would otherwise lose its new delta/chunk manifest to the sweep
-    // (bricking the head it just claimed), and a consolidating commit may
-    // REUSE an on-disk chunk by content-addressed name before its version
-    // file exists. The mutex serializes in-process maintenance against
-    // commits; cross-process maintenance stays excluded by the single-writer
-    // contract above.
+    // sweep would otherwise lose its new delta or consolidated part to the
+    // sweep (bricking the head it just claimed). The mutex serializes
+    // in-process maintenance against commits; cross-process maintenance
+    // stays excluded by the single-writer contract above.
     val (expired, referenced) = LakeTable.commitMutex(root).synchronized {
       val versions =
         if (!fs.exists(manifestDir)) Seq.empty[Long]
@@ -1384,7 +1258,7 @@ class LakeTable(val spark: SparkSession, val root: String,
       // manifests and data, so a follower that hits a swept file re-probes,
       // finds its version gone and re-bootstraps instead of failing
       expired.foreach(v => fs.delete(versionPath(v), false))
-      // GC manifest delta/chunk files referenced by no retained snapshot
+      // GC manifest deltas and parts referenced by no retained snapshot
       // (incl. files orphaned by a crash between write and version claim, and
       // chains superseded by consolidation). Only completed `.json` names —
       // `.json.tmp-*` in-flight writes belong to the age-graced sweep below.
@@ -1457,6 +1331,12 @@ class LakeTable(val spark: SparkSession, val root: String,
     * data sweep, so a spec can inject a commit or a follower poll at exactly
     * those points instead of racing threads on timing. */
   @volatile private[graft] var expireHook: String => Unit = _ => ()
+
+  /** Test seams: this handle's consolidation threshold and DV broadcast
+    * limit, so a spec can reach a consolidation in a few commits or force
+    * the shuffled anti-join mask without a large table. */
+  @volatile private[graft] var consolidateEvery: Int = LakeTable.ManifestConsolidateEvery
+  @volatile private[graft] var dvBroadcastLimit: Long = LakeTable.DvBroadcastLimit
 }
 
 object LakeTable {
@@ -1469,62 +1349,21 @@ object LakeTable {
   val LineageRetention = 1000
 
   /** Consolidate the manifest-delta chain every K commits: commit I/O stays
-    * O(batch files) amortized and snapshot reads open at most K + #chunks
-    * small JSON files. Since round 5 the consolidated form is TWO-LEVEL
-    * (bucket-range chunks, content-addressed — see
-    * [[LakeTable.chunkCountFor]]): clean chunks are reused by name, so the
-    * amortized consolidation write is O(dirty chunks), and point prunes can
-    * load only the chunks covering their buckets
-    * ([[LakeTable.planFilesChunked]]). 32 matches Iceberg's default snapshot
-    * retention ballpark. Test-tunable via `-Dgraft.manifestConsolidateEvery`.
+    * O(batch files) amortized and snapshot reads open at most K + 2 JSON
+    * files. The consolidated form is a bucketed part and an L0 part; an
+    * append-only L0 window carries the bucketed part over by name, so its
+    * consolidation writes O(L0) entries (see `LakeTable.consolidate`). 32
+    * matches Iceberg's default snapshot retention ballpark.
     */
-  def ManifestConsolidateEvery: Int =
-    sys.props.get("graft.manifestConsolidateEvery").map(_.toInt).getOrElse(32)
+  val ManifestConsolidateEvery: Int = 32
 
-  /** Chunk count for the two-level consolidated manifest: ~64k file entries
-    * per chunk (a few MB of JSON — the parse unit of a point prune), capped
-    * so tiny tables keep one chunk and huge ones don't fragment. Bucket
-    * space maps contiguously onto chunks (`idx = bucket·C / buckets`); L0
-    * spanning files (bucket −1) live in a dedicated always-loaded chunk
-    * (index C).
-    */
-  def chunkCountFor(nFiles: Int): Int =
-    sys.props.get("graft.manifestChunks").map(_.toInt).getOrElse(
-      math.max(1, math.min(64, nFiles / 65536 + 1)))
-
-  private val ChunkNameRe = """m-chunk-(\d+)of(\d+)b(\d+)-[0-9a-f]{32}\.json""".r
-  def isChunkManifest(name: String): Boolean =
-    ChunkNameRe.matches(name)
-  /** (chunkIdx, chunkCount, bucketsAtWrite) from a chunk manifest name. */
-  private[lake] def parseChunkName(name: String): Option[(Int, Int, Int)] =
-    name match {
-      case ChunkNameRe(i, c, b) => Some((i.toInt, c.toInt, b.toInt))
-      case _ => None
-    }
-
-  /** Content address of a chunk's (path-sorted) entries: MD5 over every
-    * field of every entry — any add, remove, or stat change reroutes the
-    * chunk to a new name. One digest pass, no JSON serialization. Each path
-    * is length-prefixed: without it a path's bytes could absorb a
-    * neighbour's stat bytes, and two different entry lists would share a
-    * name (and a reused chunk would serve the wrong entries).
-    */
-  private[graft] def chunkHash(files: Seq[DataFile]): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-    val buf = java.nio.ByteBuffer.allocate(8 * 8)
-    files.foreach { f =>
-      val path = f.path.getBytes("UTF-8")
-      buf.clear()
-      d.update(buf.putInt(path.length).array(), 0, 4)
-      d.update(path)
-      buf.clear()
-      buf.putLong(f.bucket.toLong).putLong(f.schemaId.toLong).putLong(f.rows)
-        .putLong(f.bytes).putLong(f.minLsn).putLong(f.maxLsn)
-        .putLong(f.minUrlHash).putLong(f.maxUrlHash)
-      d.update(buf.array())
-    }
-    d.digest().map(b => f"$b%02x").mkString
-  }
+  /** Kind tags in the names of the two consolidated parts
+    * (`m-v<version>-<kind>-<nonce>.json`); a plain delta's name has none. */
+  private val BucketedPart = "bucketed"
+  private val L0Part = "l0"
+  def isBucketedPart(name: String): Boolean = name.contains(s"-$BucketedPart-")
+  def isConsolidatedPart(name: String): Boolean =
+    isBucketedPart(name) || name.contains(s"-$L0Part-")
 
   /** Snapshot prop set by merge-on-read appends, cleared by full compaction:
     * "this table may hold multiple versions of a url; reads must resolve".
@@ -1561,10 +1400,9 @@ object LakeTable {
 
   /** Below this many total DV entries the mask is a broadcast hash anti-join
     * (no shuffle of the scan side); above it, a shuffled anti-join. ~100
-    * bytes/entry → the default caps the broadcast near 200 MB. Compaction is
-    * what keeps real tables under it. */
-  def DvBroadcastLimit: Long =
-    sys.props.get("graft.dvBroadcastLimit").map(_.toLong).getOrElse(2L * 1000 * 1000)
+    * bytes/entry → this caps the broadcast near 200 MB. Compaction is what
+    * keeps real tables under it. */
+  val DvBroadcastLimit: Long = 2L * 1000 * 1000
 
   /** Per-root intra-process commit lock (see [[LakeTable.commit]]). */
   private val commitMutexes =

@@ -4,9 +4,9 @@ import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
 /** One immutable data-file entry — IMMUTABLE PER PATH: once committed, an
-  * entry's stats never change (the manifest delta chain diffs by path and
-  * chunk reuse depends on it — see [[graft.lake.LakeTable.commit]]); a
-  * rewrite lands under a new path.
+  * entry's stats never change (the manifest delta chain diffs by path, and
+  * consolidation carries a bucketed part over by name on that ground — see
+  * [[graft.lake.LakeTable.commit]]); a rewrite lands under a new path.
   *
   * Per-file column statistics used for scan pruning — the analogue of the
   * reference's per-partition synopses (min/max + bloom,
@@ -60,7 +60,10 @@ case class LineageEntry(
   * *delta* files (Iceberg's manifest-list indirection) — and `files` is
   * reconstructed by folding them at read. A commit therefore writes
   * O(batch files), not O(table files); every K commits the chain is
-  * consolidated into one full manifest so reads stay O(K) small JSON files.
+  * consolidated into at most two parts, the bucketed files and the L0
+  * spanning files, so reads stay O(K) JSON files. A window that only
+  * appended L0 files keeps the previous bucketed part and rewrites the L0
+  * part alone.
   */
 case class Snapshot(
     version: Long,
@@ -85,8 +88,8 @@ case class Snapshot(
 
 /** One immutable manifest file: the file-list delta a single commit introduced
   * (`added` entries with stats; `removedPaths` of files it dropped, e.g. by
-  * compaction). A consolidated manifest is the same shape with the full list
-  * as `added`.
+  * compaction). A consolidated part is the same shape with its share of the
+  * full list (bucketed or L0 files) as `added`.
   */
 case class ManifestDelta(added: Seq[DataFile], removedPaths: Seq[String])
 
@@ -94,7 +97,12 @@ object ManifestCodec {
   private val mapper = JsonMapper.builder().addModule(DefaultScalaModule).build()
   def toJson(s: Snapshot): String =
     mapper.writerWithDefaultPrettyPrinter().writeValueAsString(s)
-  def deltaToJson(d: ManifestDelta): String = mapper.writeValueAsString(d)
+  /** Manifest files are streamed, never held as one `String`: a
+    * consolidated part of 10^6 entries is over 300 MB of JSON. */
+  def writeDelta(out: java.io.OutputStream, d: ManifestDelta): Unit =
+    mapper.writeValue(out, d)
+  def readDelta(in: java.io.InputStream): ManifestDelta =
+    mapper.readValue(in, classOf[ManifestDelta])
   def deltaFromJson(j: String): ManifestDelta = mapper.readValue(j, classOf[ManifestDelta])
   /** One compact JSON line per lineage entry (the append-only commit log). */
   def lineageToJson(e: LineageEntry): String = mapper.writeValueAsString(e)

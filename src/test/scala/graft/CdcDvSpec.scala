@@ -398,15 +398,13 @@ class CdcDvSpec extends SparkSpec {
   }
 
   test("mask correctness survives the shuffled anti-join fallback (DvBroadcastLimit=0)") {
-    sys.props("graft.dvBroadcastLimit") = "0" // force the non-broadcast path
-    try {
-      val table = new LakeTable(spark, tmpDir())
-      replayDv(table, segGroups(allEvents, 8), "q")
-      val snap = table.currentSnapshot.get
-      assert(snap.dvFiles.nonEmpty)
-      assert(pagesMap(table.pages(snap)) == golden)
-      assert(liveDupes(table, snap) == 0)
-    } finally { sys.props.remove("graft.dvBroadcastLimit"); () }
+    val table = new LakeTable(spark, tmpDir())
+    table.dvBroadcastLimit = 0 // force the non-broadcast path
+    replayDv(table, segGroups(allEvents, 8), "q")
+    val snap = table.currentSnapshot.get
+    assert(snap.dvFiles.nonEmpty)
+    assert(pagesMap(table.pages(snap)) == golden)
+    assert(liveDupes(table, snap) == 0)
   }
 
   test("streaming dv mode: checkpoint resume applies nothing; auto-compaction folds masks") {

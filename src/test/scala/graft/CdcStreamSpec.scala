@@ -109,6 +109,154 @@ class CdcStreamSpec extends SparkSpec {
     assert(pagesMap(table.pages()) == goldenSoFar)
   }
 
+  /** The WAL files of `cfg`, written to a staging dir, in name order. */
+  private def stagedWal(cfg: GenConfig): Seq[java.io.File] = {
+    val staging = tmpDir("wal")
+    ChangeGen.writeWal(spark, cfg, staging)
+    new java.io.File(staging).listFiles().filter(_.getName.endsWith(".parquet"))
+      .sortBy(_.getName).toSeq
+  }
+
+  private def consolidated(s: graft.lake.Snapshot): Boolean =
+    s.manifests.nonEmpty && s.manifests.forall(LakeTable.isConsolidatedPart)
+
+  /** The writer's in-memory snapshot against a fresh handle's fold of the
+    * head's manifests, entry by entry. */
+  private def assertFreshRead(table: LakeTable): graft.lake.Snapshot = {
+    val writer = table.lastKnownSnapshot.get
+    assert(table.headVersion.contains(writer.version))
+    val fresh = new LakeTable(spark, table.root).snapshotAt(writer.version)
+    assert(fresh.files.size == writer.files.size)
+    assert(fresh.files.map(f => f.path -> f).toMap == writer.files.map(f => f.path -> f).toMap)
+    writer
+  }
+
+  test("an l0 stream carries its bucketed part through two consolidations") {
+    val wal = tmpDir("wal"); val ckpt = tmpDir("ckpt")
+    val parts = stagedWal(GenConfig(events = 4000, segmentSize = 200))
+    assert(parts.length >= 16, s"want at least 16 WAL files, got ${parts.length}")
+    def deliver(files: Seq[java.io.File]): Unit = files.foreach(f =>
+      java.nio.file.Files.copy(f.toPath, java.nio.file.Paths.get(wal, f.getName)))
+    val table = new LakeTable(spark, tmpDir("lake"))
+    table.consolidateEvery = 4
+    val snaps = scala.collection.mutable.ArrayBuffer.empty[graft.lake.Snapshot]
+    def run(): Unit =
+      CdcStream.start(spark, wal, table, ckpt, queryId = "carry", maxFilesPerTrigger = 1,
+        createBuckets = 4, onBatch = _ => snaps += assertFreshRead(table))
+        .awaitTermination()
+    deliver(parts.take(2))
+    run()
+    // the bucketed part comes from a full compaction; from then on the
+    // stream appends L0 files only
+    snaps += table.compact()
+    deliver(parts.drop(2))
+    run()
+    val cons = snaps.toSeq.filter(consolidated)
+    val carried = cons.last.manifests.find(LakeTable.isBucketedPart)
+    assert(carried.isDefined, cons.last.manifests)
+    val sharing = cons.filter(_.manifests.contains(carried.get))
+    assert(sharing.size >= 3,
+      s"the bucketed part must survive two consolidations: ${cons.map(_.manifests)}")
+    assert(sharing.map(_.manifests.filterNot(LakeTable.isBucketedPart)).distinct.size ==
+      sharing.size, "each consolidation rewrites the L0 part")
+    assert(pagesMap(new LakeTable(spark, table.root).pages()) ==
+      expectedMap(ChangeGen.events(spark, GenConfig(events = 4000, segmentSize = 200))
+        .collect().toSeq))
+  }
+
+  test("an l0 window whose compaction empties the table rewrites the bucketed part") {
+    import spark.implicits._
+    val wal = tmpDir("wal"); val ckpt = tmpDir("ckpt")
+    val table = new LakeTable(spark, tmpDir("lake"))
+    table.consolidateEvery = 4
+    val delivered = scala.collection.mutable.ArrayBuffer.empty[GenEvent]
+    var lsn = 0L
+    def page(url: String): GenEvent = {
+      lsn += 1
+      GenEvent("I", lsn, 0, url, new java.sql.Timestamp(lsn * 1000),
+        s"<p>$url</p>".getBytes("UTF-8"), s"text $url", "en", lsn)
+    }
+    def tombstone(url: String): GenEvent = {
+      lsn += 1
+      GenEvent("D", lsn, 0, url, new java.sql.Timestamp(lsn * 1000), null, null, null, lsn)
+    }
+    // one WAL file per call, so each run below commits one batch per file
+    def deliver(events: Seq[GenEvent]): Unit = {
+      val stage = tmpDir("stage")
+      events.toDS().coalesce(1).write.mode("overwrite").parquet(stage)
+      val file = new java.io.File(stage).listFiles().find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.copy(file.toPath,
+        java.nio.file.Paths.get(wal, f"w-${delivered.size}%06d.parquet"))
+      delivered ++= events
+    }
+    def urls(from: Int) = (from until from + 50).map(i => s"http://carry.test/$i")
+    val snaps = scala.collection.mutable.ArrayBuffer.empty[graft.lake.Snapshot]
+    def run(): Unit =
+      CdcStream.start(spark, wal, table, ckpt, queryId = "empty", maxFilesPerTrigger = 1,
+        createBuckets = 4, onBatch = _ => snaps += assertFreshRead(table)).awaitTermination()
+    def lww = expectedMap(delivered.toSeq)
+
+    // a bucketed base, then L0 batches until a consolidation holds its part
+    deliver(urls(0).map(page)); deliver(urls(50).map(page))
+    run()
+    table.compact()
+    var next = 100
+    while (!table.currentSnapshot.get.manifests.exists(LakeTable.isBucketedPart)) {
+      deliver(urls(next).map(page)); next += 50
+      run()
+    }
+    // delete every page; the tombstone-GC compaction then removes every file
+    // and adds none: a window with a removal but no bucketed append
+    deliver(delivered.toSeq.map(_.url).distinct.map(tombstone))
+    run()
+    val emptied = table.compact(gcTombstonesBelowLsn = Some(lsn + 1))
+    assert(emptied.files.isEmpty)
+    assertFreshRead(table)
+    // L0 batches through the next consolidation: the old bucketed part must
+    // not come back
+    snaps.clear()
+    (0 until 4).foreach { _ => deliver(urls(next).map(page)); next += 50 }
+    run()
+    val folded = snaps.toSeq.dropWhile(s => !consolidated(s))
+    assert(folded.nonEmpty, snaps.map(_.manifests))
+    assert(!folded.exists(_.manifests.exists(LakeTable.isBucketedPart)), folded.map(_.manifests))
+    assert(pagesMap(new LakeTable(spark, table.root).pages()) == lww)
+  }
+
+  test("a dv stream with auto-compaction re-reads its snapshot file for file") {
+    import spark.implicits._
+    val wal = tmpDir("wal"); val ckpt = tmpDir("ckpt")
+    val parts = stagedWal(GenConfig(events = 3000, segmentSize = 250))
+    val table = new LakeTable(spark, tmpDir("lake"))
+    table.consolidateEvery = 4
+    val delivered = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+    var consolidations = 0
+    var partialCompactions = 0
+    var prev = Set.empty[String]
+    var prevParts = Set.empty[String]
+    // one WAL file per run, so the table after each run holds exactly the
+    // delivered files' changes
+    parts.foreach { f =>
+      java.nio.file.Files.copy(f.toPath, java.nio.file.Paths.get(wal, f.getName))
+      delivered += f
+      CdcStream.start(spark, wal, table, ckpt, queryId = "dvre", mode = "dv",
+        createBuckets = 4, autoCompactFilesPerBucket = 2).awaitTermination()
+      val snap = assertFreshRead(table)
+      val ps = snap.manifests.filter(LakeTable.isConsolidatedPart).toSet
+      if (ps.nonEmpty && ps != prevParts) consolidations += 1
+      prevParts = ps
+      val paths = snap.files.map(_.path).toSet
+      if ((prev -- paths).nonEmpty && (prev intersect paths).nonEmpty) partialCompactions += 1
+      prev = paths
+      val lww = expectedMap(spark.read.parquet(delivered.map(_.getPath).toSeq: _*)
+        .as[GenEvent].collect().toSeq)
+      assert(pagesMap(new LakeTable(spark, table.root).pages()) == lww,
+        s"after ${delivered.size} WAL files")
+    }
+    assert(consolidations >= 1 && partialCompactions >= 1,
+      s"consolidations $consolidations, partial compactions $partialCompactions")
+  }
+
   test("WAP run identity lives IN the checkpoint: resume keeps it, wipe mints anew") {
     val wal = tmpDir("wal"); val ckpt = tmpDir("ckpt"); val quar = tmpDir("quar")
     ChangeGen.writeWal(spark, GenConfig(events = 1000, segmentSize = 500), wal)

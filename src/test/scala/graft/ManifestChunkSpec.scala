@@ -2,28 +2,15 @@ package graft
 
 import graft.lake.{DataFile, LakeTable}
 
-/** Two-level (chunked, content-addressed) manifest consolidation:
-  * correctness of the fold, clean-chunk reuse, the removed-file
-  * resurrection guard, the lazy chunked point-prune path, and GC of
-  * superseded chunk files. Runs with a low consolidation threshold via
-  * `-Dgraft.manifestConsolidateEvery` (per-suite JVM, set in-process).
+/** Manifest consolidation into a bucketed part and an L0 part: correctness
+  * of the fold, carrying the bucketed part over an L0-only window, the
+  * removed-file resurrection guard, and GC of superseded parts. ("Chunk" in
+  * the test names means a consolidated part.) Each committing handle runs
+  * with a low consolidation threshold through its `consolidateEvery` seam.
   */
 class ManifestChunkSpec extends SparkSpec {
 
   private val Threshold = 4
-
-  override def beforeAll(): Unit = {
-    sys.props("graft.manifestConsolidateEvery") = Threshold.toString
-    sys.props("graft.manifestChunks") = "8" // small tables would collapse to 1
-    super.beforeAll()
-  }
-  override def afterAll(): Unit = {
-    try {
-      sys.props.remove("graft.manifestConsolidateEvery")
-      sys.props.remove("graft.manifestChunks")
-      ()
-    } finally super.afterAll()
-  }
 
   private def df(root: String, i: Int, bucket: Int): DataFile =
     DataFile(s"$root/data/c/part-$i.parquet", bucket, 0, 100L, 1000L,
@@ -31,9 +18,15 @@ class ManifestChunkSpec extends SparkSpec {
 
   private def create(root: String): LakeTable = {
     val t = new LakeTable(spark, root)
+    t.consolidateEvery = Threshold
     t.create(graft.core.Schemas.page, 64)
     t
   }
+
+  private def parts(snap: graft.lake.Snapshot): Seq[String] =
+    snap.manifests.filter(LakeTable.isConsolidatedPart)
+  private def bucketedPart(snap: graft.lake.Snapshot): Option[String] =
+    snap.manifests.find(LakeTable.isBucketedPart)
 
   test("consolidation folds to chunk manifests; snapshotAt equals the expected set") {
     val root = tmpDir()
@@ -45,26 +38,34 @@ class ManifestChunkSpec extends SparkSpec {
       adds.foreach(f => expected(f.path) = f)
       snap = t.commit(snap.copy(files = snap.files ++ adds))
     }
-    assert(snap.manifests.exists(LakeTable.isChunkManifest), "threshold must have consolidated")
+    assert(snap.manifests.exists(LakeTable.isConsolidatedPart), "threshold must have consolidated")
     val reread = new LakeTable(spark, root).snapshotAt(snap.version)
     assert(reread.files.map(f => f.path -> f).toMap == expected.toMap)
   }
 
   /** Commit single-file adds in `bucket` until the manifest list is JUST
-    * consolidated (all chunks, no trailing deltas) — the clean state the
-    * reuse assertions need. Terminates within one threshold cycle.
+    * consolidated (parts only, no trailing deltas) — the state the
+    * assertions need. Terminates within one threshold cycle. Returns the
+    * consolidated snapshot.
     */
-  private def padUntilConsolidated(t: LakeTable, bucket: Int, idFrom: Int): Unit = {
+  private def padUntilConsolidated(t: LakeTable, bucket: Int, idFrom: Int): graft.lake.Snapshot = {
     var snap = t.currentSnapshot.get
     var k = idFrom
     // do-while: at least one commit, so a call from an already-clean state
-    // still churns `bucket` and reaches the NEXT consolidation
+    // still reaches the NEXT consolidation
     while ({
       snap = t.commit(snap.copy(files = snap.files :+ df(t.root, k, bucket)))
       k += 1
       snap.manifests.isEmpty ||
-        snap.manifests.exists(n => !LakeTable.isChunkManifest(n))
+        snap.manifests.exists(n => !LakeTable.isConsolidatedPart(n))
     }) ()
+    snap
+  }
+
+  private def assertFreshReadEquals(root: String, snap: graft.lake.Snapshot): Unit = {
+    val reread = new LakeTable(spark, root).snapshotAt(snap.version)
+    assert(reread.files.size == snap.files.size)
+    assert(reread.files.map(f => f.path -> f).toMap == snap.files.map(f => f.path -> f).toMap)
   }
 
   test("a file removed after landing in a chunk cannot resurrect at the next consolidation") {
@@ -73,58 +74,84 @@ class ManifestChunkSpec extends SparkSpec {
     var snap = t.currentSnapshot.get
     val victim = df(root, 999, 2)
     snap = t.commit(snap.copy(files = snap.files :+ victim))
-    padUntilConsolidated(t, bucket = 1, idFrom = 0) // victim now lives in a chunk
+    padUntilConsolidated(t, bucket = 1, idFrom = 0) // victim now lives in a part
     snap = t.currentSnapshot.get
-    val chunks1 = snap.manifests.filter(LakeTable.isChunkManifest)
+    val chunks1 = parts(snap)
     assert(chunks1.nonEmpty && snap.files.exists(_.path == victim.path))
     // remove the victim (compaction-like), then force consolidation #2: the
-    // victim's chunk content changed → new hash → rewritten without it
+    // window removed a file → the bucketed part is rewritten without it
     snap = t.commit(snap.copy(files = snap.files.filterNot(_.path == victim.path)))
     padUntilConsolidated(t, bucket = 1, idFrom = 100)
     snap = t.currentSnapshot.get
-    val chunks2 = snap.manifests.filter(LakeTable.isChunkManifest)
+    val chunks2 = parts(snap)
     assert(chunks2.toSet != chunks1.toSet, "second consolidation must have run")
     val reread = new LakeTable(spark, root).snapshotAt(snap.version)
     assert(!reread.files.exists(_.path == victim.path), "removed file resurrected")
-    assert(!t.planFilesChunked(snap.version, Set(2)).exists(_.path == victim.path))
   }
 
-  test("clean chunks are reused by name; only touched chunks are rewritten") {
+  test("an L0-only window carries the bucketed part over by name, incl. pure L0") {
     val root = tmpDir()
     val t = create(root)
     var snap = t.currentSnapshot.get
-    // seed files across many buckets, then reach a clean consolidated state
-    val seed = (0 until 64).map(b => df(root, b, b))
-    snap = t.commit(snap.copy(files = snap.files ++ seed))
-    padUntilConsolidated(t, bucket = 1, idFrom = 1000)
-    val chunks1 = t.currentSnapshot.get.manifests.filter(LakeTable.isChunkManifest)
-    assert(chunks1.size > 1)
-    // churn ONE bucket (63 → the last chunk) until the next consolidation
-    padUntilConsolidated(t, bucket = 63, idFrom = 2000)
-    val chunks2 = t.currentSnapshot.get.manifests.filter(LakeTable.isChunkManifest)
-    val freshOnes = chunks2.toSet -- chunks1.toSet
-    assert(freshOnes.size == 1, s"expected 1 rewritten chunk, got $freshOnes")
-    assert((chunks1.toSet intersect chunks2.toSet).nonEmpty, "clean chunks must be reused")
+    snap = t.commit(snap.copy(files = snap.files ++ (0 until 16).map(b => df(root, b, b))))
+    snap = padUntilConsolidated(t, bucket = -1, idFrom = 1000)
+    val b1 = bucketedPart(snap)
+    assert(b1.isDefined && parts(snap).size == 2, parts(snap))
+    // two more L0-only windows: the bucketed part keeps its name, the L0
+    // part is rewritten at each consolidation
+    var l0Parts = parts(snap).filterNot(LakeTable.isBucketedPart)
+    Seq(2000, 3000).foreach { from =>
+      snap = padUntilConsolidated(t, bucket = -1, idFrom = from)
+      assert(bucketedPart(snap) == b1, "an L0-only window must carry the bucketed part")
+      val l0 = parts(snap).filterNot(LakeTable.isBucketedPart)
+      assert(l0.size == 1 && l0 != l0Parts, "the L0 part must be rewritten")
+      l0Parts = l0
+      assertFreshReadEquals(root, snap)
+    }
+
+    // a pure-L0 table has no bucketed part to carry: each consolidation
+    // writes the L0 part alone
+    val pureRoot = tmpDir()
+    val pure = create(pureRoot)
+    Seq(0, 100).foreach { from =>
+      val s = padUntilConsolidated(pure, bucket = -1, idFrom = from)
+      assert(bucketedPart(s).isEmpty && parts(s).size == 1, s.manifests)
+      assertFreshReadEquals(pureRoot, s)
+    }
   }
 
-  test("chunked point prune equals the full-fold prune, incl. L0 files and trailing deltas") {
+  test("a bucketed append or any removal in the window rewrites the bucketed part") {
     val root = tmpDir()
     val t = create(root)
     var snap = t.currentSnapshot.get
-    val seed = (0 until 32).map(b => df(root, b, b)) :+ df(root, 777, -1) // an L0 spanning file
-    snap = t.commit(snap.copy(files = snap.files ++ seed))
-    (0 until Threshold).foreach { k =>
-      snap = t.commit(snap.copy(files = snap.files :+ df(root, 100 + k, k)))
-    }
-    // trailing deltas after consolidation: an add in bucket 5 and a remove in bucket 3
-    snap = t.commit(snap.copy(files = snap.files :+ df(root, 200, 5)))
-    snap = t.commit(snap.copy(files = snap.files.filterNot(_.bucket == 3)))
-    val full = t.snapshotAt(snap.version)
-    for (b <- Seq(0, 3, 5, 31)) {
-      val lazyFiles = t.planFilesChunked(snap.version, Set(b)).toSet
-      val fullFiles = t.planFiles(full, buckets = Some(Set(b))).toSet
-      assert(lazyFiles == fullFiles, s"bucket $b: $lazyFiles vs $fullFiles")
-    }
+    snap = t.commit(snap.copy(files = snap.files ++ (0 until 16).map(b => df(root, b, b))))
+    snap = padUntilConsolidated(t, bucket = -1, idFrom = 1000)
+    val b1 = bucketedPart(snap)
+    assert(b1.isDefined)
+
+    // one bucketed append among L0 appends
+    snap = t.commit(snap.copy(files = snap.files :+ df(root, 500, 7)))
+    snap = padUntilConsolidated(t, bucket = -1, idFrom = 2000)
+    val b2 = bucketedPart(snap)
+    assert(b2.isDefined && b2 != b1, "a bucketed append must rewrite the bucketed part")
+    assertFreshReadEquals(root, snap)
+
+    // one removal of a bucketed file among L0 appends: carrying the part
+    // over would resurrect the removed entry
+    val victim = snap.files.find(_.bucket == 3).get
+    snap = t.commit(snap.copy(files = snap.files.filterNot(_.path == victim.path)))
+    snap = padUntilConsolidated(t, bucket = -1, idFrom = 3000)
+    val b3 = bucketedPart(snap)
+    assert(b3.isDefined && b3 != b2, "a removal must rewrite the bucketed part")
+    assertFreshReadEquals(root, snap)
+    assert(!t.snapshotAt(snap.version).files.exists(_.path == victim.path))
+
+    // one removal of an L0 file: the rule rewrites on any removal
+    val l0Victim = snap.files.find(_.bucket < 0).get
+    snap = t.commit(snap.copy(files = snap.files.filterNot(_.path == l0Victim.path)))
+    snap = padUntilConsolidated(t, bucket = -1, idFrom = 4000)
+    assert(bucketedPart(snap).isDefined && bucketedPart(snap) != b3)
+    assertFreshReadEquals(root, snap)
   }
 
   test("superseded chunk files are GC'd once unreferenced; live ones survive expiry") {
@@ -136,15 +163,15 @@ class ManifestChunkSpec extends SparkSpec {
     (0 until Threshold).foreach { k =>
       snap = t.commit(snap.copy(files = snap.files :+ df(root, 100 + k, k)))
     }
-    val chunks1 = snap.manifests.filter(LakeTable.isChunkManifest)
+    val chunks1 = parts(snap)
     // churn everything — remove+re-add every file under a NEW path (the
     // compaction shape; DataFile entries are path-immutable, in-place stat
-    // mutation is not a real commit) → next consolidation rewrites all chunks
+    // mutation is not a real commit) → next consolidation rewrites all parts
     (0 to Threshold).foreach { k =>
       snap = t.commit(snap.copy(files = snap.files.map(f =>
         f.copy(path = f.path + s".r$k")) :+ df(root, 300 + k, k)))
     }
-    val chunks2 = snap.manifests.filter(LakeTable.isChunkManifest)
+    val chunks2 = parts(snap)
     assert((chunks1.toSet intersect chunks2.toSet).isEmpty)
     t.expireSnapshots(keepLast = 1)
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sessionState.newHadoopConf())
